@@ -122,9 +122,9 @@ object ProfR16 {
     }
 
     // incremental-probe decomposition — mode=probe (r17): a repeated
-    // probe of the SAME (delta, index) memo-hits the combined
-    // probe-build job (Dedup.probeMemo), so run1 − run2 isolates the
-    // eager probe-build cost from the lazy screen the noop materializes.
+    // probe of the SAME (delta, index) memo-hits the probe build's
+    // fetch jobs (Dedup.probeMemo), so run1 − run2 isolates the eager
+    // probe-build cost from the lazy screen the noop materializes.
     if (args.lift(1).contains("probe")) {
       val docs = graft.io.Tables.documents(spark, dir).select("doc_id", "text")
       t("warmup docs") { docs.foreach(_ => ()) }
@@ -140,50 +140,6 @@ object ProfR16 {
           noop(Dedup.incrementalAcceptIndexed(ix, batch, "doc_id", "text"))
         }
       }
-      // inlined replica of the combined probe-build job (same subplans
-      // from the PUBLIC index frames) — isolates the eager stats job
-      // from dIx kernels and the lazy screen
-      locally {
-        val ix2root = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(sys.props("java.io.tmpdir")), "prof_probe2_").toString
-        Dedup.writeIndex(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text", ix2root)
-        val ix2 = Dedup.readIndex(spark, ix2root)
-        val dIx = Dedup.buildIndex(batch, "doc_id", "text", ix2.bands, ix2.rows)
-        t("probe2 dIx kernels noop") { noop(dIx) }
-        val dIxC = dIx.localCheckpoint()
-        t("probe2 dIx localCheckpoint (done above)") { () }
-        (1 to 2).foreach { i =>
-          t(s"probe2 stats head (run$i)") {
-            val fpSurvivors = dIxC
-              .join(dIxC.groupBy("fp").agg(min(col("id")).as("__mid")), Seq("fp"))
-              .filter(col("id") === col("__mid"))
-              .join(broadcast(ix2.docs.select("fp")
-                .join(broadcast(dIxC.select("fp")), Seq("fp"), "left_semi")
-                .distinct()), Seq("fp"), "left_anti")
-            val deltaBk = fpSurvivors.select(col("id"), explode(col("bands")).as("bk"))
-              .groupBy("bk").agg(count(lit(1)).as("__delta_n"))
-            val bkLoads = deltaBk
-              .join(ix2.bucketStats
-                .join(broadcast(deltaBk.select("bk")), Seq("bk"), "left_semi")
-                .groupBy("bk").agg(sum("n").as("__idx_n")),
-                Seq("bk"), "left_outer")
-              .select(col("bk"),
-                coalesce(col("__idx_n"), lit(0L)).as("__idx_n"),
-                col("__delta_n"))
-              .withColumn("__tot", col("__idx_n") + col("__delta_n"))
-            bkLoads.filter(col("__tot") > 100)
-              .agg(count(lit(1)).as("__nhot"),
-                sum(col("__delta_n").cast("double") * col("__tot")).as("__load"))
-              .crossJoin(ix2.docs.select("fp")
-                .join(broadcast(dIxC.select("fp")), Seq("fp"), "left_semi")
-                .agg(count(lit(1)).as("__fp_ix")))
-              .crossJoin(dIxC.agg((count(lit(1)) -
-                count_distinct(col("fp"))).as("__fp_dd")))
-              .head()
-          }
-        }
-      }
-
       // emb twin (no eager probe job — fully lazy screen)
       import graft.sim.EmbIndex
       val emb = graft.io.Tables.embeddings(spark, dir).select("vec_id", "embedding")

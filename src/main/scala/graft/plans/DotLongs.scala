@@ -105,7 +105,8 @@ case class DotLongs(left: Expression, right: Expression)
 /** [[DotLongs]]'s squared-L2 sibling: Σ (aᵢ−bᵢ)² over two ARRAY<BIGINT>
   * columns — the exact integer distance kernel of the kmeans/IVF/PQ
   * family, fused into one codegen loop (same motivation, null and
-  * ANSI-overflow contracts as [[DotLongs]]). */
+  * ANSI-overflow contracts as [[DotLongs]], including its one
+  * null-before-overflow divergence from the declarative fold). */
 case class L2SqLongs(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -28,13 +28,15 @@ import org.apache.spark.storage.StorageLevel
   * unpersists and drops the least-recently-used entry of that context,
   * so a driver spawning short-lived sessions in a loop plateaus at a
   * bounded persisted footprint instead of growing until application
-  * end.
+  * end. A memo whose values are large driver-held data (not persisted
+  * frames) passes a smaller `maxEntries`.
   *
   * `build` must only CONSTRUCT the plan (all Spark transformations are
   * lazy); the coarse lock therefore serializes only driver-side plan
   * assembly, never job execution.
   */
-final class PlanMemo[P, V](persistables: V => Seq[DataFrame]) {
+final class PlanMemo[P, V](persistables: V => Seq[DataFrame],
+    maxEntries: Int = PlanMemo.MaxPerContext) {
 
   private val map =
     new ConcurrentHashMap[(SparkSession, Int, P), List[(LogicalPlan, V)]]()
@@ -82,11 +84,11 @@ final class PlanMemo[P, V](persistables: V => Seq[DataFrame]) {
     }
 
   /** Evict least-recently-used entries of `ctx` until at most
-    * [[PlanMemo.MaxPerContext]] remain (never the just-inserted
+    * `maxEntries` remain (never the just-inserted
     * `keep`). Caller holds the lock. */
   private def capContext(ctx: org.apache.spark.SparkContext,
       keep: (SparkSession, Int, P)): Unit = {
-    var excess = lru.count(_._1.sparkContext eq ctx) - PlanMemo.MaxPerContext
+    var excess = lru.count(_._1.sparkContext eq ctx) - maxEntries
     while (excess > 0) {
       // LinkedHashSet iterates oldest-first
       lru.find(k => (k._1.sparkContext eq ctx) && k != keep) match {

@@ -132,8 +132,12 @@ object EmbIndex {
   def readIndex(s: SparkSession, root: String): EmbeddingIndex = {
     val mr = graft.io.ModelGens.liveRoot(root)
     val (bits, clamped, guard, _) = readManifest(s, mr)
-    val vecs = s.read.parquet(vecsLive(mr))
-    val post = s.read.parquet(graft.text.Dedup.livePath(mr, "post").toString)
+    // footer-schema opens: no inference job per artifact
+    // ([[graft.io.FooterSchema]])
+    def open(dir: String) = graft.io.FooterSchema.read(s, dir)
+    def live(part: String) = graft.text.Dedup.livePath(mr, part).toString
+    val vecs = open(vecsLive(mr))
+    val post = open(live("post"))
     val (v, p) =
       if (graft.text.Dedup.artifactExists(mr, "tomb")) {
         // tombstone-aware open: erased vectors are anti-joined out of
@@ -145,13 +149,11 @@ object EmbIndex {
         // UNFILTERED until compaction: occupancy that still counts
         // erased members only over-guards (drops hot buckets sooner) —
         // the conservative direction.
-        val tomb = broadcast(s.read.parquet(tombLive(mr)).select("vec_id"))
+        val tomb = broadcast(open(tombLive(mr)).select("vec_id"))
         (vecs.join(tomb, Seq("vec_id"), "left_anti"),
           post.join(tomb, Seq("vec_id"), "left_anti"))
       } else (vecs, post)
-    EmbeddingIndex(v, p,
-      s.read.parquet(graft.text.Dedup.livePath(mr, "bk").toString),
-      bits, clamped, guard)
+    EmbeddingIndex(v, p, open(live("bk")), bits, clamped, guard)
   }
 
   private def tombLive(root: String): String =
@@ -431,20 +433,23 @@ object EmbIndex {
       // post/bk are independent derived appends; only `vecs` (the
       // record of truth) must land last — overlap them (guide §2.6;
       // same recurring-path rationale as graft.text.Dedup.appendIndex)
-      import scala.concurrent.{Await, Future}
+      // read-backs carry the rows' own schema (no inference job each)
+      def snapshot = s.read.schema(ixRows.schema).parquet(sd)
+      import scala.concurrent.{Await, Future, blocking}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val fPost = Future {
-        indexPostings(s.read.parquet(sd)).coalesce(np)
+      // blocking{}: blocking Spark writes on the global pool
+      val fPost = Future { blocking {
+        indexPostings(snapshot).coalesce(np)
           .write.mode("append").parquet(postLive)
-      }
-      val fBk = Future {
-        indexBucketStats(indexPostings(s.read.parquet(sd)))
+      } }
+      val fBk = Future { blocking {
+        indexBucketStats(indexPostings(snapshot))
           .write.mode("append").parquet(bkLive)
-      }
+      } }
       Await.result(fPost, Duration.Inf)
       Await.result(fBk, Duration.Inf)
-      s.read.parquet(sd).coalesce(np).write.mode("append").parquet(vLive)
+      snapshot.coalesce(np).write.mode("append").parquet(vLive)
       s.catalog.refreshByPath(postLive)
       s.catalog.refreshByPath(bkLive)
       s.catalog.refreshByPath(vLive)
@@ -536,8 +541,8 @@ object EmbIndex {
   /** The delta's own index rows feed several plan branches (probe,
     * reference union, both verify sides, the final anti-join) —
     * memoized per (session, delta plan, width) and persisted so the
-    * quantize/band kernels evaluate once per delta (the text path's
-    * deltaIxMemo shape; payload is one row per DELTA vector). */
+    * quantize/band kernels evaluate once per delta (payload is one row
+    * per DELTA vector). */
   private val deltaMemo =
     new graft.plans.PlanMemo[Int, DataFrame](Seq(_))
 

@@ -1,7 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
 /** Near-duplicate detection for training-data pipelines [EXT]
   * (BASELINE.json north_star "dedup"). Three families:
@@ -553,21 +554,26 @@ object Dedup {
       // whose wall is mostly job latency, so overlapping them shaves a
       // fixed cost from EVERY append — the per-micro-batch recurring
       // path of stream_index_ingest.
-      import scala.concurrent.{Await, Future}
+      // The read-backs carry the rows' own schema: inferring it from
+      // the scratch footer would cost a Spark job per read.
+      def snapshot = s.read.schema(ixRows.schema).parquet(sd)
+      import scala.concurrent.{Await, Future, blocking}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val fPost = Future {
-        indexPostings(s.read.parquet(sd)).coalesce(np)
+      // blocking{}: each body is a blocking Spark write on the global
+      // pool — marked so the pool adds a thread instead of starving
+      val fPost = Future { blocking {
+        indexPostings(snapshot).coalesce(np)
           .write.mode("append").parquet(livePath(root, "post").toString)
-      }
-      val fBk = Future {
-        indexBucketStats(indexPostings(s.read.parquet(sd)))
+      } }
+      val fBk = Future { blocking {
+        indexBucketStats(indexPostings(snapshot))
           .write.mode("append").parquet(livePath(root, "bk").toString)
-      }
+      } }
       Await.result(fPost, Duration.Inf)
       Await.result(fBk, Duration.Inf)
       val ixL = ixLive(root)
-      s.read.parquet(sd).coalesce(np).write.mode("append").parquet(ixL)
+      snapshot.coalesce(np).write.mode("append").parquet(ixL)
       s.catalog.refreshByPath(ixL)
     } finally fs.delete(scratch, true)
   }
@@ -582,7 +588,11 @@ object Dedup {
     // handle hash-identical (stale-reader contract) instead of mixing
     // widths
     val root = graft.io.ModelGens.liveRoot(root0)
-    val ixRaw = s.read.parquet(ixLive(root))
+    // every artifact opens with its own footer's schema, read on the
+    // driver ([[graft.io.FooterSchema]]: no inference job per open)
+    def open(part: String) =
+      graft.io.FooterSchema.read(s, livePath(root, part).toString)
+    val ixRaw = open("ix")
     // pre-fp artifact compat: indexes written before the fingerprint
     // column derive it in-plan from the persisted shingle sets (same
     // value by construction — [[shingleFp]] is a pure function of
@@ -590,7 +600,7 @@ object Dedup {
     val ix =
       if (ixRaw.columns.contains("fp")) ixRaw
       else ixRaw.withColumn("fp", shingleFp(col("sh")))
-    val post = s.read.parquet(livePath(root, "post").toString)
+    val post = open("post")
     val (i, p) =
       if (artifactExists(root, "tomb")) {
         // tombstone-aware open (the embedding index's erasure
@@ -598,14 +608,12 @@ object Dedup {
         // membership record AND the probe side from the erase call
         // on; physical purge happens at the next compactIndexStats.
         // The bk sidecar stays unfiltered until then — conservative.
-        val tomb = broadcast(
-          s.read.parquet(livePath(root, "tomb").toString).select("id"))
+        val tomb = broadcast(open("tomb").select("id"))
         (ix.join(tomb, Seq("id"), "left_anti"),
           post.join(tomb, Seq("id"), "left_anti"))
       } else (ix, post)
     val (bands, rows) = manifestWidth(s, root)
-    DedupIndex(i, p, s.read.parquet(livePath(root, "bk").toString),
-      bands, rows, Some(root))
+    DedupIndex(i, p, open("bk"), bands, rows, Some(root))
   }
 
   /** Content identity of a persisted index root for the probe-verdict
@@ -739,15 +747,16 @@ object Dedup {
     }
   }
 
-  /** Detects and repairs a TORN [[appendIndex]]: the three per-delta
-    * appends are sequential (postings → bucket-stats → `ix` last), so
-    * a crash mid-append leaves DERIVED rows for docs that never
-    * reached the `ix` membership record (or, after a retry, duplicate
-    * partial rows for docs that did). Neither is a correctness hole —
-    * orphan postings fail the verify join, stats inflation is
-    * conservative (see [[appendIndex]]'s crash contract) — but both
-    * waste probe work, so this is the maintenance op that restores the
-    * invariant.
+  /** Detects and repairs a TORN [[appendIndex]]: of the three
+    * per-delta appends, the two derived ones (postings, bucket-stats)
+    * run concurrently and `ix` lands last, after both, so a crash
+    * mid-append leaves DERIVED rows — either or both — for docs that
+    * never reached the `ix` membership record (or, after a retry,
+    * duplicate partial rows for docs that did). Neither is a
+    * correctness hole — orphan postings fail the verify join, stats
+    * inflation is conservative (see [[appendIndex]]'s crash
+    * contract) — but both waste probe work, so this is the
+    * maintenance op that restores the invariant.
     *
     * Detection is exact and cheap: `post` must hold exactly
     * [[Bands]] rows per DISTINCT `ix` doc — a full-outer count
@@ -940,7 +949,7 @@ object Dedup {
     * cost-routing knee, not a recall cutoff — the r13 100×-corpus
     * recall boundary (hot buckets dropped → near-dup replicas
     * over-accepted vs the exact oracle) is structurally closed. A
-    * one-aggregation LOAD router (estimated direct-pairing pairs over
+    * driver-side LOAD router (estimated direct-pairing pairs over
     * hot buckets vs [[CascadeBudget]]) assembles the cascade only
     * where direct pairing would explode, so the common-density probe
     * keeps the direct plan's stage count (graft.DedupIncAb
@@ -952,39 +961,75 @@ object Dedup {
     * read zero times, so the O(|corpus|) re-shingle pass of a naive
     * respelling never recurs, and the per-doc band arrays are never
     * re-exploded or re-grouped at probe time (the candidate join reads
-    * the persisted postings; hot-bucket stats combine the persisted
-    * |buckets|-row occupancy sidecar with the delta's own counts — the
-    * only probe-time aggregation over index-derived rows is that
-    * |buckets|-row sum). Candidate work scales with |delta| × bucket
-    * occupancy, not |corpus|². The delta-side
-    * kernels (minhash signature, shingles) feed the plan branches
-    * (fp screen, probe, reference union, verify sides, final
-    * anti-join), so the delta's own index frame is memoized per
-    * (session, delta plan) — a session-persisted [[buildIndex]]
-    * projection the branches all read, making the expensive kernels
-    * evaluate ONCE per delta (the same PlanMemo machinery as the
-    * verified-pair stream; payload is one row per DELTA doc — small by
-    * definition).
+    * the persisted postings; hot-bucket stats read only the persisted
+    * occupancy rows of the delta's own buckets). Candidate work scales
+    * with |delta| × bucket occupancy, not |corpus|². The delta's own
+    * index rows (the minhash/shingle/md5 kernels' output, one row per
+    * DELTA doc) are collected to the driver ONCE, so a delta must fit
+    * in driver memory (its rows are the verify join's broadcast side
+    * too), and every plan branch (fp screen, probe, reference union,
+    * verify sides, final anti-join) reads them as a local relation:
+    * the kernels evaluate once per delta, the delta-only scalars need
+    * no Spark job, and no cached frame has to be materialized and
+    * re-scanned per branch. Memoized per (session,
+    * delta plan, geometry), so a repeated screen of the same delta
+    * (a retry, an A/B leg) skips even the collect; being driver heap,
+    * the memo keeps only the [[DeltaIxMemoEntries]] most recent deltas.
     */
-  private val deltaIxMemo =
-    new graft.plans.PlanMemo[(String, String, Int, Int), DataFrame](Seq(_))
+  private val DeltaIxMemoEntries = 4
+  private val deltaIxMemo = new graft.plans.PlanMemo[
+    (String, String, Int, Int), DeltaIx](_ => Seq(), DeltaIxMemoEntries)
 
-  /** Probe-verdict memo: the combined probe-build action's scalar row
-    * (router load, hot count, fp applicability counts) plus the
-    * checkpointed fp-rejection ledger, keyed by (delta plan, probe
-    * params, index CONTENT stamp). Both are pure functions of index
-    * content + delta content, and the stamp ([[contentStamp]])
-    * invalidates on any artifact mutation — append, erase, compact,
-    * rebuild — so a repeated probe of an unchanged index by the same
-    * delta plan (retries, multi-pass pipelines, back-to-back bench
-    * runs) skips every eager probe-build job instead of re-deriving
-    * scalars the filesystem proves unchanged. Values are driver-held
-    * scalars + an already-checkpointed bounded id list — no persisted
-    * frames to manage ([[graft.plans.PlanMemo]] peek/insert idiom:
-    * the head() job runs OUTSIDE the memo lock). */
+  /** One delta doc's index row, as the probe build reads it: the row
+    * itself, its id in Spark's internal form (compared under
+    * [[DeltaIx.idOrd]]), its fp, shingle set and band keys. */
+  private final case class DeltaDoc(row: Row, id: Any, idc: Any, fp: String,
+      sh: Seq[String], bands: Seq[Row]) {
+    def bks: Seq[(Int, Long)] = bands.map(b => (b.getInt(0), b.getLong(1)))
+  }
+
+  /** A delta's [[buildIndex]] rows, collected once: as docs for the
+    * driver-side probe build, and as local relations for the plan. */
+  private final class DeltaIx(s: org.apache.spark.sql.SparkSession,
+      val schema: StructType, rows: Array[Row]) {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst
+    /** Spark's own ordering of the id type: every driver-side id
+      * comparison (min choice, ledger membership) matches SQL's. */
+    val idOrd: Ordering[Any] = org.apache.spark.sql.catalyst.util.TypeUtils
+      .getInterpretedOrdering(schema("id").dataType)
+    val docs: IndexedSeq[DeltaDoc] = rows.toIndexedSeq.map { r =>
+      val id = r.getAs[Any]("id")
+      DeltaDoc(r, id, convertToCatalyst(id), r.getAs[String]("fp"),
+        r.getSeq[String](r.fieldIndex("sh")),
+        r.getSeq[Row](r.fieldIndex("bands")))
+    }
+    /** Rows on the driver as a DataFrame — a local relation, whose
+      * filters and projections fold on the driver. */
+    def local(rs: Seq[Row], sch: StructType = schema): DataFrame =
+      s.createDataFrame(java.util.Arrays.asList(rs: _*), sch)
+    val frame: DataFrame = local(rows.toSeq)
+  }
+
+  /** What a probe build decides, all of it driver-held: the router's
+    * hot buckets (combined occupancy > maxBucket; as (band, hash)) and
+    * its estimated direct-pairing load (+∞ when no bucket is hot), and
+    * the exact-replica ledger — the delta ids the fp screen rejects
+    * (never null: a null id matches nothing in the anti-joins). */
+  private final case class ProbeVerdict(hot: Seq[(Int, Long)],
+      load: Double, ledger: Seq[Any])
+
+  /** Probe-verdict memo, keyed by (delta plan, probe params, index
+    * CONTENT stamp). The verdict is a pure function of index content +
+    * delta content, and the stamp ([[contentStamp]]) invalidates on any
+    * artifact mutation — append, erase, compact, rebuild — so a
+    * repeated probe of an unchanged index by the same delta plan
+    * (retries, multi-pass pipelines, back-to-back bench runs) skips the
+    * probe-build jobs instead of re-deriving what the filesystem proves
+    * unchanged. Values are driver scalars and id lists — no persisted
+    * frames to manage ([[graft.plans.PlanMemo]] peek/insert idiom: the
+    * fetch jobs run OUTSIDE the memo lock). */
   private val probeMemo = new graft.plans.PlanMemo[
-    (String, String, Int, Int, Int, Long, String),
-    (org.apache.spark.sql.Row, Option[DataFrame])](_ => Seq())
+    (String, String, Int, Int, Int, Long, String), ProbeVerdict](_ => Seq())
 
   /** OBSERVABILITY ONLY (A/B mains, specs): the last probe build's
     * router verdict — (picked the cascade?, estimated direct-pairing
@@ -1001,7 +1046,9 @@ object Dedup {
       cascadeBudget: Long = CascadeBudget): DataFrame = {
     val (_, rejected) = screenIndexed(index, delta, idCol, textCol,
       threshold, maxBucket, cascadeBudget)
-    delta.join(rejected.select(col("id").as(idCol)), Seq(idCol), "left_anti")
+    // the reject set is ≤ |delta| ids (duplicates included): broadcast
+    delta.join(broadcast(rejected.select(col("id").as(idCol))), Seq(idCol),
+      "left_anti")
   }
 
   /** [[incrementalAcceptIndexed]] fused with [[appendIndex]] — the
@@ -1012,9 +1059,9 @@ object Dedup {
     * rows' index entries ≡ the screen's dIx anti-joined by the reject
     * set — bit-identical to `appendIndex(root, accepted, …)`, minus
     * re-running the shingle/minhash/md5/band kernels over the accepted
-    * text a second time (guide §1.2 per-task work; the dIx frame is
-    * already session-persisted by the probe). The index handle must be
-    * the live generation of `root0` — the readIndex-then-append shape
+    * text a second time (guide §1.2 per-task work; the dIx rows are
+    * already driver-held by the probe). The index handle must be the
+    * live generation of `root0` — the readIndex-then-append shape
     * every ingest caller already has. */
   def appendAcceptedIndexed(root0: String, index: DedupIndex,
       delta: DataFrame, idCol: String, textCol: String,
@@ -1023,31 +1070,36 @@ object Dedup {
     val (dIx, rejected) = screenIndexed(index, delta, idCol, textCol,
       threshold, maxBucket, cascadeBudget)
     appendIndexRows(root0,
-      dIx.join(rejected.select("id"), Seq("id"), "left_anti"))
+      dIx.join(broadcast(rejected.select("id")), Seq("id"), "left_anti"))
   }
 
-  /** The shared screen: (memoized delta index frame, rejected ids
-    * — column `id`, duplicates possible; every consumer anti-joins). */
+  /** The shared screen: (the delta's index rows as a local relation,
+    * rejected ids — column `id`, duplicates possible; every consumer
+    * anti-joins). */
   private def screenIndexed(index: DedupIndex, delta: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       maxBucket: Int,
       cascadeBudget: Long): (DataFrame, DataFrame) = {
-    graft.plans.GraftFunctions.register(delta.sparkSession)
+    val s = delta.sparkSession
+    graft.plans.GraftFunctions.register(s)
     // the delta signs at the INDEX GENERATION's frozen band geometry
     // (manifest-resolved in readIndex) — band keys from two widths
     // can never meet in a candidate join
-    val dIx = deltaIxMemo.getOrCompute(delta,
-        (idCol, textCol, index.bands, index.rows)) {
-      buildIndex(delta, idCol, textCol, index.bands, index.rows)
+    val ixKey = (idCol, textCol, index.bands, index.rows)
+    val dx = deltaIxMemo.peek(delta, ixKey).getOrElse {
+      val built = buildIndex(delta, idCol, textCol, index.bands, index.rows)
+      deltaIxMemo.getOrCompute(delta, ixKey)(
+        new DeltaIx(s, built.schema, built.collect()))
     }
+    val dIx = dx.frame
     // ── layer 0: exact-replica screen ────────────────────────────────
     // A delta doc whose shingle SET equals any indexed doc's — or a
     // lower-id delta doc's — is an exact Jaccard-1.0 dup: rejected
-    // before any banded work by an equi-join on the persisted
-    // fingerprint, VERIFIED by set equality on the (few) fp-matched
-    // pairs. The verification is what makes the screen safe to let
-    // DECIDE rejection: md5-over-concat is not injective in general
-    // (an md5 collision; interior U+001F bytes — under the CURRENT
+    // before any banded work by a match on the persisted fingerprint,
+    // VERIFIED by set equality on the (few) fp-matched pairs. The
+    // verification is what makes the screen safe to let DECIDE
+    // rejection: md5-over-concat is not injective in general (an md5
+    // collision; interior U+001F bytes — under the CURRENT
     // 3-gram/whole-text shingler a separator ambiguity happens to be
     // structurally unrealizable, but that proof is grammar-dependent
     // and would rot silently under a tokenizer change), and an
@@ -1062,90 +1114,32 @@ object Dedup {
     // of the probe. This is what keeps a 100×-replica corpus (crawl
     // mirror spam — the dominant duplication mode at 100 TB) from
     // saturating the LSH buckets in the first place.
-    // The rejection ledger below is a LAZY localCheckpoint: a bounded
-    // id-list (≤ |delta| longs) that several plan branches consume,
-    // so sharing the computed RDD replaces a multiplicative subtree
-    // copy-out (the naive lazy spelling duplicated the screen+verify
-    // subplans ~20× and planning cost exploded) with one computation
-    // per probe — and gives the probe SNAPSHOT semantics against
-    // subsequent index appends, which is exactly what appendIndex's
-    // lineage-cut contract wants. Its two branches (vs-index and
-    // intra-delta) enter the plan ONLY when the combined probe-build
-    // action (below) counted a possible match for them — on a corpus
-    // with no exact replicas the ledger is absent entirely and the
-    // probe side is dIx unfiltered.
-    // (duplicate ids are fine throughout — every consumer is an
-    // anti-join or a union that ends in one, so no dedup shuffles)
-    // vs-index: the DELTA side broadcasts (a delta is small by
-    // definition — the arriving micro-batch), so the index streams
-    // through a hash probe on fp with NO shuffle; `sh` persists
-    // SORTED ([[buildIndex]]), so set equality is a direct array
-    // compare evaluated only on fp-matched rows — zero probe-time
-    // sorting.
-    // hot-bucket stats: the index side contributes its PRE-AGGREGATED
-    // |buckets|-row occupancy sidecar (possibly several partial rows
-    // per bucket after appends) RESTRICTED to the buckets the delta
-    // actually probes — a bucket with no delta posting can never
-    // produce a candidate pair (candidates arise from probeBuckets ⋈
-    // reference, and probeBuckets only holds delta postings), so it
-    // is irrelevant to the router's load, to `hot`, and to every
-    // cascade stage (hotMins/candS2 all join through delta-present
-    // buckets). The restriction is what makes the router's
-    // aggregation DELTA-SIZED: the sidecar is |buckets| ~ corpus-
-    // scale rows at 100 TB, and the semi-join against the broadcast
-    // delta-bucket list prunes it to |delta postings| distinct
-    // buckets before any aggregation — the r14 spelling full-outer-
-    // joined and re-aggregated the whole sidecar per probe.
-    // Per-bucket load estimate from the POST-SCREEN delta: the direct
-    // path's pairing cost is |dProbe ∩ bk| × occupancy(bk), and on a
-    // verbatim-replica mass (the duplication mode the cascade exists
-    // for) the fp screen collapses the delta to its few genuinely
-    // novel docs BEFORE any banded work — pricing the unscreened
-    // counts overshot ~3× there (r15 spam1000x: estimate 1.81e9 →
-    // cascade 17.5 s where the screened direct plan cost 6.0 s). The
-    // screen is priced at FP level inside the same combined job (one
-    // representative per distinct delta fp, minus fps the index
-    // already holds — the sh-equality verification that makes the
-    // real screen SAFE is irrelevant to a cost estimate, and the
-    // md5-collision gap between the two is no wider than the estimate
-    // itself), so the router still costs zero extra driver jobs: the
-    // index-side fp scan below feeds both the applicability count and
-    // this semi-join, and every new frame here is delta-bounded.
-    // `hot` inherits the screened counts too — dProbe's buckets are a
-    // subset of the survivors' buckets by construction, so a bucket
-    // only screened docs touch can no longer be assembled into the
-    // cascade it would never meet.
-    val fpSurvivors = dIx
-      .join(dIx.groupBy("fp").agg(min(col("id")).as("__mid")), Seq("fp"))
-      .filter(col("id") === col("__mid"))
-      .join(broadcast(index.docs.select("fp")
-        .join(broadcast(dIx.select("fp")), Seq("fp"), "left_semi")
-        .distinct()), Seq("fp"), "left_anti")
-    val deltaBk = fpSurvivors.select(col("id"), explode(col("bands")).as("bk"))
-      .groupBy("bk").agg(count(lit(1)).as("__delta_n"))
-    val bkLoads = deltaBk
-      .join(index.bucketStats
-        .join(broadcast(deltaBk.select("bk")), Seq("bk"), "left_semi")
-        .groupBy("bk").agg(sum("n").as("__idx_n")),
-        Seq("bk"), "left_outer")
-      .select(col("bk"),
-        coalesce(col("__idx_n"), lit(0L)).as("__idx_n"),
-        col("__delta_n"))
-      .withColumn("__tot", col("__idx_n") + col("__delta_n"))
-    // ── COMBINED PROBE-BUILD ACTION ──────────────────────────────────
-    // ONE driver-blocking job computes every scalar the probe build
-    // needs: the COST ROUTER's hot-bucket load AND the fp screen's
-    // applicability counts (does any index fp match a delta fp; does
-    // any fp repeat inside the delta). r14 ran the router as its own
-    // .head() and always planted both screen branches in the lazy
-    // plan — on a corpus with no exact replicas (the common case) the
-    // vs-index branch then paid a full scan of the index's `sh`
-    // column, and the intra-delta branch a groupBy+join over the
-    // delta, for provably-zero rows. The crossJoin of three 1-row
-    // aggregates runs all subtrees in one job; the counts then GATE
-    // the branches out of the plan when they cannot match — pure
-    // plan pruning: a branch is dropped only when this very job
-    // proved it produces zero rows.
+    //
+    // ── PROBE BUILD: delta-side scalars on the driver, index-side rows
+    // fetched by key ──────────────────────────────────────────────────
+    // Everything the plan assembly needs is decided here, before the
+    // lazy plan is built: the COST ROUTER's hot buckets and load, and
+    // the fp screen's rejection ledger. Delta-only quantities (fp
+    // repeats inside the delta, the fp survivors' per-bucket counts)
+    // come from the driver-held delta rows with no job at all. The
+    // index contributes through ONE fetch job: the `fp` values of
+    // indexed docs whose fp equals some delta fp (a key test on the
+    // 16-byte fp column alone — the `sh` payload is never read unless
+    // a match exists), unioned with the occupancy-sidecar rows of the
+    // buckets the delta probes (a bucket with no delta posting can
+    // never produce a candidate pair, so it is irrelevant to the router
+    // and to every cascade stage; the sidecar is |buckets| ~
+    // corpus-scale rows at 100 TB, and the key test keeps what reaches
+    // the driver delta-sized — partial rows per bucket are summed
+    // there). Only when an fp matched does a SECOND small job read `sh`
+    // to verify which matches are equal sets (`sh` persists SORTED —
+    // [[buildIndex]] — so set equality is array equality). No
+    // delta-side key set enters a plan as a literal list, so plan size
+    // does not grow with the delta: the fetches test keys against
+    // broadcast variables (shipped with the job's tasks — a broadcast
+    // join of a local relation would cost a Spark job of its own per
+    // key set), and the plan branches read the ledger and the hot
+    // buckets as local relations built on the driver.
     //   router: estimated direct-pairing load over hot buckets,
     // Σ |delta∩bk| · |occupancy(bk)| — below [[CascadeBudget]]
     // candidate pairs, the direct complete pairing is cheaper than
@@ -1157,78 +1151,61 @@ object Dedup {
     // unaffected either way: the router picks between two plans with
     // identical semantics (the candidate set is verified by exact
     // Jaccard in both), so the budget is a pure cost knob. The load
-    // sums DOUBLES: the long product wraps at exactly the ~10⁹-pair
+    // sums DOUBLES: a long product wraps at exactly the ~10⁹-pair
     // masses the cascade targets, and a wrapped-negative load would
     // route the heaviest probes to direct pairing — the unsafe
     // direction; the double sum is monotone and saturates to +Inf,
     // which compares > budget → cascade, the safe direction.
-    //   fp-idx count: a left-semi on the index's 16-byte fp column
-    // alone — the `sh` payload is never touched unless a match exists.
-    // Both the scalar row and the gated ledger are memoized per
-    // (delta plan, params, index content stamp) — see [[probeMemo]]:
-    // a repeated probe of an unchanged index re-plans in milliseconds
-    // instead of re-running the probe-build job chain.
-    // the stamp is computed NOW, not at readIndex time: the handle's
-    // frames re-list the live dirs on every action (refreshByPath
-    // rides each append), so the memo key must describe the same
-    // filesystem moment the probe will scan — a readIndex-frozen
-    // stamp would memo-hit pre-append scalars against post-append
-    // frames when a handle is reused across an append
+    //   The load is priced from the POST-SCREEN delta: on a
+    // verbatim-replica mass the fp screen collapses the delta to its
+    // few genuinely novel docs before any banded work — pricing the
+    // unscreened counts overshot ~3× there (r15 spam1000x: estimate
+    // 1.81e9 → cascade 17.5 s where the screened direct plan cost
+    // 6.0 s). It is priced at FP level (one representative per
+    // distinct delta fp, minus fps the index already holds — the
+    // sh-equality verification that makes the real screen SAFE is
+    // irrelevant to a cost estimate), so `hot` inherits the screened
+    // counts too.
+    //   The verdict is memoized per (delta plan, params, index content
+    // stamp) — see [[probeMemo]]. The stamp is computed NOW, not at
+    // readIndex time: the handle's frames re-list the live dirs on
+    // every action (refreshByPath rides each append), so the memo key
+    // must describe the same filesystem moment the probe will scan — a
+    // readIndex-frozen stamp would memo-hit pre-append scalars against
+    // post-append frames when a handle is reused across an append.
     val memoKey = index.root.map(rt =>
       (idCol, textCol, index.bands, index.rows, maxBucket,
         cascadeBudget, contentStamp(rt)))
-    val (probeStats, fpRejected) = memoKey
+    val verdict = memoKey
       .flatMap(k => probeMemo.peek(delta, k))
       .getOrElse {
-        val stats = bkLoads.filter(col("__tot") > maxBucket)
-          .agg(count(lit(1)).as("__nhot"),
-            sum(col("__delta_n").cast("double") * col("__tot"))
-              .as("__load"))
-          .crossJoin(index.docs.select("fp")
-            .join(broadcast(dIx.select("fp")), Seq("fp"), "left_semi")
-            .agg(count(lit(1)).as("__fp_ix")))
-          .crossJoin(dIx.agg((count(lit(1)) -
-            count_distinct(col("fp"))).as("__fp_dd")))
-          .head()
-        val anyFpIdx = stats.getLong(2) > 0
-        val anyFpDelta = stats.getLong(3) > 0
-        val fpVsIndex = index.docs
-          .select(col("fp"), col("sh").as("__sh_r"))
-          .join(broadcast(dIx.select(col("id"), col("fp"),
-            col("sh").as("__sh_d"))), Seq("fp"))
-          .filter(col("__sh_r") === col("__sh_d"))
-          .select(col("id"))
-        val fpIntraDelta = dIx
-          .select(col("id"), col("fp"), col("sh").as("__sh_d"))
-          .join(dIx.groupBy("fp").agg(min(struct(col("id"),
-            col("sh").as("s"))).as("__m")), "fp")
-          .filter(col("id") > col("__m.id") &&
-            col("__sh_d") === col("__m.s"))
-          .select(col("id"))
-        val ledger = ((if (anyFpIdx) Seq(fpVsIndex) else Nil) ++
-            (if (anyFpDelta) Seq(fpIntraDelta) else Nil))
-          .reduceOption(_ unionByName _)
-          .map(_.localCheckpoint(false))
-        val v = (stats, ledger)
+        val v = probeVerdict(index, dx, maxBucket)
         memoKey.foreach(k => probeMemo.getOrCompute(delta, k)(v))
         v
       }
-    val loadEst =
-      if (probeStats.isNullAt(1)) Double.PositiveInfinity
-      else probeStats.getDouble(1)
-    val useCascade = probeStats.getLong(0) > 0 &&
-      !(loadEst <= cascadeBudget.toDouble)
-    lastRouterDecision = Some((useCascade, loadEst))
-    val dProbe = fpRejected.fold(dIx)(r => dIx.join(r, Seq("id"), "left_anti"))
-    def probeBuckets = dProbe.select(col("id"), explode(col("bands")).as("bk"))
-    // `hot` is assembled ONLY when the router picked the cascade: a
-    // lazy localCheckpoint still compiles to an RDD immediately, and
-    // under AQE that compilation MATERIALIZES the plan's intermediate
-    // stages (AdaptiveSparkPlanExec resolves its final plan eagerly) —
-    // an unconditional ledger charged every direct-route probe ~1 s
-    // for a bucket list nothing on that route reads.
-    lazy val hot = bkLoads.filter(col("__tot") > maxBucket).select("bk")
-      .localCheckpoint(false)
+    val useCascade = verdict.hot.nonEmpty &&
+      !(verdict.load <= cascadeBudget.toDouble)
+    lastRouterDecision = Some((useCascade, verdict.load))
+    // screened-out docs leave BOTH probe sides. Ledger membership is
+    // decided on the driver, by id under Spark's ordering of the id
+    // type — the anti-join-by-id semantics, null ids never matching.
+    val ledger = scala.collection.immutable.TreeSet.from(
+      verdict.ledger.map(
+        org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst))(
+      dx.idOrd)
+    def screened(d: DeltaDoc): Boolean = d.id != null && ledger(d.idc)
+    val probeDocs = dx.docs.filterNot(screened)
+    val dProbe = if (ledger.isEmpty) dIx else dx.local(probeDocs.map(_.row))
+    // the probe side's (id, bk) postings, built on the driver with the
+    // router's verdict per bucket (`hot`: combined occupancy >
+    // maxBucket and the cascade picked) — a local relation
+    val bkField = StructField("bk", index.postings.schema("bk").dataType)
+    val hotKeys = verdict.hot.toSet
+    val probeBuckets = dx.local(
+      probeDocs.flatMap(d => d.bands.map(b => Row(d.id, b,
+        useCascade && hotKeys((b.getInt(0), b.getLong(1)))))),
+      StructType(Seq(dx.schema("id"), bkField,
+        StructField("hot", BooleanType, nullable = false))))
     // reference side = the persisted postings + the screened delta's
     // own (for intra-delta dups, lower id wins)
     val refBk = index.postings.select(col("id").as("id_ref"), col("bk"),
@@ -1236,24 +1213,30 @@ object Dedup {
       .unionByName(probeBuckets.select(col("id").as("id_ref"), col("bk"),
         lit(false).as("ref_is_base")))
     // cold buckets (≤ maxBucket combined occupancy): direct pairing,
-    // the common case — identical plan to the pre-cascade probe.
-    val refCold =
-      if (useCascade) refBk.join(hot, Seq("bk"), "left_anti") else refBk
-    val candCold = probeBuckets.join(refCold, "bk")
+    // the common case — identical plan to the pre-cascade probe. A
+    // pair shares its bucket, so dropping hot buckets from the probe
+    // side drops them from the pairing.
+    // Candidate pairs stay UN-deduplicated (a near-dup pair sharing
+    // several bands appears once per shared band): their only consumer
+    // is the verify below, whose output only feeds anti-joins, so a
+    // dedup shuffle would buy nothing but a stage.
+    val candCold = probeBuckets.filter(!col("hot")).join(refBk, "bk")
       .filter(col("ref_is_base") || col("id_ref") < col("id"))
-      .select(col("id"), col("id_ref")).distinct()
+      .select(col("id"), col("id_ref"))
     // verify reference shingle sets: the index's persisted `sh` for
     // indexed docs, the screened delta's own for intra-delta
     // candidates — the only branches that touch per-doc `sh` at probe
     // time.
     val refSets = index.docs.select(col("id").as("id_ref"), col("sh").as("sh_r"))
       .unionByName(dProbe.select(col("id").as("id_ref"), col("sh").as("sh_r")))
+    // verified ids, duplicates kept: every consumer is an anti-join or
+    // a union that ends in one
     def verify(cand: DataFrame): DataFrame = cand
       .join(dIx.select(col("id"), col("sh").as("sh_d")), "id")
       .join(refSets, "id_ref")
       .filter(size(array_intersect(col("sh_d"), col("sh_r"))).cast("double") /
         size(array_union(col("sh_d"), col("sh_r"))) >= threshold)
-      .select(col("id")).distinct()
+      .select(col("id"))
     val rejectedLsh =
       if (!useCascade) verify(candCold)
       else {
@@ -1265,7 +1248,10 @@ object Dedup {
         // near-dup of virtually every later member, so this
         // 2·|hot probe postings|-bounded pass resolves the mass; only
         // its leftovers pay stage 2.
-        val hotMins = refBk.join(hot, Seq("bk")).groupBy("bk")
+        val hotBk = dx.local(verdict.hot.map { case (b, h) => Row(Row(b, h)) },
+          StructType(Seq(bkField)))
+        val hotMins = refBk.join(broadcast(hotBk), Seq("bk"), "left_semi")
+          .groupBy("bk")
           .agg(min(when(col("ref_is_base"), col("id_ref"))).as("__min_base"),
             min(when(!col("ref_is_base"), col("id_ref"))).as("__min_delta"))
         val candS1 = probeBuckets.join(hotMins, "bk")
@@ -1290,18 +1276,126 @@ object Dedup {
         // that bucket only; a production deployment bounds that with
         // the width-adaptive rebuild (wider bands at higher corpus
         // density).
-        val hotSurvivors = probeBuckets.join(hot, Seq("bk"))
+        val hotSurvivors = probeBuckets.filter(col("hot"))
           .select("id").distinct()
           .join(rejected1, Seq("id"), "left_anti")
-        val candS2 = probeBuckets.join(hotSurvivors, Seq("id"), "left_semi")
-          .join(hot, Seq("bk"), "left_semi")
+        val candS2 = probeBuckets.filter(col("hot"))
+          .join(hotSurvivors, Seq("id"), "left_semi")
           .join(refBk, "bk")
           .filter(col("ref_is_base") || col("id_ref") < col("id"))
           .select(col("id"), col("id_ref")).distinct()
         rejected1.unionByName(verify(candS2))
       }
-    val rejected = fpRejected.fold(rejectedLsh)(_ unionByName rejectedLsh)
+    val rejected =
+      if (ledger.isEmpty) rejectedLsh
+      else dx.local(dx.docs.filter(screened).map(d => Row(d.id)),
+          StructType(Seq(dx.schema("id"))))
+        .unionByName(rejectedLsh)
     (dIx, rejected)
+  }
+
+  /** `body` over a broadcast of `v`, destroyed once `body` (which
+    * must run its jobs) returns: the delta's key sets reach the index
+    * side's tasks without a broadcast job or a literal list in the
+    * plan. */
+  private def withBroadcast[V: scala.reflect.ClassTag, T](
+      sc: org.apache.spark.SparkContext, v: V)(
+      body: org.apache.spark.broadcast.Broadcast[V] => T): T = {
+    val b = sc.broadcast(v)
+    try body(b) finally b.destroy()
+  }
+
+  /** The probe build (see the PROBE BUILD comment in
+    * [[screenIndexed]]): the router's hot buckets and load from the
+    * delta's driver-held rows plus the index's sidecar rows of those
+    * buckets, and the fp screen's verified ledger. One Spark job when
+    * no delta fp occurs in the index, two when one does. The delta's
+    * keys reach the index side as broadcast variables. */
+  private def probeVerdict(index: DedupIndex, dx: DeltaIx,
+      maxBucket: Int): ProbeVerdict = {
+    def idLt(a: DeltaDoc, b: DeltaDoc): Boolean = dx.idOrd.lt(a.idc, b.idc)
+    // the (id, sh) pairs of the intra-delta screen compare under
+    // Spark's ordering of that struct, so the min choice is the one
+    // the SQL spelling's min() made
+    val pairType = StructType(Seq(dx.schema("id"), dx.schema("sh")))
+    val pairOrd = org.apache.spark.sql.catalyst.util.TypeUtils
+      .getInterpretedOrdering(pairType)
+    val pairCat = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(pairType)
+    def pairLt(a: DeltaDoc, b: DeltaDoc): Boolean =
+      pairOrd.lt(pairCat(Row(a.id, a.sh)), pairCat(Row(b.id, b.sh)))
+    val docs = dx.docs
+    val byFp = docs.groupBy(_.fp)
+    // ONE index fetch: the indexed fps equal to a delta fp (fp column
+    // only) ∪ the sidecar rows of the delta's buckets
+    val sc = dx.frame.sparkSession.sparkContext
+    val fetched =
+      if (docs.isEmpty) Array.empty[Row]
+      else withBroadcast(sc, (byFp.keys.toSet, docs.flatMap(_.bks).toSet)) { keys =>
+        val fpHit = udf((fp: String) => keys.value._1(fp))
+        val bkHit = udf((b: Row) =>
+          b != null && keys.value._2((b.getInt(0), b.getLong(1))))
+        val bkType = index.bucketStats.schema("bk").dataType
+        index.docs.select("fp").filter(fpHit(col("fp")))
+          .select(col("fp"), lit(null).cast(bkType).as("bk"),
+            lit(null).cast("long").as("n"))
+          .unionByName(index.bucketStats.filter(bkHit(col("bk")))
+            .select(lit(null).cast("string").as("fp"), col("bk"),
+              col("n").cast("long").as("n")))
+          .collect()
+      }
+    val idxFps = fetched.iterator.filter(!_.isNullAt(0)).map(_.getString(0)).toSet
+    val idxN = fetched.iterator.filter(_.isNullAt(0)).map { r =>
+      val b = r.getStruct(1)
+      (b.getInt(0), b.getLong(1)) -> r.getLong(2)
+    }.toSeq.groupMapReduce(_._1)(_._2)(_ + _)
+    // router: per-bucket counts of the fp SURVIVORS — the min-id doc
+    // of each delta fp, unless the index holds that fp
+    val deltaN = byFp.iterator.filter { case (fp, _) => !idxFps(fp) }
+      .flatMap { case (_, g) =>
+        val nonNull = g.filter(_.id != null)
+        if (nonNull.isEmpty) Nil
+        else {
+          val m = nonNull.reduce((a, b) => if (idLt(b, a)) b else a)
+          nonNull.filter(d => !idLt(d, m) && !idLt(m, d))
+        }
+      }
+      .flatMap(_.bks).toSeq.groupMapReduce(identity)(_ => 1L)(_ + _)
+    val hotN = deltaN.toSeq.flatMap { case (bk, dn) =>
+      val tot = idxN.getOrElse(bk, 0L) + dn
+      if (tot > maxBucket) Some(bk -> dn.toDouble * tot) else None
+    }
+    val load =
+      if (hotN.isEmpty) Double.PositiveInfinity else hotN.map(_._2).sum
+    // fp screen, intra-delta: a doc whose set equals its fp group's
+    // min (id, sh) doc's, at a higher id
+    val intra = byFp.values.flatMap { g =>
+      val m = g.reduce((a, b) => if (pairLt(b, a)) b else a)
+      if (m.id == null) Nil
+      else g.filter(d => d.id != null && idLt(m, d) && d.sh == m.sh)
+    }
+    // fp screen, vs-index: the SECOND job, only when an fp matched —
+    // which of the matched delta sets does an indexed doc equal
+    // exactly? The delta's distinct sets of those fps, numbered; only
+    // the numbers of the equal ones come back.
+    val vsIndex =
+      if (idxFps.isEmpty) Nil
+      else {
+        val sets = byFp.iterator.filter { case (fp, _) => idxFps(fp) }
+          .flatMap { case (fp, g) =>
+            g.filter(_.id != null).map(_.sh).distinct.map(fp -> _) }
+          .toIndexedSeq
+        val byKey = sets.zipWithIndex.groupMap(_._1._1) { case ((_, sh), k) =>
+          sh -> k }.map { case (fp, ks) => fp -> ks.toMap }
+        val equal = withBroadcast(sc, byKey) { keys =>
+          val setNo = udf((fp: String, sh: Seq[String]) =>
+            keys.value.get(fp).flatMap(_.get(sh)).getOrElse(-1))
+          index.docs.select(setNo(col("fp"), col("sh")).as("k"))
+            .filter(col("k") >= 0).collect()
+        }.map(r => sets(r.getInt(0))).toSet
+        docs.filter(d => d.id != null && equal((d.fp, d.sh)))
+      }
+    ProbeVerdict(hotN.map(_._1), load, (intra ++ vsIndex).map(_.id).toSeq)
   }
 
   /** SERVING lookup against the persisted index — the text family's

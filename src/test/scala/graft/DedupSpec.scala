@@ -93,9 +93,9 @@ class DedupSpec extends SparkSpec {
     assert(!fileScans.exists(_.requiredSchema.fieldNames.contains("bands")))
     // the per-doc `ix` table feeds exactly ONE scan in the lazy probe
     // plan — the columnar (id, sh) projection for the verify join;
-    // the exact-replica screen's (fp) scan lives inside the
-    // snapshot (checkpointed) rejection ledger, evaluated once per
-    // probe, and the band arrays are never scanned at all
+    // the exact-replica screen's (fp) scan runs in the eager probe
+    // build, whose verified ledger enters the plan as a local relation
+    // of ids built on the driver, and the band arrays are never scanned at all
     // (probe/stats read the postings and bucket-stats sidecars).
     val scans = viaIndex.queryExecution.sparkPlan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
@@ -105,10 +105,35 @@ class DedupSpec extends SparkSpec {
     val ixSchemas = scansOf("/ix").map(_.requiredSchema.fieldNames.toSet)
     assert(ixSchemas == Seq(Set("id", "sh")), ixSchemas)
     // post feeds the lazy candidate join; bk is consumed by the EAGER
-    // hot-bucket cost router (one |buckets|-row aggregation at probe
-    // build), so it does not appear in the lazy plan
+    // hot-bucket cost router (its rows for the delta's buckets are
+    // fetched at probe build), so it does not appear in the lazy plan
     assert(scansOf("/post").nonEmpty)
     assert(scansOf("/bk").isEmpty)
+  }
+
+  test("indexed screen: a null-id exact replica is accepted and blocks " +
+      "no other screening, on both routes") {
+    // an anti-join by id never matches a null id, so a null-id doc is
+    // never rejected — and must not empty the probe side either: the
+    // near-dup beside it is still rejected
+    val base = corpus.filter(col("doc_id").isin(1L, 3L))
+    val delta = Seq(
+      (None, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      (Some(2L), "the quick brown fox jumps over the lazy dog near the river bank tonight"),
+      (Some(4L), "completely different content about databases and storage formats parquet")
+    ).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ix_null").toString
+    try {
+      Dedup.writeIndex(base, "doc_id", "text", dir)
+      def accepted(maxBucket: Int, budget: Long) =
+        Dedup.incrementalAcceptIndexed(Dedup.readIndex(spark, dir), delta,
+          "doc_id", "text", threshold = 0.5, maxBucket = maxBucket,
+          cascadeBudget = budget)
+          .select("doc_id").collect().map(r => Option(r.get(0))).toSet
+      assert(accepted(100, Dedup.CascadeBudget) == Set(None, Some(4L)))
+      // every bucket hot, cascade forced
+      assert(accepted(0, 0L) == Set(None, Some(4L)))
+    } finally Dedup.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
   test("serving lookup: vs-index-only verdicts (intra-delta near-dups do " +
@@ -742,5 +767,69 @@ class DedupSpec extends SparkSpec {
     assert(spark.read.parquet(
       graft.text.Dedup.livePath(dir, "tomb").toString).count() == 0L)
     assert(accepted == 1L)
+  }
+
+  test("index artifacts open with their own footer schema: a pre-fp ix " +
+      "takes the compatibility branch and screens identically, also " +
+      "after an append; a republished generation's schema is seen") {
+    val base = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      (3L, "spark engines shuffle data between executors during wide transformations"),
+      (4L, "completely different content about databases and storage formats parquet")
+    ).toDF("doc_id", "text")
+    val delta = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog near the river bank tonight"),
+      (11L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      (12L, "entirely novel text about mountain weather patterns and snowfall records"),
+      (13L, "spark engines shuffle data between executors during wide transformations")
+    ).toDF("doc_id", "text")
+    def screen(root: String) = Dedup.incrementalAcceptIndexed(
+        Dedup.readIndex(spark, root), delta, "doc_id", "text", threshold = 0.5)
+      .orderBy("doc_id").collect().toSeq
+    def ixRows(root: String) = Dedup.readIndex(spark, root).docs
+      .select("id", "fp", "sh", "bands").orderBy("id").collect().toSeq
+    def ixColumns(root: String) =
+      graft.io.FooterSchema.of(spark, Dedup.ixLive(root)).get.fieldNames.toSet
+    val cur = java.nio.file.Files.createTempDirectory("graft_ix_cur").toString
+    val old = java.nio.file.Files.createTempDirectory("graft_ix_old").toString
+    Dedup.writeIndex(base, "doc_id", "text", cur)
+    Dedup.writeIndex(base, "doc_id", "text", old)
+    // the pre-fingerprint layout: the same ix rows without `fp`
+    spark.read.parquet(Dedup.ixLive(cur)).drop("fp")
+      .write.mode("overwrite").parquet(Dedup.ixLive(old))
+    assert(!ixColumns(old).contains("fp") && ixColumns(cur).contains("fp"))
+    // fp derived in-plan from `sh` equals the persisted one, and the
+    // screen (whose exact replica 11 goes through the fp layer) agrees
+    assert(ixRows(old) == ixRows(cur))
+    val want = screen(cur)
+    assert(want.map(_.getLong(0)) == Seq(12L))
+    assert(screen(old) == want)
+    // an append adds files WITH fp to the pre-fp dir; the artifact's
+    // creation schema (its oldest file) still decides, so every row —
+    // old and appended — takes the compatibility branch
+    val (fs, _) = Dedup.hadoopFs(old)
+    fs.listStatus(new org.apache.hadoop.fs.Path(Dedup.ixLive(old)))
+      .foreach(st => fs.setTimes(st.getPath, 1000L, -1L))
+    val more = Seq((20L, "parquet footers carry the schema of every data file written"))
+      .toDF("doc_id", "text")
+    Dedup.appendAcceptedIndexed(old, Dedup.readIndex(spark, old), more,
+      "doc_id", "text")
+    Dedup.appendAcceptedIndexed(cur, Dedup.readIndex(spark, cur), more,
+      "doc_id", "text")
+    assert(!ixColumns(old).contains("fp"))
+    assert(ixRows(old) == ixRows(cur) && ixRows(old).size == 4)
+    assert(screen(old) == want)
+    // republish ix as a new generation with a different schema: the
+    // very next open reads it (nothing caches the old shape)
+    Dedup.publishNextGen(spark, old, "ix") { sd =>
+      spark.read.parquet(Dedup.ixLive(cur)).withColumn("note", lit("g1"))
+        .write.mode("overwrite").parquet(sd)
+    }
+    assert(ixColumns(old) == ixColumns(cur) + "note")
+    val g1 = Dedup.readIndex(spark, old).docs
+    assert(g1.columns.contains("note") &&
+      g1.filter(col("note") === "g1").count() == 4L)
+    assert(ixRows(old) == ixRows(cur))
+    assert(screen(old) == want)
   }
 }

@@ -1,0 +1,150 @@
+package graft
+
+import java.util.SplittableRandom
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import graft.sim.EmbIndex
+import graft.text.Dedup
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
+
+/** Pins the number of Spark jobs each index-serving op runs: a dedup
+  * screen and an accepted append of a 50-doc delta (half planted
+  * near-duplicates) against a seeded 2 500-doc text index, and a
+  * 50-query top-k probe and a 50-vector append against a seeded
+  * 1 000-vector embedding index. At this size each op's wall is its
+  * job count times the per-job latency, so these ceilings are the
+  * deterministic half of the serving path's cost. Each op runs once
+  * unmeasured first (manifest caches, codegen), then once counted,
+  * both on fresh inputs so no memo of a previous delta applies. */
+class JobCountSpec extends SparkSpec {
+
+  private val Vocab = Array("batch", "part", "spark", "line", "column",
+    "order", "small", "sort", "value", "scan", "a", "hash", "slow", "group",
+    "fast", "agg", "filter", "query", "big", "key", "window", "row", "table",
+    "stream", "merge", "data", "customer", "join", "vector", "the", "good",
+    "bad", "great", "error", "clean", "broken", "best", "worst", "win", "dup",
+    "index", "shard", "cache", "page", "node", "disk", "load", "store")
+  private val DocSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("text", StringType)))
+  private val Dim = 64
+  private val VecSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType, containsNull = false)),
+    StructField("label", IntegerType)))
+
+  private val rnd = new SplittableRandom(7L)
+  private var nextId = 1000000L
+  private def freshId(): Long = { nextId += 1; nextId }
+  private def text(): String =
+    Seq.fill(20 + rnd.nextInt(60))(Vocab(rnd.nextInt(Vocab.length))).mkString(" ")
+  /** The same text with its last word swapped: Jaccard stays ≫ 0.7. */
+  private def nearDup(t: String): String = {
+    val w = t.split(' ')
+    var repl = w.last
+    while (repl == w.last) repl = Vocab(rnd.nextInt(Vocab.length))
+    (w.init :+ repl).mkString(" ")
+  }
+  private val centres = Array.fill(10, Dim)(rnd.nextGaussian())
+  private def vector(): Array[Float] = {
+    val c = centres(rnd.nextInt(centres.length))
+    Array.tabulate(Dim)(j => ((c(j) + 0.6 * rnd.nextGaussian()) / 8).toFloat)
+  }
+
+  private def local(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** The number of Spark jobs `body` started. */
+  private def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    GraftTestBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      GraftTestBus.drain(sc)
+      n.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("index-serving ops stay within their Spark job ceilings") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobcount")
+    try {
+      val dedupRoot = dir.resolve("dedup").toString
+      val embRoot = dir.resolve("emb").toString
+      val docs = scala.collection.mutable.ArrayBuffer.tabulate(2500)(i =>
+        i.toLong -> text())
+      Dedup.writeIndex(spark.createDataFrame(spark.sparkContext.parallelize(
+        docs.toSeq.map { case (id, t) => Row(id, t) }, 4), DocSchema),
+        "doc_id", "text", dedupRoot)
+      val vecs = scala.collection.mutable.ArrayBuffer.tabulate(1000)(i =>
+        i.toLong -> vector())
+      EmbIndex.writeIndex(spark.createDataFrame(spark.sparkContext.parallelize(
+        vecs.toSeq.map { case (id, v) => Row(id, v.toSeq, 0) }, 4), VecSchema),
+        embRoot)
+
+      /** 25 near-dups of indexed docs then 25 new docs; the new ids. */
+      def delta(): (DataFrame, Set[Long]) = {
+        val dups = Seq.fill(25)(freshId() -> nearDup(docs(rnd.nextInt(docs.size))._2))
+        val fresh = Seq.fill(25)(freshId() -> text())
+        (local((dups ++ fresh).map { case (id, t) => Row(id, t) }, DocSchema),
+          fresh.map(_._1).toSet)
+      }
+      def screen(): Unit = {
+        val (d, fresh) = delta()
+        val ix = Dedup.readIndex(spark, dedupRoot)
+        val acc = Dedup.incrementalAcceptIndexed(ix, d, "doc_id", "text")
+          .select("doc_id").collect().map(_.getLong(0)).toSet
+        assert(acc == fresh)
+      }
+      def append(): Unit = {
+        val (d, fresh) = delta()
+        val ix = Dedup.readIndex(spark, dedupRoot)
+        Dedup.appendAcceptedIndexed(dedupRoot, ix, d, "doc_id", "text")
+        docs ++= d.collect().map(r => r.getLong(0) -> r.getString(1))
+          .filter(p => fresh(p._1))
+      }
+      def embProbe(): Unit = {
+        val planted = Seq.fill(25) {
+          val (id, v) = vecs(rnd.nextInt(vecs.size))
+          (freshId(), v.map(_ * 2f)) -> id
+        }
+        val qs = planted.map(_._1) ++ Seq.fill(25)(freshId() -> vector())
+        val ix = EmbIndex.readIndex(spark, embRoot)
+        val top = EmbIndex.indexTopKBatch(ix,
+            local(qs.map { case (id, v) => Row(id, v.toSeq, 0) }, VecSchema), 5)
+          .filter("rank = 1").select("q_id", "vec_id").collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        planted.foreach { case ((q, _), src) => assert(top.get(q).contains(src)) }
+      }
+      def embAppend(): Unit = {
+        val vs = Seq.fill(50)(freshId() -> vector())
+        EmbIndex.appendIndex(embRoot,
+          local(vs.map { case (id, v) => Row(id, v.toSeq, 0) }, VecSchema))
+        vecs ++= vs
+      }
+
+      val ops = Seq[(String, () => Unit, Int)](
+        ("dedup screen", () => screen(), 20),
+        ("dedup accepted append", () => append(), 23),
+        ("emb probe", () => embProbe(), 6),
+        ("emb append", () => embAppend(), 5))
+      ops.foreach(_._2())
+      val counts = ops.map { case (name, op, ceiling) =>
+        (name, jobs(op()), ceiling)
+      }
+      val listing = counts.map { case (name, n, c) =>
+        s"$name: $n jobs (ceiling $c)" }.mkString("; ")
+      info(listing)
+      assert(counts.forall { case (_, n, c) => n <= c }, listing)
+      assert(Dedup.readIndex(spark, dedupRoot).docs.count() == docs.size)
+      assert(EmbIndex.readIndex(spark, embRoot).vecs.count() == vecs.size)
+    } finally Dedup.deleteRecursively(dir)
+  }
+}
