@@ -15,9 +15,11 @@ package graft.io
   * per-file footer opens).
   *
   * Policy: derived/append writes whose bytes are KNOWN (the source
-  * dir was just written — appends read back a scratch snapshot,
-  * derivations read the just-published artifact) coalesce to
-  * ceil(bytes / target) output partitions, floor 1. Build-time writes
+  * dir was just written — a distributed append reads back its scratch
+  * snapshot, derivations read the just-published artifact) coalesce to
+  * ceil(bytes / target) output partitions, floor 1. An append whose
+  * rows are already on the driver needs no sizing: it lands one part
+  * file per artifact ([[graft.text.Dedup.appendIndexRows]]). Build-time writes
   * whose input is a compute-heavy scan (minhash/decode kernels) keep
   * their natural parallelism — a coalesce there would serialize the
   * kernel work, the r11 coalesce(1)-sink lesson.

@@ -394,66 +394,18 @@ object EmbIndex {
     * per generation by construction (re-resolving from the grown
     * count is a REBUILD, not an append; see the manifest contract in
     * the object scaladoc). Delta-sized appends to all three
-    * artifacts; the corpus side is never rewritten. The delta's rows
-    * snapshot to a scratch parquet first (the lineage cut of
-    * [[graft.text.Dedup.appendIndex]] — an accepted frame lazily
-    * derived from the index being grown must not re-screen against
-    * the half-grown index), and `vecs` — the record of truth — lands
-    * LAST (see the crash contract above). */
+    * artifacts through the shared writer
+    * [[graft.text.Dedup.appendIndexRows]]; the corpus side is never
+    * rewritten. The rows snapshot first — on the driver when
+    * `accepted` is a local relation, to scratch parquet otherwise —
+    * because an accepted frame lazily derived from the index being
+    * grown must not re-screen against the half-grown index; `vecs` —
+    * the record of truth — lands LAST (see the crash contract above). */
   def appendIndex(root0: String, accepted: DataFrame): Unit = {
-    val s = accepted.sparkSession
     val root = graft.io.ModelGens.liveRoot(root0)
-    val (bits, _, _, _) = readManifest(s, root)
-    appendIndexRows(root, buildRows(accepted, bits))
-  }
-
-  /** [[appendIndex]] over ALREADY-BUILT index rows (a [[buildRows]]
-    * frame signed at the live manifest width) — the kernel-free append
-    * [[appendAcceptedIndexed]] uses so quantize/band never re-run over
-    * the accepted vectors (guide §1.2). */
-  private[graft] def appendIndexRows(root0: String,
-      ixRows: DataFrame): Unit = {
-    val s = ixRows.sparkSession
-    val root = graft.io.ModelGens.liveRoot(root0)
-    val (fs, r) = graft.text.Dedup.hadoopFs(root)
-    val scratch = new org.apache.hadoop.fs.Path(
-      r, s".emb_append_${java.util.UUID.randomUUID().toString.take(13)}")
-    try {
-      val sd = new org.apache.hadoop.fs.Path(scratch, "vecs").toString
-      val postLive = graft.text.Dedup.livePath(root, "post").toString
-      val bkLive = graft.text.Dedup.livePath(root, "bk").toString
-      val vLive = vecsLive(root)
-      ixRows.write.mode("overwrite").parquet(sd)
-      // appends read the scratch snapshot back — coalesce to
-      // size-targeted part counts (FileSizing, guide §6): a
-      // delta-sized append lands ONE file per artifact, not one per
-      // core
-      val np = graft.io.FileSizing.partsFor(
-        graft.io.FileSizing.dirBytes(fs, new org.apache.hadoop.fs.Path(sd)))
-      // post/bk are independent derived appends; only `vecs` (the
-      // record of truth) must land last — overlap them (guide §2.6;
-      // same recurring-path rationale as graft.text.Dedup.appendIndex)
-      // read-backs carry the rows' own schema (no inference job each)
-      def snapshot = s.read.schema(ixRows.schema).parquet(sd)
-      import scala.concurrent.{Await, Future, blocking}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // blocking{}: blocking Spark writes on the global pool
-      val fPost = Future { blocking {
-        indexPostings(snapshot).coalesce(np)
-          .write.mode("append").parquet(postLive)
-      } }
-      val fBk = Future { blocking {
-        indexBucketStats(indexPostings(snapshot))
-          .write.mode("append").parquet(bkLive)
-      } }
-      Await.result(fPost, Duration.Inf)
-      Await.result(fBk, Duration.Inf)
-      snapshot.coalesce(np).write.mode("append").parquet(vLive)
-      s.catalog.refreshByPath(postLive)
-      s.catalog.refreshByPath(bkLive)
-      s.catalog.refreshByPath(vLive)
-    } finally fs.delete(scratch, true)
+    val (bits, _, _, _) = readManifest(accepted.sparkSession, root)
+    graft.text.Dedup.appendIndexRows(root, "vecs", buildRows(accepted, bits),
+      indexPostings)
   }
 
   // ── model generations (occupancy-triggered WIDTH REBUILD) ─────────
@@ -578,13 +530,16 @@ object EmbIndex {
     * screen's own memoized [[buildRows]] frame ([[buildRows]] is a pure
     * per-row projection, so dIx anti-joined by the reject set ≡
     * buildRows(accepted) bit-for-bit — the quantize/band kernels never
-    * re-run at append time; guide §1.2). The handle must be the live
-    * generation of `root0`. */
+    * re-run at append time; guide §1.2). The accepted rows (≤ the
+    * delta) are collected once and append from the driver as a local
+    * relation. The handle must be the live generation of `root0`. */
   def appendAcceptedIndexed(root0: String, index: EmbeddingIndex,
       delta: DataFrame, num: Int, den: Int): Unit = {
     val (dIx, rejected) = screenIndexed(index, delta, num, den)
-    appendIndexRows(root0,
-      dIx.join(rejected, Seq("vec_id"), "left_anti"))
+    val acc = dIx.join(rejected, Seq("vec_id"), "left_anti")
+    graft.text.Dedup.appendIndexRows(root0, "vecs",
+      delta.sparkSession.createDataFrame(acc.collectAsList(), acc.schema),
+      indexPostings)
   }
 
   /** The shared screen: (memoized delta index frame, rejected vec_ids). */

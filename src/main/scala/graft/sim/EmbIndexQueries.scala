@@ -743,9 +743,10 @@ object EmbIndexQueries {
         embeddings(s, dir).filter(col("vec_id") % 4 <= 1), root)
       val (bits, _, _, _) = EmbIndex.readManifest(s, root)
       // torn-append simulation: derived frames straight from the
-      // delta's plan (no scratch snapshot — unlike a real appendIndex
+      // delta's plan (no snapshot — unlike a real appendIndex
       // input this delta reads the SOURCE parquet, not the index
-      // being grown)
+      // being grown); the tear it leaves (post/bk landed, vecs not) is
+      // the one the append's derived-first, record-last order permits
       val ixd = EmbIndex.buildRows(
         embeddings(s, dir).filter(col("vec_id") % 4 === 2), bits)
       EmbIndex.indexPostings(ixd)

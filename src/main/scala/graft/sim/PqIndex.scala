@@ -465,9 +465,8 @@ object PqIndex {
     * a REBUILD, not an append — codes from two codebooks cannot share
     * an ADC table, and cells from two quantizers cannot share a
     * routing). The delta here reads source data, not the index being
-    * grown, so no scratch snapshot is needed (unlike
-    * [[EmbIndex.appendIndex]], whose accepted frame derives from the
-    * probed index). */
+    * grown, so no snapshot is needed (unlike [[EmbIndex.appendIndex]],
+    * whose accepted frame derives from the probed index). */
   def appendIndex(root: String, delta: DataFrame): Unit = {
     val s = delta.sparkSession
     val mr = liveModelRoot(root)

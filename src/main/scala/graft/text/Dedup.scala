@@ -467,115 +467,137 @@ object Dedup {
     s.catalog.refreshByPath(next.toString)
   }
 
-  /** Appends the accepted delta rows' index entries to a persisted
-    * index: their postings to `post`, their PARTIAL per-bucket counts
-    * to the live `bk` generation (the stats sidecar is a mergeable
-    * partial aggregate — see [[indexBucketStats]]), and their per-doc
-    * rows to `ix`. The recurring cost is delta-sized on all three
+  /** The ONE index-append writer, shared by the text family (record
+    * `ix`) and the embedding family (record `vecs`): appends a delta's
+    * index rows (signed at the live generation's manifest geometry) to
+    * the live generation of `root0` — their postings (`postings`, the
+    * family's explode of `bands`) to `post`, their PARTIAL per-bucket
+    * counts to `bk` (the stats sidecar is a mergeable partial
+    * aggregate — see [[indexBucketStats]]) and the rows themselves to
+    * `record`. The recurring cost is delta-sized on all three
     * artifacts; the corpus side is never rewritten.
     *
-    * The delta's index rows are materialized to a scratch parquet
-    * FIRST and all three appends read those written files. This cuts
-    * the plan lineage on purpose: `accepted` is typically the lazy
-    * output of [[incrementalAcceptIndexed]] over the very index being
-    * grown, and each append's refresh-by-path invalidates any cached
-    * intermediate, so a lineage-carrying append would re-screen the
-    * delta against the half-grown index (its own rows now indexed →
-    * everything self-rejects → later appends write empty). Snapshot
-    * semantics, not an implementation nicety.
+    * Snapshot semantics: the rows are materialized BEFORE the first
+    * write, so no write's plan reads the index being grown. That cut
+    * is on purpose: an accepted frame is typically the lazy output of
+    * [[incrementalAcceptIndexed]] over this very index, and each
+    * append's refresh-by-path invalidates any cached intermediate, so
+    * a lineage-carrying append would re-screen the delta against the
+    * half-grown index (its own rows now indexed → everything
+    * self-rejects → later appends write empty).
     *
-    * Crash contract: the appends are non-atomic — the two DERIVED
-    * appends (post, bk) run CONCURRENTLY (no ordering contract between
-    * them) and `ix` — the record of truth the verify join reads — goes
-    * LAST, after both have landed.
+    * Where the snapshot lives follows where the rows already are, read
+    * off the optimized plan:
+    *  - a LOCAL RELATION (the screen's accepted rows, a
+    *    `createDataFrame` delta or a projection of one) is collected
+    *    without a job and IS the snapshot: the `bk` partials are counted
+    *    on the driver (no shuffle) and each artifact lands as one part
+    *    file. No rows, no write: a fully-rejected delta leaves every
+    *    artifact, and so [[contentStamp]], untouched.
+    *  - any other plan (the maintenance stages append most of a parquet
+    *    corpus this way) is snapshotted to a scratch parquet on the
+    *    index root's own filesystem — executors write it, so a
+    *    driver-local tmpdir would work only in local mode; dot-prefixed,
+    *    invisible to listings — and the three appends read it back,
+    *    coalesced to size-targeted part counts ([[graft.io.FileSizing]]).
+    *    Nothing passes through the driver, at any size.
+    *
+    * Crash contract (the same for both snapshots): the appends are
+    * non-atomic — the two DERIVED appends (post, bk) run CONCURRENTLY
+    * (no ordering contract between them) and the record of truth the
+    * verify join reads goes LAST, after both have landed.
     * A crash mid-append can therefore leave only DERIVED rows (post/
-    * bk) for docs absent from `ix`; those are conservative garbage,
-    * never a correctness hole: orphan postings produce candidates that
-    * fail the inner join against `ix` docs (so the probe behaves as if
-    * the torn delta was never indexed — correct, since `ix` is the
-    * membership record), and orphan bk counts only make buckets look
-    * HOTTER (more dropping, fewer candidates — the guard's safe
-    * direction). Re-running the append restores `ix`; the duplicated
-    * derived rows stay harmless (pairing dedups through `distinct`,
-    * stats inflation stays conservative) until [[repairIndex]] — the
-    * maintenance op that DETECTS either inconsistency (post must hold
-    * exactly Bands rows per ix doc) and re-derives post/bk from `ix`
-    * — restores the invariant. The reversed order is what makes a torn
-    * append recoverable-by-retry instead of silently wrong: with `ix`
-    * first, a crash would leave docs IN the membership record but
-    * invisible to the probe — later near-dups of them would be
-    * silently accepted. */
-  def appendIndex(root0: String, accepted: DataFrame, idCol: String,
-      textCol: String): Unit = {
-    val s = accepted.sparkSession
-    val root = graft.io.ModelGens.liveRoot(root0)
-    val (bands, rows) = manifestWidth(s, root)
-    appendIndexRows(root, buildIndex(accepted, idCol, textCol, bands, rows))
-  }
-
-  /** [[appendIndex]] over ALREADY-BUILT index rows (a [[buildIndex]]
-    * frame) — for callers that hold the accepted rows' index entries
-    * anyway ([[appendAcceptedIndexed]] re-uses the screen's memoized
-    * delta frame), so the kernels never re-run at append time. The
-    * rows must be signed at the live generation's manifest geometry
-    * (every caller derives them from a readIndex handle). */
-  private[graft] def appendIndexRows(root0: String,
-      ixRows: DataFrame): Unit = {
+    * bk) for docs absent from the record; those are conservative
+    * garbage, never a correctness hole: orphan postings produce
+    * candidates that fail the inner join against the record (so the
+    * probe behaves as if the torn delta was never indexed — correct,
+    * since the record is the membership record), and orphan bk counts
+    * only make buckets look HOTTER (more dropping, fewer candidates —
+    * the guard's safe direction). Re-running the append restores the
+    * record; the duplicated derived rows stay harmless (pairing dedups
+    * through `distinct`, stats inflation stays conservative) until
+    * [[repairIndex]] — the maintenance op that DETECTS either
+    * inconsistency (post must hold exactly Bands rows per ix doc) and
+    * re-derives post/bk from the record — restores the invariant. The
+    * reversed order is what makes a torn append recoverable-by-retry
+    * instead of silently wrong: with the record first, a crash would
+    * leave docs IN the membership record but invisible to the probe —
+    * later near-dups of them would be silently accepted. */
+  private[graft] def appendIndexRows(root0: String, record: String,
+      ixRows: DataFrame, postings: DataFrame => DataFrame): Unit = {
     val s = ixRows.sparkSession
     // appends land in the LIVE model generation (geometry rebuilds
     // publish siblings under modelgen<k> — [[rebuildIndex]]; a plain
     // never-rebuilt root resolves to itself)
     val root = graft.io.ModelGens.liveRoot(root0)
-    // The scratch snapshot lives on the index root's OWN filesystem:
-    // executors write it and all three appends read it back, so a
-    // driver-local tmpdir would work only in local mode — on a real
-    // cluster each executor would land its task files on its own
-    // disk and the read-back would see the driver's (empty) path.
-    // Dot-prefixed → invisible to Spark's directory listings.
-    val (fs, r) = hadoopFs(root)
-    val scratch = new org.apache.hadoop.fs.Path(
-      r, s".ix_append_${java.util.UUID.randomUUID().toString.take(13)}")
-    try {
-      val sd = new org.apache.hadoop.fs.Path(scratch, "ixd").toString
-      ixRows.write.mode("overwrite").parquet(sd)
-      // the three appends read the scratch snapshot back (no kernel
-      // work left in their lineage), so they coalesce to
-      // size-targeted part counts — a delta-sized append lands ONE
-      // part file per artifact instead of one per core
-      // (graft.io.FileSizing, guide §6; r16 measured 32 tiny files
-      // per append per artifact before this).
-      val np = graft.io.FileSizing.partsFor(
-        graft.io.FileSizing.dirBytes(fs, new org.apache.hadoop.fs.Path(sd)))
-      // The two DERIVED appends (post, bk) are independent reads of the
-      // scratch snapshot with no ordering contract BETWEEN them — only
-      // `ix` (the record of truth) must land LAST (see the crash
-      // contract above). Run them as two concurrent jobs (guide §2.6
-      // overlap-independent-jobs): each is a small delta-sized write
-      // whose wall is mostly job latency, so overlapping them shaves a
-      // fixed cost from EVERY append — the per-micro-batch recurring
-      // path of stream_index_ingest.
-      // The read-backs carry the rows' own schema: inferring it from
-      // the scratch footer would cost a Spark job per read.
-      def snapshot = s.read.schema(ixRows.schema).parquet(sd)
+    def land(post: DataFrame, bk: DataFrame, rec: DataFrame): Unit = {
+      val paths @ Seq(postL, bkL, recL) =
+        Seq("post", "bk", record).map(livePath(root, _).toString)
+      // the two DERIVED appends have no ordering contract BETWEEN them
+      // — only the record must land LAST (see the crash contract
+      // above): two concurrent jobs (guide §2.6
+      // overlap-independent-jobs), each a small write whose wall is
+      // mostly job latency — a fixed cost off EVERY append, the
+      // per-micro-batch path of stream_index_ingest
       import scala.concurrent.{Await, Future, blocking}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
       // blocking{}: each body is a blocking Spark write on the global
       // pool — marked so the pool adds a thread instead of starving
-      val fPost = Future { blocking {
-        indexPostings(snapshot).coalesce(np)
-          .write.mode("append").parquet(livePath(root, "post").toString)
-      } }
-      val fBk = Future { blocking {
-        indexBucketStats(indexPostings(snapshot))
-          .write.mode("append").parquet(livePath(root, "bk").toString)
-      } }
-      Await.result(fPost, Duration.Inf)
-      Await.result(fBk, Duration.Inf)
-      val ixL = ixLive(root)
-      snapshot.coalesce(np).write.mode("append").parquet(ixL)
-      s.catalog.refreshByPath(ixL)
-    } finally fs.delete(scratch, true)
+      Seq(Future { blocking { post.write.mode("append").parquet(postL) } },
+          Future { blocking { bk.write.mode("append").parquet(bkL) } })
+        .foreach(Await.result(_, Duration.Inf))
+      rec.write.mode("append").parquet(recL)
+      paths.foreach(s.catalog.refreshByPath)
+    }
+    def local(rs: Seq[Row], schema: StructType): DataFrame =
+      s.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
+    ixRows.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        if (l.data.nonEmpty) {
+          val rows = ixRows.collect().toSeq
+          val held = local(rows, ixRows.schema)
+          // partial counts per bucket; a bucket key is a (band, hash)
+          // struct of integral fields, so Row equality is GROUP BY's
+          val bands = held.schema.fieldIndex("bands")
+          val n = rows.filterNot(_.isNullAt(bands))
+            .flatMap(_.getSeq[Row](bands)).groupMapReduce(identity)(_ => 1L)(_ + _)
+          land(postings(held).coalesce(1),
+            local(n.toSeq.map { case (k, c) => Row(k, c) },
+              indexBucketStats(postings(held)).schema).coalesce(1),
+            held.coalesce(1))
+        }
+      case _ =>
+        val (fs, r) = hadoopFs(root)
+        val scratch = new org.apache.hadoop.fs.Path(
+          r, s".${record}_append_${java.util.UUID.randomUUID().toString.take(13)}")
+        try {
+          val sd = new org.apache.hadoop.fs.Path(scratch, record)
+          ixRows.write.mode("overwrite").parquet(sd.toString)
+          // a delta-sized append lands ONE part file per artifact
+          // instead of one per core (graft.io.FileSizing, guide §6);
+          // the read-backs carry the rows' own schema (inferring it
+          // from the scratch footer would cost a job per read)
+          val np = graft.io.FileSizing.partsFor(
+            graft.io.FileSizing.dirBytes(fs, sd))
+          def snapshot = s.read.schema(ixRows.schema).parquet(sd.toString)
+          land(postings(snapshot).coalesce(np),
+            indexBucketStats(postings(snapshot)), snapshot.coalesce(np))
+        } finally fs.delete(scratch, true)
+    }
+  }
+
+  /** Appends the accepted delta rows' index entries to a persisted
+    * index through [[appendIndexRows]]: delta-sized on all three
+    * artifacts, the corpus side never rewritten; the rows snapshot on
+    * the driver when `accepted` is a local relation, to scratch parquet
+    * otherwise. */
+  def appendIndex(root0: String, accepted: DataFrame, idCol: String,
+      textCol: String): Unit = {
+    val root = graft.io.ModelGens.liveRoot(root0)
+    val (bands, rows) = manifestWidth(accepted.sparkSession, root)
+    appendIndexRows(root, "ix",
+      buildIndex(accepted, idCol, textCol, bands, rows), indexPostings)
   }
 
   /** Opens a persisted three-part index written by [[writeIndex]] /
@@ -1008,6 +1030,13 @@ object Dedup {
     def local(rs: Seq[Row], sch: StructType = schema): DataFrame =
       s.createDataFrame(java.util.Arrays.asList(rs: _*), sch)
     val frame: DataFrame = local(rows.toSeq)
+    /** The docs whose id is in `ids` under [[idOrd]] — the
+      * anti-join-by-id semantics: a null id is never in the set. */
+    def docsIn(ids: Iterable[Any]): DeltaDoc => Boolean = {
+      val set = scala.collection.immutable.TreeSet.from(
+        ids.iterator.filter(_ != null).map(convertToCatalyst))(idOrd)
+      d => d.id != null && set(d.idc)
+    }
   }
 
   /** What a probe build decides, all of it driver-held: the router's
@@ -1060,26 +1089,30 @@ object Dedup {
     * set — bit-identical to `appendIndex(root, accepted, …)`, minus
     * re-running the shingle/minhash/md5/band kernels over the accepted
     * text a second time (guide §1.2 per-task work; the dIx rows are
-    * already driver-held by the probe). The index handle must be the
-    * live generation of `root0` — the readIndex-then-append shape
-    * every ingest caller already has. */
+    * already driver-held by the probe). Only the ≤ |delta| reject set
+    * is collected; the anti-join by id runs on the driver under
+    * Spark's ordering of the id type, a null id never rejected, and
+    * the kept rows append from the driver as a local relation. The
+    * index handle must be the live generation of `root0` — the
+    * readIndex-then-append shape every ingest caller already has. */
   def appendAcceptedIndexed(root0: String, index: DedupIndex,
       delta: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.7, maxBucket: Int = 100,
       cascadeBudget: Long = CascadeBudget): Unit = {
-    val (dIx, rejected) = screenIndexed(index, delta, idCol, textCol,
+    val (dx, rejected) = screenIndexed(index, delta, idCol, textCol,
       threshold, maxBucket, cascadeBudget)
-    appendIndexRows(root0,
-      dIx.join(broadcast(rejected.select("id")), Seq("id"), "left_anti"))
+    val out = dx.docsIn(rejected.select("id").collect().map(_.get(0)))
+    appendIndexRows(root0, "ix", dx.local(dx.docs.filterNot(out).map(_.row)),
+      indexPostings)
   }
 
-  /** The shared screen: (the delta's index rows as a local relation,
-    * rejected ids — column `id`, duplicates possible; every consumer
-    * anti-joins). */
+  /** The shared screen: (the delta's driver-held index rows, rejected
+    * ids — column `id`, duplicates possible; every consumer anti-joins
+    * by id). */
   private def screenIndexed(index: DedupIndex, delta: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       maxBucket: Int,
-      cascadeBudget: Long): (DataFrame, DataFrame) = {
+      cascadeBudget: Long): (DeltaIx, DataFrame) = {
     val s = delta.sparkSession
     graft.plans.GraftFunctions.register(s)
     // the delta signs at the INDEX GENERATION's frozen band geometry
@@ -1189,13 +1222,10 @@ object Dedup {
     // screened-out docs leave BOTH probe sides. Ledger membership is
     // decided on the driver, by id under Spark's ordering of the id
     // type — the anti-join-by-id semantics, null ids never matching.
-    val ledger = scala.collection.immutable.TreeSet.from(
-      verdict.ledger.map(
-        org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst))(
-      dx.idOrd)
-    def screened(d: DeltaDoc): Boolean = d.id != null && ledger(d.idc)
+    val screened = dx.docsIn(verdict.ledger)
     val probeDocs = dx.docs.filterNot(screened)
-    val dProbe = if (ledger.isEmpty) dIx else dx.local(probeDocs.map(_.row))
+    val dProbe =
+      if (verdict.ledger.isEmpty) dIx else dx.local(probeDocs.map(_.row))
     // the probe side's (id, bk) postings, built on the driver with the
     // router's verdict per bucket (`hot`: combined occupancy >
     // maxBucket and the cascade picked) — a local relation
@@ -1287,11 +1317,11 @@ object Dedup {
         rejected1.unionByName(verify(candS2))
       }
     val rejected =
-      if (ledger.isEmpty) rejectedLsh
+      if (verdict.ledger.isEmpty) rejectedLsh
       else dx.local(dx.docs.filter(screened).map(d => Row(d.id)),
           StructType(Seq(dx.schema("id"))))
         .unionByName(rejectedLsh)
-    (dIx, rejected)
+    (dx, rejected)
   }
 
   /** `body` over a broadcast of `v`, destroyed once `body` (which

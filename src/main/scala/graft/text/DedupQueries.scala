@@ -934,9 +934,11 @@ object DedupQueries {
         "doc_id", "text", root)
       val delta1 = docs.filter(col("doc_id") % 4 === 2)
       // the torn-append simulation writes the derived frames straight
-      // from the delta's plan — no scratch snapshot needed, because
+      // from the delta's plan — no snapshot needed, because
       // unlike a real appendIndex input this delta reads the SOURCE
-      // parquet, not the index being grown (no lineage trap)
+      // parquet, not the index being grown (no lineage trap); the tear
+      // it leaves (post/bk landed, ix not) is the one the append's
+      // derived-first, record-last order permits
       val ixd = Dedup.buildIndex(delta1, "doc_id", "text")
       Dedup.indexPostings(ixd).write.mode("append").parquet(s"$root/post")
       Dedup.indexBucketStats(Dedup.indexPostings(ixd))

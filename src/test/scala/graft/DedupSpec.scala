@@ -136,6 +136,55 @@ class DedupSpec extends SparkSpec {
     } finally Dedup.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
+  test("accepted append over string ids: appends exactly the rows the " +
+      "anti-join by id keeps, a null id included, with matching post/bk") {
+    val base = Seq(
+      ("a1", "the quick brown fox jumps over the lazy dog near the river bank today"),
+      ("a3", "spark engines shuffle data between executors during wide transformations")
+    ).toDF("doc_id", "text")
+    val delta = Seq(
+      (null, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      ("b2", "the quick brown fox jumps over the lazy dog near the river bank tonight"),
+      ("b4", "completely different content about databases and storage formats parquet"),
+      ("b6", "completely different content about databases and storage formats orc"),
+      ("a0", "entirely novel text about mountain weather patterns and snowfall records")
+    ).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ix_strid").toString
+    def ixRows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "fp", "sh", "bands").collect().map(r =>
+        (Option(r.getString(0)), r.getString(1), r.getSeq[String](2),
+          r.getSeq[org.apache.spark.sql.Row](3).map(b => (b.getInt(0), b.getLong(1)))))
+        .toSeq.sortBy(_.toString)
+    try {
+      Dedup.writeIndex(base, "doc_id", "text", dir)
+      // the old spelling: the delta's index rows anti-joined by the
+      // reject set's ids, i.e. buildIndex over the accepted rows
+      val kept = ixRows(Dedup.buildIndex(Dedup.incrementalAcceptIndexed(
+        Dedup.readIndex(spark, dir), delta, "doc_id", "text", threshold = 0.5),
+        "doc_id", "text"))
+      assert(kept.map(_._1).toSet == Set(None, Some("b4"), Some("a0")))
+      Dedup.appendAcceptedIndexed(dir, Dedup.readIndex(spark, dir), delta,
+        "doc_id", "text", threshold = 0.5)
+      val ix = spark.read.parquet(Dedup.ixLive(dir))
+      assert(ixRows(ix.filter(col("id").isNull || !col("id").isin("a1", "a3")))
+        == kept)
+      // the driver-derived sidecars equal their derivation from ix
+      def post(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("id"), col("bk.band"), col("bk.bh")).collect()
+          .map(r => (Option(r.getString(0)), r.getInt(1), r.getLong(2)))
+          .toSeq.sortBy(_.toString)
+      def stats(df: org.apache.spark.sql.DataFrame) =
+        df.groupBy("bk").agg(sum("n").as("n"))
+          .select(col("bk.band"), col("bk.bh"), col("n")).collect()
+          .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+      def live(part: String) =
+        spark.read.parquet(Dedup.livePath(dir, part).toString)
+      assert(post(live("post")) == post(Dedup.indexPostings(ix)))
+      assert(stats(live("bk")) ==
+        stats(Dedup.indexBucketStats(Dedup.indexPostings(ix))))
+    } finally Dedup.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
   test("serving lookup: vs-index-only verdicts (intra-delta near-dups do " +
       "NOT flag), fp short-circuit agrees, plan never scans base text") {
     val base = corpus.filter(col("doc_id").isin(1L, 3L))

@@ -263,6 +263,57 @@ class EmbIndexSpec extends SparkSpec {
     assert(accepted == 1L)
   }
 
+  test("appends keep post and bk equal to their derivation from vecs, " +
+      "land one part file per artifact, and a rejected delta writes none") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_embixp").toString
+    def live(part: String) = graft.text.Dedup.livePath(dir, part)
+    def postings(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vec_id"), col("bk").cast("string")).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    def stats(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy("bk").agg(sum("n")).collect()
+        .map(r => (r.get(0).toString, r.getLong(1))).toMap
+    def vecIds = spark.read.parquet(EmbIndex.vecsLive(dir))
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    def parity(): Unit = {
+      val vecs = spark.read.parquet(EmbIndex.vecsLive(dir))
+      val post = EmbIndex.indexPostings(vecs)
+      assert(postings(spark.read.parquet(live("post").toString)) == postings(post))
+      assert(stats(spark.read.parquet(live("bk").toString)) ==
+        stats(EmbIndex.indexBucketStats(post)))
+    }
+    def parts = Seq("post", "bk", "vecs").map(p =>
+      new java.io.File(live(p).toUri.getPath).listFiles()
+        .count(_.getName.startsWith("part-")))
+    try {
+      EmbIndex.writeIndex(randVecs(0L until 200L, 64), dir)
+      val p0 = parts
+      EmbIndex.appendIndex(dir, randVecs(200L until 250L, 64))
+      parity()
+      assert(parts == p0.map(_ + 1))
+      // a frame that is not a local relation snapshots to scratch
+      // parquet and derives post/bk distributed
+      EmbIndex.appendIndex(dir, randVecs(250L until 300L, 64).repartition(2))
+      parity()
+      assert(parts == p0.map(_ + 2))
+      // copies of indexed vectors under new ids (rejected) beside fresh
+      // random vectors
+      val copies = randVecs(0L until 10L, 64).withColumn("vec_id", col("vec_id") + 5000L)
+      val delta = copies.unionByName(randVecs(9000L until 9020L, 64))
+      val accepted = EmbIndex.incrementalAcceptIndexed(
+          EmbIndex.readIndex(spark, dir), delta, 1, 5)
+        .select("vec_id").collect().map(_.getLong(0)).toSet
+      assert(accepted.nonEmpty && !accepted.exists(id => id >= 5000L && id < 5010L))
+      val before = vecIds
+      EmbIndex.appendAcceptedIndexed(dir, EmbIndex.readIndex(spark, dir), delta, 1, 5)
+      assert(vecIds == before ++ accepted)
+      parity()
+      assert(parts == p0.map(_ + 3))
+      EmbIndex.appendAcceptedIndexed(dir, EmbIndex.readIndex(spark, dir), copies, 1, 5)
+      assert(parts == p0.map(_ + 3))
+    } finally graft.text.Dedup.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
   test("appended entries block later near-dups of accepted vectors") {
     val d = 64
     def unit(sign: Int) = (0 until d).map(j =>

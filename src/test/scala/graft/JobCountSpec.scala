@@ -14,7 +14,9 @@ import org.apache.spark.sql.types._
 
 /** Pins the number of Spark jobs each index-serving op runs: a dedup
   * screen and an accepted append of a 50-doc delta (half planted
-  * near-duplicates) against a seeded 2 500-doc text index, and a
+  * near-duplicates) against a seeded 2 500-doc text index, an append
+  * of a 50-doc delta the screen rejects whole (no more jobs than a
+  * screen, no file written), and a
   * 50-query top-k probe and a 50-vector append against a seeded
   * 1 000-vector embedding index. At this size each op's wall is its
   * job count times the per-job latency, so these ceilings are the
@@ -110,6 +112,16 @@ class JobCountSpec extends SparkSpec {
         docs ++= d.collect().map(r => r.getLong(0) -> r.getString(1))
           .filter(p => fresh(p._1))
       }
+      def rejectedAppend(): Unit = {
+        val d = local(Seq.fill(50)(
+          Row(freshId(), nearDup(docs(rnd.nextInt(docs.size))._2))), DocSchema)
+        // the stamp lists every live artifact dir's file count, bytes
+        // and newest mtime: equal stamps mean no part file landed
+        val before = Dedup.contentStamp(dedupRoot)
+        Dedup.appendAcceptedIndexed(dedupRoot, Dedup.readIndex(spark, dedupRoot),
+          d, "doc_id", "text")
+        assert(Dedup.contentStamp(dedupRoot) == before)
+      }
       def embProbe(): Unit = {
         val planted = Seq.fill(25) {
           val (id, v) = vecs(rnd.nextInt(vecs.size))
@@ -132,9 +144,10 @@ class JobCountSpec extends SparkSpec {
 
       val ops = Seq[(String, () => Unit, Int)](
         ("dedup screen", () => screen(), 20),
-        ("dedup accepted append", () => append(), 23),
+        ("dedup accepted append", () => append(), 8),
+        ("dedup all-rejected append", () => rejectedAppend(), 20),
         ("emb probe", () => embProbe(), 6),
-        ("emb append", () => embAppend(), 5))
+        ("emb append", () => embAppend(), 3))
       ops.foreach(_._2())
       val counts = ops.map { case (name, op, ceiling) =>
         (name, jobs(op()), ceiling)
@@ -143,6 +156,8 @@ class JobCountSpec extends SparkSpec {
         s"$name: $n jobs (ceiling $c)" }.mkString("; ")
       info(listing)
       assert(counts.forall { case (_, n, c) => n <= c }, listing)
+      val n = counts.map { case (name, k, _) => name -> k }.toMap
+      assert(n("dedup all-rejected append") <= n("dedup screen"), listing)
       assert(Dedup.readIndex(spark, dedupRoot).docs.count() == docs.size)
       assert(EmbIndex.readIndex(spark, embRoot).vecs.count() == vecs.size)
     } finally Dedup.deleteRecursively(dir)
