@@ -69,9 +69,8 @@ object Catalog {
   /** MERGE/upsert: apply an updates batch to the catalog — on matching
     * ids each column takes the update's value WHERE NON-NULL and keeps
     * the original otherwise (per-column coalesce, NOT whole-row
-    * replacement: an update row cannot null out a field — this is
-    * load-bearing for JobService, whose completion rows carry a NULL
-    * upload_time precisely so the insert-time value survives).
+    * replacement: an update row cannot null out a field, so an update
+    * with a NULL upload_time keeps the insert-time value).
     * Unmatched update rows insert, everything else passes through. At
     * 100 TB this is the per-batch catalog commit (one shuffle on id),
     * replacing the reference's row-at-a-time UPDATE+COMMIT. */

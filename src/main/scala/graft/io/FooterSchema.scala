@@ -14,7 +14,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * part file's footer in a one-task Spark job (~30–40 ms of scheduling
   * for a few KB of metadata), and the index families open three or
   * four artifacts per probe and read their append scratch back three
-  * times — three to six such jobs per serving-path op. Here the
+  * times — three to six such jobs per serving-path op — and the parquet
+  * control-plane catalog opens `users` once and `jobs` twice per
+  * `JobService.startEtl`. Here the
   * footer is read on the driver (one open of the file tail — the same
   * bytes the inference task reads) and the frame is opened with that
   * schema. The schema always comes from the

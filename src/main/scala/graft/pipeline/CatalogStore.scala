@@ -46,6 +46,7 @@ trait CatalogStore {
 final class ParquetCatalog(spark: SparkSession, catalogDir: String)
     extends CatalogStore {
   import JobService.{JobsSchema, UsersSchema}
+  import graft.io.FooterSchema
   import org.apache.hadoop.fs.Path
 
   private val usersPath = s"$catalogDir/users"
@@ -54,15 +55,18 @@ final class ParquetCatalog(spark: SparkSession, catalogDir: String)
   private def fsOf(p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Opens the table with its footer schema ([[graft.io.FooterSchema]]):
+    * no schema-inference job per read, and every part file of a table
+    * comes from one overwrite, so the footer read is the table's schema. */
   private def readOr(path: String, schema: StructType): DataFrame = {
     val live = new Path(path); val old = new Path(s"$path.old")
     val f = fsOf(live)
-    if (f.exists(live)) spark.read.parquet(path)
+    if (f.exists(live)) FooterSchema.read(spark, path)
     // mid-swap window or post-crash: the previous version IS the
     // table; reading it (not renaming — readers must not mutate under
     // a concurrent writer) keeps logins working instead of silently
     // answering from an empty frame
-    else if (f.exists(old)) spark.read.parquet(s"$path.old")
+    else if (f.exists(old)) FooterSchema.read(spark, s"$path.old")
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 

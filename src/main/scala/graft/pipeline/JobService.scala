@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.util.control.NonFatal
+
 /** The reference's control-plane API (app.py routes) re-expressed over
   * the engine's catalog tables — so a user of the reference can switch
   * wholesale:
@@ -35,6 +37,10 @@ final class JobService(spark: SparkSession, store: CatalogStore) {
   def this(spark: SparkSession, catalogDir: String) =
     this(spark, new ParquetCatalog(spark, catalogDir))
 
+  /** The last job id minted; None until the first startEtl seeds it
+    * from the catalog. Guarded by the service lock. */
+  private var lastJobId: Option[Long] = None
+
   def users: DataFrame = store.readUsers()
   def jobs: DataFrame = store.readJobs()
 
@@ -45,13 +51,16 @@ final class JobService(spark: SparkSession, store: CatalogStore) {
   def register(username: String, password: String,
       method: String = "sha256"): Boolean = synchronized {
     // synchronized: register/startEtl are read-modify-write cycles
-    // (max(id)+1 allocation + full-table rewrite from the read) — two
+    // (id allocation + full-table rewrite from the read) — two
     // unserialized calls would mint the same id and the second write
     // would drop the first's row (last-writer-wins). The lock makes
-    // THIS service single-writer, matching the CatalogStore contract
-    // (one writer per store, like the reference's DB session; a
-    // multi-process deployment uses JdbcCatalog where the database
-    // serializes).
+    // THIS service single-writer, like the reference's one DB session.
+    // Several services (or processes) may share one catalog, parquet or
+    // JDBC, as long as their calls take turns: each call rereads the
+    // table, and startEtl's insert write rejects a job id another
+    // service has already used. Calls that OVERLAP across services are
+    // not serialized by either store — each write replaces the whole
+    // table from its own read, so the later one drops the earlier row.
     val existing = users
     if (!existing.filter(col("username") === username).isEmpty) false
     else {
@@ -90,49 +99,77 @@ final class JobService(spark: SparkSession, store: CatalogStore) {
 
   /** app.py:141-189 — job-state machine around the ETL pipeline.
     * Returns the job id; the job ends Completed (with result_url) or
-    * Failed. */
+    * Failed.
+    *
+    * The catalog work is the reference's one INSERT and one UPDATE:
+    * the insert writes `jobs ∪ {Processing row}`, the completion writes
+    * `jobs` projected with the job's `status` and `result_url`
+    * replaced — every other column, `upload_time` included, passes
+    * through, so the insert-time value the reference never updates
+    * holds by construction, with no join.
+    *
+    * Job ids come from a driver-held counter, seeded from the catalog's
+    * `max(id)` and advanced only after the insert's write returns. The
+    * counter goes stale when another service on the same catalog has
+    * inserted since (see [[register]]); the insert write then fails on
+    * a stored id not below the new one — a check inside the write, no
+    * extra Spark job — and the call reseeds from `max(id)` once. */
   def startEtl(username: String, inPath: String, outPath: String,
       opts: Pipelines.EtlOptions = Pipelines.EtlOptions()): Long = {
     // fail like the reference's auth check (an error naming the input),
-    // not with an opaque NoSuchElementException off an empty head()
+    // not with an opaque NoSuchElementException off an empty head().
+    // No limit(1): usernames are unique, and a limit's incremental take
+    // runs a second job whenever the user is not in the first part file
     val userId = users.filter(col("username") === username)
-      .select("id").limit(1).collect().headOption
+      .select("id").collect().headOption
       .getOrElse(throw new IllegalArgumentException(
         s"startEtl: unknown user '$username'"))
       .getLong(0)
     val fileName = inPath.split('/').last
-    // insert (id allocation + Processing row) under the single-writer
-    // lock; the pipeline itself runs OUTSIDE it
-    val jobId = synchronized {
+    // The insert: `jobs ∪ {Processing row}` with id `last + 1`, or
+    // `max(id) + 1` with no counter. A stored id at or above the new
+    // one fails the write, so the live table is never replaced.
+    def insert(last: Option[Long]): Long = {
       val existing = jobs
-      val id = existing.agg(coalesce(max("id"), lit(0L))).head().getLong(0) + 1
-      store.writeJobs(existing.unionByName(
-        jobRow(id, fileName, userId, "Processing", None, insert = true)))
+      val id = last.getOrElse(
+        existing.agg(coalesce(max("id"), lit(0L))).head().getLong(0)) + 1
+      val row = spark.range(1).select(
+        lit(id).as("id"), lit(fileName).as("filename"),
+        lit("Processing").as("status"),
+        lit(null).cast("string").as("result_url"),
+        current_timestamp().as("upload_time"),
+        lit(userId).as("user_id"))
+      store.writeJobs(existing
+        .withColumn("id", when(col("id") >= id,
+          raise_error(lit(s"startEtl: job id $id is already taken")))
+          .otherwise(col("id")))
+        .unionByName(row))
+      id
+    }
+    // under the service lock; the pipeline itself runs OUTSIDE it. The
+    // counter is cleared until a write returns, and only a failure of
+    // the cached counter is retried, reseeded from `max(id)`.
+    val jobId = synchronized {
+      val last = lastJobId
+      lastJobId = None
+      val id =
+        try insert(last)
+        catch { case NonFatal(_) if last.isDefined => insert(None) }
+      lastJobId = Some(id)
       id
     }
     val ok = Pipelines.processData(spark, inPath, outPath, opts)
-    val done =
-      if (ok) jobRow(jobId, fileName, userId, "Completed", Some(outPath),
-        insert = false)
-      else jobRow(jobId, fileName, userId, "Failed", None, insert = false)
-    synchronized { store.writeJobs(graft.io.Catalog.mergeJobs(jobs, done)) }
+    val mine = col("id") === jobId
+    val url = if (ok) lit(outPath) else lit(null).cast("string")
+    synchronized {
+      store.writeJobs(jobs
+        .withColumn("status",
+          when(mine, lit(if (ok) "Completed" else "Failed"))
+            .otherwise(col("status")))
+        .withColumn("result_url", when(mine, url).otherwise(col("result_url"))))
+    }
     jobId
   }
-
-  /** One job row. The completion update (insert = false) carries a
-    * NULL upload_time so mergeJobs' coalesce KEEPS the insert-time
-    * value — the reference sets upload_time once at insert and never
-    * updates it (a fresh current_timestamp() here silently rewrote it
-    * to the completion time and reordered listJobs). */
-  private def jobRow(jobId: Long, fileName: String, userId: Long,
-      status: String, resultUrl: Option[String], insert: Boolean) =
-    spark.range(1).select(
-      lit(jobId).as("id"), lit(fileName).as("filename"),
-      lit(status).as("status"),
-      resultUrl.map(lit(_)).getOrElse(lit(null).cast("string")).as("result_url"),
-      (if (insert) current_timestamp()
-       else lit(null).cast("timestamp")).as("upload_time"),
-      lit(userId).as("user_id"))
 
   /** app.py:194-208 — history listing: desc sort, 5-col projection,
     * formatted timestamp. */

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import graft.pipeline.{JobService, ParquetCatalog}
 import graft.sim.EmbIndex
 import graft.text.Dedup
 import org.apache.spark.GraftTestBus
@@ -12,7 +13,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
-/** Pins the number of Spark jobs each index-serving op runs: a dedup
+/** Pins the number of Spark jobs each serving-path op runs.
+  *
+  * Index serving: a dedup
   * screen and an accepted append of a 50-doc delta (half planted
   * near-duplicates) against a seeded 2 500-doc text index, an append
   * of a 50-doc delta the screen rejects whole (no more jobs than a
@@ -22,7 +25,11 @@ import org.apache.spark.sql.types._
   * job count times the per-job latency, so these ceilings are the
   * deterministic half of the serving path's cost. Each op runs once
   * unmeasured first (manifest caches, codegen), then once counted,
-  * both on fresh inputs so no memo of a previous delta applies. */
+  * both on fresh inputs so no memo of a previous delta applies.
+  *
+  * Control plane: `JobService.startEtl` on a 200-row CSV upload and a
+  * `listJobs` poll over a parquet catalog of three users. Their catalog
+  * work must not grow with the number of jobs already recorded. */
 class JobCountSpec extends SparkSpec {
 
   private val Vocab = Array("batch", "part", "spark", "line", "column",
@@ -160,6 +167,40 @@ class JobCountSpec extends SparkSpec {
       assert(n("dedup all-rejected append") <= n("dedup screen"), listing)
       assert(Dedup.readIndex(spark, dedupRoot).docs.count() == docs.size)
       assert(EmbIndex.readIndex(spark, embRoot).vecs.count() == vecs.size)
+    } finally Dedup.deleteRecursively(dir)
+  }
+
+  test("control-plane ops stay within their Spark job ceilings at any history") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobcount_etl")
+    try {
+      val in = dir.resolve("upload.csv")
+      java.nio.file.Files.write(in, ("doc_id,review,rating\n" +
+        (0 until 200).map(i => s"$i,${text()},${1 + i % 5}\n").mkString)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val svc = new JobService(spark,
+        new ParquetCatalog(spark, dir.resolve("catalog").toString))
+      // three registers leave `users` in several part files: the
+      // startEtl lookup of "u" must not cost a job per file it misses
+      Seq("u", "v", "w").foreach(n => assert(svc.register(n, "pw")))
+      var outs = 0
+      def startEtl(): Long = {
+        outs += 1
+        svc.startEtl("u", in.toString, dir.resolve(s"out_$outs").toString)
+      }
+      def listJobs(): Unit = { svc.listJobs().collect(); () }
+
+      // the first startEtl seeds the id counter and warms codegen;
+      // every later one is counted, so the count per job can be read
+      // at each history length
+      startEtl(); listJobs()
+      val perJob = (1 to 30).map(_ => jobs(startEtl()))
+      val listing = jobs(listJobs())
+      val msg = s"startEtl jobs after 1..30 prior jobs: ${perJob.mkString(",")}; " +
+        s"listJobs: $listing jobs"
+      info(msg)
+      assert(perJob.forall(_ <= 7) && listing <= 3, msg)
+      assert(perJob.head == perJob.last, msg)
+      assert(svc.jobs.filter("status = 'Completed'").count() == 31)
     } finally Dedup.deleteRecursively(dir)
   }
 }

@@ -1,6 +1,11 @@
 package graft
 
-import graft.pipeline.JobService
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+
+import graft.pipeline.{CatalogStore, JdbcCatalog, JobService, ParquetCatalog}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** End-to-end control-plane flow: the reference's API surface
@@ -8,6 +13,35 @@ import org.apache.spark.sql.functions._
   * against the engine. */
 class JobServiceSpec extends SparkSpec {
   import spark.implicits._
+
+  private def tmp(tag: String) =
+    s"${sys.props("java.io.tmpdir")}/graft_test_${tag}_${System.nanoTime()}"
+
+  /** A small review upload at `path`; returns the path. */
+  private def upload(path: String): String = {
+    Seq(("great fast product", 5), ("slow broken thing", 1), ("fine", 3))
+      .toDF("review", "rating").write.option("header", "true").csv(path)
+    path
+  }
+
+  /** Forwards the four store calls and records, per `writeJobs`, the
+    * jobs table by id as that write left it. The table is read back
+    * after the write rather than collected from the frame before it:
+    * a second execution of the frame would evaluate the insert's
+    * `current_timestamp()` again and record an instant never stored. */
+  private final class RecordingCatalog(inner: CatalogStore) extends CatalogStore {
+    val jobWrites = mutable.ArrayBuffer.empty[Map[Long, Row]]
+    override def readUsers(): DataFrame = inner.readUsers()
+    override def readJobs(): DataFrame = inner.readJobs()
+    override def writeUsers(df: DataFrame): Unit = inner.writeUsers(df)
+    override def writeJobs(df: DataFrame): Unit = {
+      inner.writeJobs(df)
+      jobWrites += byId(inner.readJobs())
+    }
+  }
+
+  private def byId(jobs: DataFrame): Map[Long, Row] =
+    jobs.collect().map(r => r.getAs[Long]("id") -> r).toMap
 
   test("register/login/startEtl/listJobs full flow incl. failure path") {
     val base = s"${sys.props("java.io.tmpdir")}/graft_test_jobsvc_${System.nanoTime()}"
@@ -83,12 +117,98 @@ class JobServiceSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$base/catalog/users.old")))
   }
 
+  test("startEtl writes jobs twice: a Processing insert, then only that " +
+      "row's completion, upload_time untouched") {
+    val base = tmp("jobwrites")
+    val store = new RecordingCatalog(new ParquetCatalog(spark, s"$base/catalog"))
+    val svc = new JobService(spark, store)
+    assert(svc.register("ann", "pw"))
+    val in = upload(s"$base/upload/reviews.csv")
+
+    def run(inPath: String, status: String, url: Option[String]): Unit = {
+      val prior = byId(svc.jobs)
+      store.jobWrites.clear()
+      val id = svc.startEtl("ann", inPath, s"$base/out_$status")
+      assert(store.jobWrites.size == 2, s"$status: writeJobs calls")
+      val Seq(inserted, completed) = store.jobWrites.toSeq
+      // the insert adds exactly one Processing row
+      assert(inserted - id == prior)
+      val row = inserted(id)
+      assert(row.getAs[String]("status") == "Processing")
+      assert(row.getAs[String]("result_url") == null)
+      // the completion changes only that row's status and result_url
+      assert(completed - id == prior)
+      val done = completed(id)
+      assert(done.getAs[String]("status") == status)
+      assert(Option(done.getAs[String]("result_url")) == url)
+      for (c <- Seq("id", "filename", "upload_time", "user_id"))
+        assert(done.getAs[Any](c) == row.getAs[Any](c), s"$status: $c")
+    }
+    run(in, "Completed", Some(s"$base/out_Completed"))
+    run(s"$base/nonexistent.csv", "Failed", None)
+  }
+
+  test("job ids run 1..n and stay unique when two services take turns " +
+      "on one catalog, parquet and JDBC") {
+    val stores = Seq[(String, String => CatalogStore)](
+      "parquet" -> (d => new ParquetCatalog(spark, s"$d/catalog")),
+      "jdbc" -> (d => new JdbcCatalog(spark, s"jdbc:derby:$d/db;create=true")))
+    for ((name, open) <- stores) {
+      val base = tmp(s"ids_$name")
+      val in = upload(s"$base/upload/reviews.csv")
+      val missing = s"$base/nonexistent.csv"
+      val a = new JobService(spark, open(base))
+      assert(a.register("kim", "pw"))
+      val ids = (1 to 3).map(i => a.startEtl("kim", in, s"$base/out_$i"))
+      assert(ids == Seq(1L, 2L, 3L), name)
+      // b seeds from max(id); after b's insert a's counter (3) and then
+      // b's (4) are stale, and each must reseed instead of reusing an id
+      val b = new JobService(spark, open(base))
+      assert(b.startEtl("kim", missing, s"$base/out_4") == 4L, name)
+      assert(a.startEtl("kim", in, s"$base/out_5") == 5L, name)
+      assert(b.startEtl("kim", missing, s"$base/out_6") == 6L, name)
+      assert(a.startEtl("kim", in, s"$base/out_7") == 7L, name)
+      val stored = a.jobs.select("id", "status", "result_url").collect()
+        .map(r => (r.getLong(0), r.getString(1), Option(r.getString(2))))
+        .sortBy(_._1).toSeq
+      val expected = (1L to 7L).map { i =>
+        if (i == 4 || i == 6) (i, "Failed", None)
+        else (i, "Completed", Some(s"$base/out_$i"))
+      }
+      assert(stored == expected, name)
+    }
+  }
+
+  test("parquet jobs table survives a crash between the two swap renames") {
+    // mirror of the users case: the live `jobs` path is missing and
+    // `jobs.old` holds the only copy. listJobs must answer from `.old`,
+    // and the next startEtl — from a restarted service, which seeds its
+    // id counter from `.old` — must keep every prior row.
+    val base = tmp("jobscrash")
+    val svc = new JobService(spark, s"$base/catalog")
+    assert(svc.register("lee", "pw"))
+    val in = upload(s"$base/upload/reviews.csv")
+    val first = svc.startEtl("lee", in, s"$base/out1")
+    val second = svc.startEtl("lee", in, s"$base/out2")
+    val jobsPath = Paths.get(s"$base/catalog/jobs")
+    val oldPath = Paths.get(s"$base/catalog/jobs.old")
+    Files.move(jobsPath, oldPath)
+    def listed() = svc.listJobs().collect().map(r =>
+      r.getAs[Long]("id") -> r.getAs[String]("status")).toSeq
+    assert(listed() == Seq(second -> "Completed", first -> "Completed"))
+    val third = new JobService(spark, s"$base/catalog")
+      .startEtl("lee", in, s"$base/out3")
+    assert(third == second + 1)
+    assert(listed() ==
+      Seq(third -> "Completed", second -> "Completed", first -> "Completed"))
+    assert(Files.exists(jobsPath) && !Files.exists(oldPath))
+  }
+
   test("completion merge keeps the insert-time upload_time (reference parity)") {
-    // the mechanism startEtl relies on: a completion update carrying a
-    // NULL upload_time must coalesce to the ORIGINAL insert value —
-    // the reference sets upload_time once at insert and never updates
-    // it (a fresh current_timestamp() in the update row would rewrite
-    // it to the completion time and reorder listJobs)
+    // Catalog.mergeJobs' contract (the catalog_merge query): an update
+    // carrying a NULL upload_time must coalesce to the ORIGINAL insert
+    // value — the reference sets upload_time once at insert and never
+    // updates it.
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
     val jobs = Seq((1L, "f.csv", "Processing", null: String, t0, 7L))
       .toDF("id", "filename", "status", "result_url", "upload_time", "user_id")
