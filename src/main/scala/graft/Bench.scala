@@ -110,17 +110,7 @@ object Bench {
     // + LPT schedule: wall 58s @14 → 52s @20 → 50.5s @26 with growing
     // per-query inflation past 20.
     val pool = sys.env.getOrElse("SPARK_GRAFT_BENCH_POOL", "20").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // FAIR so concurrent queries share executor slots instead of
-      // queueing whole jobs FIFO behind each other.
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.pool(cpus)
 
     // JVM/codegen warm-up: touch every table's footer + data pages and
     // run one tiny agg+join+window so the codegen/classload paths the

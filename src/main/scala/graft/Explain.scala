@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan of the
   * named queries (or a default set of scale-critical ones) so plan
   * properties — PushedFilters, BroadcastHashJoin, TakeOrderedAndProject,
@@ -66,13 +64,7 @@ object Explain {
         "pq_index_query", "dedup_index_erase", "pq_index_erase",
         "pq_index_repair", "emb_index_query", "mm_video_dedup",
         "mm_audio_dedup")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.single("4")
     val qs = SparkEntry.queries
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,28 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for a DuckDB compare of every answer.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name...] — with names,
+  * only those queries are dumped (fast iteration on a few queries);
+  * oracle_sql.json is always the full map, and tools/check.py compares
+  * only the dumped directories. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = args(0)
+    val outDir = args(1)
+    val names = args.drop(2).toSet
+    val queries = SparkEntry.queries
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    val spark = Sessions.single(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
-    // local-iteration hook: SPARK_GRAFT_ONLY=q1,q2 restricts the dump
-    // (unset for the driver's full run)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
+    val selected =
+      if (names.isEmpty) queries else queries.filter(kv => names(kv._1))
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

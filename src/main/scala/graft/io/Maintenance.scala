@@ -36,7 +36,7 @@ package graft.io
   * Crash contract: every step is individually crash-safe (create-only
   * generations, marker-committed model generations), so a crash
   * between any two steps leaves a serving-correct index and a re-run
-  * of the pass completes the remaining work — [[graft.MaintainAb]]
+  * of the pass completes the remaining work — `graft.MaintenanceSpec`
   * injects a crash after each step and pins re-run-heals /
   * third-run-no-op for all four families.
   */

@@ -97,7 +97,7 @@ object Csv {
     *
     * repartition(1), NOT coalesce(1): coalesce collapses the WHOLE
     * upstream plan onto the one write task — measured at the 100×
-    * corpus (PipelineStageAb, SERIAL.md): the full-etl transform runs
+    * corpus (SERIAL.md stage decomposition): the full-etl transform runs
     * 1.25 s on 32 threads but 25.8 s when coalesce(1) single-threads
     * it into the result write. repartition inserts a 1-partition
     * shuffle instead, so the transform keeps its parallelism and only

@@ -257,7 +257,7 @@ object MmIndex {
     * no trained model, so the regeneration column is structurally
     * absent (always None — a fingerprint kernel change would be a new
     * index, not a maintenance step). Step order / crash matrix:
-    * [[graft.io.MaintenanceReport]] and [[graft.MaintainAb]]. */
+    * [[graft.io.MaintenanceReport]] and `graft.MaintenanceSpec`. */
   def maintainIndex(s: SparkSession, root: String): graft.io.MaintenanceReport = {
     val hasTomb = graft.text.Dedup.artifactExists(root, "tomb") &&
       s.read.parquet(graft.text.Dedup.livePath(root, "tomb").toString)

@@ -502,7 +502,7 @@ object MultimodalQueries {
     // compact pending erasure tombstones → distinct-rewrite replayed
     // appends; signatures have no trained model, so the regeneration
     // column is structurally absent — graft.io.MaintenanceReport pins
-    // the step order, graft.MaintainAb the crash matrix). The staged
+    // the step order, graft.MaintenanceSpec the crash matrix). The staged
     // artifact is a damaged index: the % 5 = 0 delta's append REPLAYED
     // end-to-end (two signature rows per delta object), the % 10 = 1
     // members erased but not yet purged — healed by one maintainIndex

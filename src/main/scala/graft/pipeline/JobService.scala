@@ -83,13 +83,15 @@ final class JobService(spark: SparkSession, store: CatalogStore) {
     * engine's sha256 scheme (verified by the SAME Exprs.checkPassword
     * expression register writes with — one source of truth) and
     * werkzeug scrypt hashes (a migrated reference users table
-    * verifies as-is). */
+    * verifies as-is). No limit(1), as in [[startEtl]]'s lookup:
+    * usernames are unique, and a limit's incremental take runs a second
+    * job whenever the user is not in the first part file of `users`. */
   def login(username: String, password: String): Boolean = {
     val row = users.filter(col("username") === username)
       .select(col("password"),
         Exprs.checkPassword(lit(password), lit(username), col("password"))
           .as("sha_ok"))
-      .limit(1).collect().headOption
+      .collect().headOption
     row.exists { r =>
       val stored = r.getString(0)
       if (stored.startsWith("scrypt:")) Scrypt.verify(stored, password)

@@ -64,7 +64,7 @@ object PipelineQueries {
       }),
 
     // STAGE DECOMPOSITION of pipeline_full_etl as a standing artifact
-    // (the PipelineStageAb harness promoted to a registered pair —
+    // (the stage-timing harness promoted to a registered pair —
     // the decomposition that caught the coalesce(1) scale defect in
     // r11 is now queryable, not a one-off run). Per stage: ordinal,
     // name, exact row count. This twin is the HASH GATE (counts are
@@ -156,9 +156,10 @@ object PipelineQueries {
     * pipeline runs once however the driver orders them. Values are
     * driver-side tuples (not DataFrames), so a plain map suffices.
     *
-    * Stages mirror graft.PipelineStageAb (the harness this pair
-    * promotes): upload = documents → single-object CSV; read_infer =
-    * schema-inference read of the upload (wall = the forced scan);
+    * Stages mirror the stage-timing harness this pair promotes
+    * (SERIAL.md "pipeline_full_etl decomposed by stage"): upload =
+    * documents → single-object CSV; read_infer = schema-inference
+    * read of the upload (wall = the forced scan);
     * transform = cleanAi (dropna-any) + demo over the read; result =
     * single-object CSV of the transform; readback = inference read of
     * the result. Counts are exact (|documents| through the CSV

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions.call_function
   *  - [[GraftFunctions.register]] — per-session, idempotent; what the
   *    registered queries use.
   *  - [[GraftExtensions]] — `SparkSessionExtensions` hook for
-  *    production sessions:
-  *    `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  *    production sessions: a session builder's
+  *    `withExtensions(new GraftExtensions)` or
   *    `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 object GraftFunctions {

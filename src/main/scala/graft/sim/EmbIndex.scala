@@ -473,7 +473,7 @@ object EmbIndex {
     * if a torn/replayed append violated the 2-postings-per-vector
     * invariant, rebuild if the live count resolves a different width
     * than the manifest's. Step order / source contract / crash matrix:
-    * [[graft.io.MaintenanceReport]] and [[graft.MaintainAb]]. */
+    * [[graft.io.MaintenanceReport]] and `graft.MaintenanceSpec`. */
   def maintainIndex(s: SparkSession, root: String,
       source: DataFrame): graft.io.MaintenanceReport = {
     val mr = graft.io.ModelGens.liveRoot(root)

@@ -459,7 +459,7 @@ object EmbIndexQueries {
     // torn or replayed appends (duplicate vecs rows physically
     // deduplicated — EmbIndex.repairIndex's double-retry contract) →
     // rebuild if the live count resolves a different width;
-    // graft.io.MaintenanceReport pins the step order, graft.MaintainAb
+    // graft.io.MaintenanceReport pins the step order, graft.MaintenanceSpec
     // the crash matrix). The staged artifact is a damaged index: a
     // twentieth-sized build at the tight maxBucket = 4 guard, the rest
     // appended at that frozen width, one slice REPLAYED end-to-end,

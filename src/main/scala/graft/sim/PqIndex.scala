@@ -206,7 +206,7 @@ object PqIndex {
     * vector the corpus of record no longer has), refresh if the live
     * distortion drifted past num/den × the build-time baseline. Step
     * order / source contract / crash matrix:
-    * [[graft.io.MaintenanceReport]] and [[graft.MaintainAb]]. */
+    * [[graft.io.MaintenanceReport]] and `graft.MaintenanceSpec`. */
   def maintainIndex(s: SparkSession, root: String, source: DataFrame,
       num: Long = 11, den: Long = 10): graft.io.MaintenanceReport = {
     val mr = liveModelRoot(root)

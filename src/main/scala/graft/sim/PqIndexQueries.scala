@@ -206,7 +206,7 @@ object PqIndexQueries {
     // distortion drifted past the build-time baseline;
     // graft.io.MaintenanceReport pins the step order — compact FIRST,
     // so repair is never asked to re-encode a vector the corpus of
-    // record no longer has — and graft.MaintainAb the crash matrix).
+    // record no longer has — and graft.MaintenanceSpec the crash matrix).
     // The staged artifact is a damaged index: the % 5 = 0 delta
     // appended then its first two subspaces RETRIED (the partial
     // write a crash mid-append leaves), the % 10 = 1 members erased

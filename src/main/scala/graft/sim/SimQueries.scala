@@ -493,7 +493,8 @@ object SimQueries {
       (s, d) => Similarity.bandRecallReport(embeddings(s, d), 1, 5)),
 
     // density health of the banded sign-LSH family as a queryable
-    // artifact (the BandWidthAb saturation diagnostic, registered):
+    // artifact (the band-width A/B saturation diagnostic of SERIAL.md,
+    // registered):
     // per band — the RESOLVED auto width (corpus-count-derived, so
     // this row documents what dedup_embedding_banded/cluster_dbscan/
     // sim_hard_negatives actually ran), bucket count, max occupancy,

@@ -391,6 +391,10 @@ object Similarity {
     * memo wraps exactly this). */
   private[graft] def bandedCandidateStatsUncached(emb: DataFrame,
       maxBucket: Int, bits: Int): DataFrame = {
+    // registered before the first native call below: the select
+    // analyzes eagerly, so a session no earlier query registered
+    // (sim_hard_negatives first in a fresh Verify) fails to resolve
+    graft.plans.GraftFunctions.register(emb.sparkSession)
     // r17: native QuantizeLongs kernel (codegen, no interpreted
     // per-element lambda; bit-parity pinned by QuantizeLongsExprSpec)
     val qe = call_function("quantize_longs", col("embedding"),
@@ -408,7 +412,6 @@ object Similarity {
     // kernels (graft.plans.DotLongs — whole-stage codegen, zero
     // temporary arrays) instead of the interpreted zip_with/aggregate
     // fold; wrap-addition associativity keeps them bit-identical.
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     cand
       .withColumn("dot", call_function("dot_longs", col("qa"), col("qb")))
       .withColumn("na", call_function("dot_longs", col("qa"), col("qa")))
@@ -596,6 +599,7 @@ object Similarity {
     val bits = resolveBandBits(emb, bandBits, maxBucket)
     val assigned = Clustering.kmeansFull(emb, kCells)._1
       .select(col("vec_id"), col("cluster"))
+    graft.plans.GraftFunctions.register(emb.sparkSession)
     val qe = call_function("quantize_longs", col("embedding"),
       lit(1e6), lit(0L))
     val h = emb.select(col("vec_id"), qe.as("qe"),
@@ -611,7 +615,6 @@ object Similarity {
         "key")
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b", "qa", "qb").distinct()
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val dup = cand
       .withColumn("dot", call_function("dot_longs", col("qa"), col("qb")))
       .withColumn("na", call_function("dot_longs", col("qa"), col("qa")))

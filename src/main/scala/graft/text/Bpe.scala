@@ -149,9 +149,8 @@ object Bpe {
     * pair's support, not the vocabulary). The two spellings are
     * merge-for-merge and word-table bit-identical (exact integer
     * counts, same n-desc/l-asc/r-asc tie-break, zero-count rows
-    * dropped so the argmax never sees a dead pair) — BpeSpec and the
-    * BpeAb main pin the equivalence, so the switch is a pure cost
-    * decision. */
+    * dropped so the argmax never sees a dead pair) — BpeSpec pins the
+    * equivalence, so the switch is a pure cost decision. */
   def learn(docs: DataFrame, nMerges: Int): Learned = {
     val words = wordTypes(docs)
       .localCheckpoint() // |vocab| rows; iterations must not re-scan the corpus

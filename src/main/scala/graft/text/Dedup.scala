@@ -925,7 +925,7 @@ object Dedup {
     * rebuild if the caller's density posture resolves a different band
     * geometry. Step order, source contract (erased records already
     * removed from `source`), and crash matrix are documented on
-    * [[graft.io.MaintenanceReport]]; [[graft.MaintainAb]] injects a
+    * [[graft.io.MaintenanceReport]]; `graft.MaintenanceSpec` injects a
     * crash after each step and pins re-run-heals / third-run-no-op.
     * Each gate is one cheap detector (tomb limit-1 count, map-side
     * per-bucket partial probe, the invariant scan repair already
@@ -974,9 +974,9 @@ object Dedup {
     * driver-side LOAD router (estimated direct-pairing pairs over
     * hot buckets vs [[CascadeBudget]]) assembles the cascade only
     * where direct pairing would explode, so the common-density probe
-    * keeps the direct plan's stage count (graft.DedupIncAb
-    * triangulates direct ≡ guard-free ≡ inline ≡ forced-cascade at
-    * the 100× corpus).
+    * keeps the direct plan's stage count (DedupSpec pins direct ≡
+    * guard-free ≡ inline ≡ forced-cascade; SERIAL.md records the
+    * same at the 100× corpus).
     *
     * Scale shape: the recurring per-delta cost touches the index's
     * PRE-DERIVED probe artifacts and the delta ONLY — raw base text is
@@ -1059,15 +1059,6 @@ object Dedup {
     * fetch jobs run OUTSIDE the memo lock). */
   private val probeMemo = new graft.plans.PlanMemo[
     (String, String, Int, Int, Int, Long, String), ProbeVerdict](_ => Seq())
-
-  /** OBSERVABILITY ONLY (A/B mains, specs): the last probe build's
-    * router verdict — (picked the cascade?, estimated direct-pairing
-    * load). Never consulted by the probe itself; results are
-    * router-invariant by construction, this just lets evidence runs
-    * record WHICH plan the router chose and at what estimated load
-    * without duplicating the router's arithmetic outside the probe. */
-  @volatile private[graft] var lastRouterDecision:
-    Option[(Boolean, Double)] = None
 
   def incrementalAcceptIndexed(index: DedupIndex, delta: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.7,
@@ -1218,7 +1209,6 @@ object Dedup {
       }
     val useCascade = verdict.hot.nonEmpty &&
       !(verdict.load <= cascadeBudget.toDouble)
-    lastRouterDecision = Some((useCascade, verdict.load))
     // screened-out docs leave BOTH probe sides. Ledger membership is
     // decided on the driver, by id under Spark's ordering of the id
     // type — the anti-join-by-id semantics, null ids never matching.

@@ -359,7 +359,7 @@ object DedupQueries {
     // ([[Dedup.maintainIndex]]: compact pending erasures / sidecar
     // partials → repair torn or replayed appends → re-geometry if the
     // density posture moved; graft.io.MaintenanceReport pins the step
-    // order and why, graft.MaintainAb the crash matrix). The staged
+    // order and why, graft.MaintenanceSpec the crash matrix). The staged
     // artifact is a damaged index: one slice's append REPLAYED
     // end-to-end (two ix rows and 2×Bands postings per % 20 = 5 doc),
     // the % 10 = 1 members erased but not yet purged, partials from

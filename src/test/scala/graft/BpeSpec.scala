@@ -82,7 +82,8 @@ class BpeSpec extends SparkSpec {
     // re-aggregates every word each iteration. Exact integer counts +
     // the same tie-break must make them bit-identical — learn()
     // switches between them on the measured type count, so the switch
-    // is a pure cost decision. BpeAb re-checks at bench scale, n=64.
+    // is a pure cost decision. SERIAL.md records the same identity at
+    // bench scale, n=64.
     val docs = io.Tables.documents(spark, sf0001).select("doc_id", "text")
     val inc = Bpe.learnDelta(docs, 16)
     val rec = Bpe.learnRecount(docs, 16)

@@ -230,14 +230,24 @@ class DedupSpec extends SparkSpec {
       "doc_id", "text", dir)
     val ix = Dedup.readIndex(spark, dir)
     val delta = docs.filter(col("doc_id") % 5 === 0)
-    def verdicts(maxBucket: Int) =
-      Dedup.lookupReport(ix, delta, "doc_id", "text", maxBucket = maxBucket)
+    def verdicts(batch: org.apache.spark.sql.DataFrame, maxBucket: Int) =
+      Dedup.lookupReport(ix, batch, "doc_id", "text", maxBucket = maxBucket)
         .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
-    val guarded = verdicts(1)           // both cascade stages exercised
-    val guardFree = verdicts(Int.MaxValue) // no bucket ever hot
+    val guarded = verdicts(delta, 1)           // both cascade stages exercised
+    val guardFree = verdicts(delta, Int.MaxValue) // no bucket ever hot
     assert(guarded == guardFree)
     // the fixture is two-sided and the cascade genuinely fired
     assert(guarded.values.exists(identity) && guarded.values.exists(!_))
+    // a verbatim replica mass (every delta doc R times under fresh ids
+    // id·R + r, the crawl-spam shape) collapses per fingerprint before
+    // probing: no verdict row is lost, and every replica gets its
+    // source doc's verdict
+    val r = 4
+    val replicas = verdicts(delta.crossJoin(spark.range(r.toLong).toDF("__r"))
+      .select((col("doc_id") * r + col("__r")).as("doc_id"), col("text")), 100)
+    assert(replicas.size == guardFree.size * r)
+    val drift = replicas.filter { case (id, v) => guardFree(id / r) != v }
+    assert(drift.isEmpty, s"replica verdict drift: ${drift.take(5)}")
   }
 
   test("multi-day cycle: appending accepted rows' index entries composes") {
@@ -683,6 +693,13 @@ class DedupSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(gotCascade == want,
       s"cascade-only=${(gotCascade -- want).toSeq.sorted} oracle-only=${(want -- gotCascade).toSeq.sorted}")
+    // and so is the guard-free plan, where no bucket is ever hot
+    val gotGuardFree = Dedup.incrementalAcceptIndexed(
+      Dedup.readIndex(spark, dir), deltaRows.toDF("doc_id", "text"),
+      "doc_id", "text", maxBucket = Int.MaxValue)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(gotGuardFree == want,
+      s"guard-free-only=${(gotGuardFree -- want).toSeq.sorted} oracle-only=${(want -- gotGuardFree).toSeq.sorted}")
   }
 
   test("band geometry is a manifest parameter: rebuild at 8×8 drops " +

@@ -188,6 +188,11 @@ class JobCountSpec extends SparkSpec {
         svc.startEtl("u", in.toString, dir.resolve(s"out_$outs").toString)
       }
       def listJobs(): Unit = { svc.listJobs().collect(); () }
+      // login of the last-registered user: one job however many part
+      // files `users` spans (the first call warms codegen)
+      assert(svc.login("w", "pw"))
+      val loginJobs = jobs(assert(svc.login("w", "pw")))
+      assert(!svc.login("w", "wrong"))
 
       // the first startEtl seeds the id counter and warms codegen;
       // every later one is counted, so the count per job can be read
@@ -196,9 +201,9 @@ class JobCountSpec extends SparkSpec {
       val perJob = (1 to 30).map(_ => jobs(startEtl()))
       val listing = jobs(listJobs())
       val msg = s"startEtl jobs after 1..30 prior jobs: ${perJob.mkString(",")}; " +
-        s"listJobs: $listing jobs"
+        s"listJobs: $listing jobs; login: $loginJobs jobs"
       info(msg)
-      assert(perJob.forall(_ <= 7) && listing <= 3, msg)
+      assert(perJob.forall(_ <= 7) && listing <= 3 && loginJobs <= 1, msg)
       assert(perJob.head == perJob.last, msg)
       assert(svc.jobs.filter("status = 'Completed'").count() == 31)
     } finally Dedup.deleteRecursively(dir)

@@ -360,7 +360,7 @@ class PlanShapeSpec extends SparkSpec {
   // stream_window_agg is excluded by nature — its fn runs the stream
   // and returns a memory sink scan; its load-bearing property (bounded
   // watermark state) is pinned behaviorally in StreamStateStoreSpec
-  // and the StreamStateProbe plateau tables instead.
+  // and the SERIAL.md state-eviction plateau tables instead.
 
   test("agg_cube is ONE pass: Expand + partial+final agg, single scan") {
     val p = plan("agg_cube")

@@ -197,7 +197,7 @@ class SimilaritySpec extends SparkSpec {
     // guard, the probe is blind. bits=4 → band0 (dims 1-4) has 8
     // patterns × 30 ≤ 40 (kept), band1 (dims 5-8) stays one saturated
     // bucket of 240 — candidates = within-group pairs = 8·C(30,2)
-    // = 3480. The miniature of the 100× BandWidthAb table.
+    // = 3480. The miniature of the SERIAL.md 100× band-width A/B table.
     val emb = (0 until 240).map { i =>
       val g = i % 8
       val d13 = (0 until 3).map(b => if (((g >> b) & 1) == 1) 1.0f else -1.0f)

@@ -16,7 +16,7 @@ dedup_incremental / dedup_index_erase oracles complete and the engine
 is externally hash-gated at 100x scale in the duplication mode that
 matters. It is also the density where the probe's hot-bucket load
 estimate genuinely exceeds CascadeBudget, so the cost router picks the
-cascade by itself (DedupIncAb records it).
+cascade by itself (SERIAL.md records it).
 
 doc_id offsets are multiples of 1e5, so doc_id % 5 / % 10 population
 splits are replica-invariant (a delta doc's replicas are all delta).
