@@ -5,8 +5,11 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: runMain graft.Verify <sfDir> <outDir> [name...] — with names,
   * only those queries are dumped (fast iteration on a few queries);
-  * oracle_sql.json is always the full map, and tools/check.py compares
-  * only the dumped directories. */
+  * oracle_sql.json is always the full map. The names it was asked to
+  * dump go to selected.txt, one a line, before any query runs, and
+  * tools/check.py fails on a listed name without a directory. A query
+  * that throws leaves no directory and makes Verify exit non-zero
+  * once the rest are dumped. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -19,11 +22,18 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val selected =
       if (names.isEmpty) queries else queries.filter(kv => names(kv._1))
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    Files.writeString(Paths.get(s"$outDir/selected.txt"),
+      selected.keys.map(_ + "\n").mkString)
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // no partial or earlier run's answer may stand in for it
+        graft.text.Dedup.deleteRecursively(Paths.get(s"$outDir/$name"))
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -62,5 +72,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -110,12 +110,16 @@ object GraftFunctions {
       }
     }))
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
+  /** Idempotent per-session registration: a name the session already
+    * resolves (an earlier call, or [[GraftExtensions]]) is left as is,
+    * so the per-probe calls replace nothing. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     Functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 
   /** cosine_sim as a Column (requires register(spark) on the session
     * that analyzes the plan). */

@@ -197,37 +197,86 @@ object EmbIndex {
   }
 
   /** Batched top-k serving: every row of `queries` is answered from
-    * the persisted artifact in ONE probe plan — the multi-query
-    * analogue of [[indexTopK]], shared by stream-serving micro-batches
-    * and offline batch scoring. Per query: candidates from its two
-    * band buckets at the MANIFEST width, ranked by the µ-rounded
-    * cosine over the integer record of truth; the literal rank bound
-    * plans a WindowGroupLimit (per-query top-k pruning below the
-    * window). The query side is the bounded micro-batch → broadcast;
-    * the postings/vecs side streams. */
+    * the persisted artifact — the multi-query analogue of [[indexTopK]],
+    * shared by stream-serving micro-batches and offline batch scoring.
+    * Per query: candidates from its two band buckets at the MANIFEST
+    * width (itself excluded by id), ranked by the µ-rounded cosine over
+    * the integer record of truth, `(cos_e6 DESC NULLS LAST, vec_id)`,
+    * at most `k` rows per query as `(q_id, rank, vec_id, cos_e6)`.
+    *
+    * Shape: the query side is a bounded batch, so its [[buildRows]] are
+    * collected once and everything query-sized happens on the driver.
+    * The index contributes through two fetch jobs: the postings of the
+    * queries' band keys, then the `(vec_id, qe, na)` rows of the
+    * candidates; each key set reaches the tasks as a broadcast
+    * variable (never a literal list in the plan). The driver pairs the
+    * fetched rows with their queries under the join semantics — a null
+    * id matches nothing, a candidate counts once per query however many
+    * shared buckets or orphan postings name it, and every `vecs` row of
+    * a candidate scores (a duplicate row from a retried append ranks
+    * twice). The dot and the rounding are the Column expressions below,
+    * evaluated over the pairs as a local relation, so `cos_e6` is the
+    * SQL value bit for bit; the per-query rank runs on the driver and
+    * the result is a local relation. */
   def indexTopKBatch(ix: EmbeddingIndex, queries: DataFrame,
       k: Int): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val s = queries.sparkSession
     val q = buildRows(queries, ix.bits)
-      .select(col("vec_id").as("q_id"), col("qe").as("qe_q"),
-        col("na").as("na_q"), col("bands").as("q_bands"))
-    val qbk = q.select(col("q_id"), explode(col("q_bands")).as("bk"))
-    val cand = ix.postings.join(broadcast(qbk), Seq("bk"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select("q_id", "vec_id").distinct()
-    ix.vecs.join(cand, Seq("vec_id"))
-      .join(broadcast(q.select("q_id", "qe_q", "na_q")), Seq("q_id"))
+    val vecsAt = ix.vecs.select("vec_id", "qe", "na")
+    val outSchema = StructType(Seq(q.schema("vec_id").copy(name = "q_id"),
+      StructField("rank", LongType, nullable = false),
+      vecsAt.schema("vec_id"), StructField("cos_e6", LongType)))
+    def local(rows: Seq[Row], schema: StructType) =
+      s.createDataFrame(rows.asJava, schema)
+    // query rows by id (rows sharing an id share one candidate set)
+    val byQ = q.collect().toSeq.filterNot(_.isNullAt(0)).groupBy(_.get(0))
+    val qOf: Map[Row, Seq[Any]] = byQ.toSeq.flatMap { case (id, rs) =>
+      rs.filterNot(_.isNullAt(3)).flatMap(_.getSeq[Row](3)).map(_ -> id)
+    }.groupMap(_._1)(_._2)
+    if (qOf.isEmpty) return local(Nil, outSchema)
+    val sc = s.sparkContext
+    // fetch 1: the postings of the queries' buckets → distinct
+    // (query, candidate) pairs, the query itself excluded
+    val cand: Map[Any, Seq[Long]] =
+      graft.text.Dedup.withBroadcast(sc, qOf.keySet) { keys =>
+        val hit = udf((bk: Row) => bk != null && keys.value(bk))
+        ix.postings.filter(hit(col("bk"))).select("vec_id", "bk").collect()
+      }.toSeq.filterNot(_.isNullAt(0)).flatMap { r =>
+        val v = r.getLong(0)
+        qOf(r.getStruct(1)).filter(_ != v).map(_ -> v)
+      }.distinct.groupMap(_._1)(_._2)
+    if (cand.isEmpty) return local(Nil, outSchema)
+    // fetch 2: every vecs row of a candidate
+    val rowsOf: Map[Long, Seq[Row]] =
+      graft.text.Dedup.withBroadcast(sc, cand.values.flatten.toSet) { ids =>
+        val hit = udf((id: Long) => ids.value(id))
+        vecsAt.filter(hit(col("vec_id"))).collect()
+      }.toSeq.groupBy(_.getLong(0))
+    val pairs = for {
+      (id, vs) <- cand.toSeq; qr <- byQ(id); v <- vs
+      vr <- rowsOf.getOrElse(v, Nil)
+    } yield Row(id, v, vr.get(1), vr.get(2), qr.get(1), qr.get(2))
+    val scored = local(pairs, StructType(Seq(outSchema("q_id"),
+        outSchema("vec_id"), vecsAt.schema("qe"), vecsAt.schema("na"),
+        q.schema("qe").copy(name = "qe_q"), q.schema("na").copy(name = "na_q"))))
       .filter(col("na") > 0 && col("na_q") > 0)
       .withColumn("dot", call_function("dot_longs", col("qe"), col("qe_q")))
       .withColumn("cos_e6",
         expr("""CAST(round(CAST(dot AS DOUBLE)
                | / sqrt(CAST(na AS DOUBLE) * CAST(na_q AS DOUBLE))
                | * 1e6) AS BIGINT)""".stripMargin))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("q_id")
-          .orderBy(col("cos_e6").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "cos_e6")
+      .select("q_id", "vec_id", "cos_e6").collect()
+    // per-query rank: cos_e6 descending with nulls last, then vec_id
+    val order = Ordering.by((r: Row) =>
+      (r.isNullAt(2), if (r.isNullAt(2)) 0L else r.getLong(2), r.getLong(1)))(
+      Ordering.Tuple3(Ordering.Boolean, Ordering.Long.reverse, Ordering.Long))
+    local(scored.toSeq.groupBy(_.get(0)).toSeq.flatMap { case (id, rs) =>
+      rs.sorted(order).take(k).zipWithIndex.map { case (r, i) =>
+        Row(id, i + 1L, r.getLong(1), r.get(2)) }
+    }, outSchema)
   }
 
   /** Right-to-erasure INTO the persisted index (the index-side

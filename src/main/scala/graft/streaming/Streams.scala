@@ -823,10 +823,13 @@ object Streams {
     * ([[graft.sim.EmbIndexQueries.stagedEmbIndexPath]] — serving is
     * read-only, so unlike the mutating ingest streams it reuses the
     * cross-process staged artifact) via
-    * [[graft.sim.EmbIndex.indexTopKBatch]], and each batch's results
-    * land in a parquet sink exactly-once. Serving is STATELESS reads,
-    * so the result is batch-size invariant — StreamingSpec pins
-    * micro-batched ≡ one-shot — and the oracle re-derives every
+    * [[graft.sim.EmbIndex.indexTopKBatch]]: per micro-batch the query
+    * rows are held on the driver, two fetch jobs read the postings of
+    * their buckets and the candidates' `vecs` rows, and each query
+    * ranks on the driver. Each batch's results land in a parquet sink
+    * exactly-once. A query's answer depends on its own row and the
+    * index only, so the result is batch-size invariant — StreamingSpec
+    * pins micro-batched ≡ one-shot — and the oracle re-derives every
     * ranked row at the manifest width. */
   def embIndexServing(spark: SparkSession, dir: String): DataFrame = withStreamParallelism(spark) {
     import java.nio.file.{Files, Paths}

@@ -1318,7 +1318,7 @@ object Dedup {
     * must run its jobs) returns: the delta's key sets reach the index
     * side's tasks without a broadcast job or a literal list in the
     * plan. */
-  private def withBroadcast[V: scala.reflect.ClassTag, T](
+  private[graft] def withBroadcast[V: scala.reflect.ClassTag, T](
       sc: org.apache.spark.SparkContext, v: V)(
       body: org.apache.spark.broadcast.Broadcast[V] => T): T = {
     val b = sc.broadcast(v)

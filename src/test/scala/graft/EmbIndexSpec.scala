@@ -336,30 +336,48 @@ class EmbIndexSpec extends SparkSpec {
     assert(acc2.count() == 0L)
   }
 
-  test("batched serving: per-query agreement with indexTopK, plan purity, " +
-      "and WindowGroupLimit pruning below the rank window") {
+  test("batched serving: per-query agreement with indexTopK, every " +
+      "executed fetch reads only index artifacts, at most k rows per query") {
     val vecs = randVecs(0L until 400L, 64)
     val dir = java.nio.file.Files.createTempDirectory("graft_embixb").toString
     EmbIndex.writeIndex(vecs, dir)
     val ix = EmbIndex.readIndex(spark, dir)
     val queries = randVecs(9000L to 9004L, 64)
-    val batch = EmbIndex.indexTopKBatch(ix, queries, 3)
-    // plan purity: the only FILE relations are the index artifacts
-    val rels = batch.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
+    // plan purity: every query the probe executes scans only index
+    // artifacts (the queries are a local relation)
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        qe.sparkPlan.foreach {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+            s.relation.location.rootPaths.foreach(p => scanned.add(p.toString))
+          case _ =>
+        }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
-    assert(rels.nonEmpty)
-    assert(rels.forall(_.relation.asInstanceOf[
-      org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-      .location.rootPaths.forall(_.toString.contains(dir))))
-    // the literal rank bound plans per-query group-limit pruning
-    assert(batch.queryExecution.executedPlan.toString
-      .contains("WindowGroupLimit"))
-    val got = batch.collect()
+    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val rows = try {
+      val r = EmbIndex.indexTopKBatch(ix, queries, 3).collect()
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    val paths = scanned.toArray.map(_.toString).toSeq
+    assert(paths.exists(_.endsWith("/post")) && paths.exists(_.endsWith("/vecs")),
+      paths.mkString(", "))
+    assert(paths.forall(_.contains(dir)), paths.mkString(", "))
+    val got = rows
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(t => (t._3, t._4)).toSeq)
       .toMap
     assert(got.nonEmpty)
+    // the k bound: ranks 1..n with n ≤ k per query
+    rows.groupBy(_.getLong(0)).values.foreach { rs =>
+      assert(rs.map(_.getLong(1)).sorted.toSeq == (1L to rs.length.toLong) &&
+        rs.length <= 3)
+    }
     // every query's batched answer equals its single-query indexTopK
     // (rank k here never exceeds the single kernel's ordering depth)
     (9000L to 9004L).foreach { qid =>
@@ -369,6 +387,96 @@ class EmbIndexSpec extends SparkSpec {
       assert(got.getOrElse(qid, Seq()) == single,
         s"batched vs single serving diverged for query $qid")
     }
+  }
+
+  /** The SQL plan [[EmbIndex.indexTopKBatch]] had before it ranked on
+    * the driver: candidates by a broadcast join of the queries' band
+    * keys against the postings, the vecs and query joins, and a
+    * row_number window bounded by k. The reference the driver-side
+    * probe must equal row for row. */
+  private def sqlTopKBatch(ix: EmbIndex.EmbeddingIndex,
+      queries: org.apache.spark.sql.DataFrame, k: Int) = {
+    val q = EmbIndex.buildRows(queries, ix.bits)
+      .select(col("vec_id").as("q_id"), col("qe").as("qe_q"),
+        col("na").as("na_q"), col("bands").as("q_bands"))
+    val qbk = q.select(col("q_id"), explode(col("q_bands")).as("bk"))
+    val cand = ix.postings.join(broadcast(qbk), Seq("bk"))
+      .filter(col("vec_id") =!= col("q_id"))
+      .select("q_id", "vec_id").distinct()
+    ix.vecs.join(cand, Seq("vec_id"))
+      .join(broadcast(q.select("q_id", "qe_q", "na_q")), Seq("q_id"))
+      .filter(col("na") > 0 && col("na_q") > 0)
+      .withColumn("dot", call_function("dot_longs", col("qe"), col("qe_q")))
+      .withColumn("cos_e6",
+        expr("""CAST(round(CAST(dot AS DOUBLE)
+               | / sqrt(CAST(na AS DOUBLE) * CAST(na_q AS DOUBLE))
+               | * 1e6) AS BIGINT)""".stripMargin))
+      .withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy("q_id")
+          .orderBy(col("cos_e6").desc, col("vec_id"))).cast("long"))
+      .filter(col("rank") <= k)
+      .select("q_id", "rank", "vec_id", "cos_e6")
+  }
+
+  test("batched serving equals the SQL reference plan row for row: ties, " +
+      "self ids, zero vectors, k past the candidates, tombstones, orphan " +
+      "postings, retried appends, empty and parquet-backed queries") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_embixeq").toString
+    val base = randVecs(0L until 400L, 64).collect()
+      .map(r => r.getLong(0) -> r.getAs[scala.collection.Seq[Float]](1).toArray).toMap
+    val zero = Array.fill(64)(0f)
+    // 400..403 copy 0, 7, 11 and 13 (cos ties); 404 is a zero vector
+    val copies = Seq(400L -> base(0L), 401L -> base(7L), 402L -> base(11L),
+      403L -> base(13L), 404L -> zero)
+    EmbIndex.writeIndex((base.toSeq ++ copies).toDF("vec_id", "embedding"), dir)
+    // queries: fresh vectors; copies of indexed ones (one of them under
+    // an indexed id: 7 excludes itself, not its copy 401); a second row
+    // under id 9000; a zero vector and an all-negative one (bucket of
+    // the indexed zero vector); a null id
+    val qs = Seq[(Option[Long], Array[Float])](
+        Some(9100L) -> base(0L), Some(7L) -> base(7L), Some(9101L) -> base(11L),
+        Some(9000L) -> base(13L), Some(9102L) -> zero,
+        Some(9103L) -> Array.fill(64)(-1f), None -> base(0L)) ++
+      randVecs(9000L until 9010L, 64).collect().map(r =>
+        Some(r.getLong(0)) -> r.getAs[scala.collection.Seq[Float]](1).toArray)
+    val local = qs.toDF("vec_id", "embedding")
+    val qPath = s"$dir/../${new java.io.File(dir).getName}_queries"
+    local.write.mode("overwrite").parquet(qPath)
+    val onDisk = spark.read.parquet(qPath)
+    val empty = local.filter(lit(false))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (Option(r.get(0)), r.getLong(1), r.getLong(2), Option(r.get(3))))
+      .sortBy(t => (t._1.map(_.toString), t._2))
+    def check(state: String): Unit = {
+      val ix = EmbIndex.readIndex(spark, dir)
+      for ((name, q) <- Seq("local" -> local, "parquet" -> onDisk, "empty" -> empty);
+           k <- Seq(3, 1000)) {
+        val want = rows(sqlTopKBatch(ix, q, k))
+        assert(rows(EmbIndex.indexTopKBatch(ix, q, k)) == want,
+          s"$state, $name queries, k = $k")
+        if (name != "empty") assert(want.nonEmpty, s"$state, $name, k = $k")
+      }
+    }
+    check("fresh")
+    EmbIndex.eraseFromIndex(dir, Seq(0L, 401L).toDF("vec_id"))
+    check("tombstoned")
+    // a torn append: postings and bucket partials of copies of the
+    // queries land, their vecs rows do not
+    val (bits, _, _, _) = EmbIndex.readManifest(spark, dir)
+    val torn = EmbIndex.buildRows(Seq(500L -> base(0L), 501L -> base(13L))
+      .toDF("vec_id", "embedding"), bits)
+    EmbIndex.indexPostings(torn).write.mode("append").parquet(s"$dir/post")
+    EmbIndex.indexBucketStats(EmbIndex.indexPostings(torn))
+      .write.mode("append").parquet(s"$dir/bk")
+    spark.catalog.refreshByPath(s"$dir/post")
+    spark.catalog.refreshByPath(s"$dir/bk")
+    check("orphan postings")
+    // a retried append: every artifact holds the delta twice
+    val retried = Seq(600L -> base(0L), 601L -> base(11L)).toDF("vec_id", "embedding")
+    EmbIndex.appendIndex(dir, retried)
+    EmbIndex.appendIndex(dir, retried)
+    check("duplicate vecs rows")
   }
 
   test("width rebuild: occupancy fires the trigger, the rebuilt index " +

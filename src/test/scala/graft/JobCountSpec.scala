@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
   * near-duplicates) against a seeded 2 500-doc text index, an append
   * of a 50-doc delta the screen rejects whole (no more jobs than a
   * screen, no file written), and a
-  * 50-query top-k probe and a 50-vector append against a seeded
+  * 50-query top-k probe, a 50-vector screen (half planted
+  * near-duplicates) and a 50-vector append against a seeded
   * 1 000-vector embedding index. At this size each op's wall is its
   * job count times the per-job latency, so these ceilings are the
   * deterministic half of the serving path's cost. Each op runs once
@@ -142,6 +143,17 @@ class JobCountSpec extends SparkSpec {
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
         planted.foreach { case ((q, _), src) => assert(top.get(q).contains(src)) }
       }
+      /** 25 scaled copies of indexed vectors (cos 1: rejected at the
+        * 9/10 threshold) then 25 new vectors. */
+      def embScreen(): Unit = {
+        val dups = Seq.fill(25)(freshId() -> vecs(rnd.nextInt(vecs.size))._2.map(_ * 2f))
+        val fresh = Seq.fill(25)(freshId() -> vector())
+        val acc = EmbIndex.incrementalAcceptIndexed(EmbIndex.readIndex(spark, embRoot),
+            local((dups ++ fresh).map { case (id, v) => Row(id, v.toSeq, 0) }, VecSchema),
+            9, 10)
+          .select("vec_id").collect().map(_.getLong(0)).toSet
+        assert(acc == fresh.map(_._1).toSet)
+      }
       def embAppend(): Unit = {
         val vs = Seq.fill(50)(freshId() -> vector())
         EmbIndex.appendIndex(embRoot,
@@ -150,10 +162,11 @@ class JobCountSpec extends SparkSpec {
       }
 
       val ops = Seq[(String, () => Unit, Int)](
-        ("dedup screen", () => screen(), 20),
+        ("dedup screen", () => screen(), 6),
         ("dedup accepted append", () => append(), 8),
         ("dedup all-rejected append", () => rejectedAppend(), 20),
-        ("emb probe", () => embProbe(), 6),
+        ("emb probe", () => embProbe(), 2),
+        ("emb screen", () => embScreen(), 20),
         ("emb append", () => embAppend(), 3))
       ops.foreach(_._2())
       val counts = ops.map { case (name, op, ceiling) =>

@@ -6,7 +6,10 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 For each query parquet under <verifyOutDir>/ and its SQL in
 oracle_sql.json, runs the SQL in DuckDB over the sfDir tables and
 compares: column names, dtypes, and all values (rows sorted by every
-column, columns sorted by name — mirroring a hash compare).
+column, columns sorted by name — mirroring a hash compare). A name in
+<verifyOutDir>/selected.txt (the queries Verify was asked to dump)
+without a directory is a failure: its query threw. So is a dump
+without selected.txt.
 """
 import json, sys, math
 import duckdb
@@ -29,6 +32,14 @@ def main(sf_dir, out_dir):
     dirs = sorted(d for d in os.listdir(out_dir)
                   if os.path.isdir(f"{out_dir}/{d}"))
     n_pass = n_fail = n_rows_only = 0
+    selected = f"{out_dir}/selected.txt"
+    if not os.path.exists(selected):
+        n_fail += 1
+        print(f"FAIL: no {selected}; which queries were asked for is unknown")
+    else:
+        for name in sorted(set(open(selected).read().split()) - set(dirs)):
+            n_fail += 1
+            print(f"FAIL {name}: no output (the query threw in Verify)")
     for name in dirs:
         spark_rel = con.sql(
             f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
