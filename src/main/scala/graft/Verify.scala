@@ -7,9 +7,11 @@ import java.nio.file.{Files, Paths}
   * only those queries are dumped (fast iteration on a few queries);
   * oracle_sql.json is always the full map. The names it was asked to
   * dump go to selected.txt, one a line, before any query runs, and
-  * tools/check.py fails on a listed name without a directory. A query
-  * that throws leaves no directory and makes Verify exit non-zero
-  * once the rest are dumped. */
+  * tools/check.py fails on a listed name without a directory. The
+  * registered queries without oracle SQL (rows-only by design) go to
+  * rows_only.txt, and check.py fails on a dumped directory that is
+  * neither oracled nor listed there. A query that throws leaves no
+  * directory and makes Verify exit non-zero once the rest are dumped. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -24,6 +26,8 @@ object Verify {
       if (names.isEmpty) queries else queries.filter(kv => names(kv._1))
     Files.writeString(Paths.get(s"$outDir/selected.txt"),
       selected.keys.map(_ + "\n").mkString)
+    Files.writeString(Paths.get(s"$outDir/rows_only.txt"),
+      Registry.all.filter(_.oracle.isEmpty).map(_.name + "\n").mkString)
     val failed = selected.toSeq.flatMap { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -71,54 +71,3 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame =
     spread(table(s, d, "embeddings"))
 }
-
-/** CSV source/sink with the reference's option semantics:
-  * header row + full schema inference on read (reference: pandas
-  * `pd.read_csv`, app.py:49 / etl_core.py:27); header + no index on write
-  * (app.py:55, etl_core.py:68).
-  *
-  * The reference emits ONE object per job (app.py:53-62) — `writeSingle`
-  * preserves that contract via coalesce(1). At 100 TB that contract is
-  * wrong, so `write` (partitioned, the default for engine users) exists
-  * alongside it.
-  */
-object Csv {
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(path)
-
-  /** Partitioned CSV write — the 100 TB default. */
-  def write(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-  /** Single-object CSV write — reference parity (one S3 object per job).
-    *
-    * repartition(1), NOT coalesce(1): coalesce collapses the WHOLE
-    * upstream plan onto the one write task — measured at the 100×
-    * corpus (SERIAL.md stage decomposition): the full-etl transform runs
-    * 1.25 s on 32 threads but 25.8 s when coalesce(1) single-threads
-    * it into the result write. repartition inserts a 1-partition
-    * shuffle instead, so the transform keeps its parallelism and only
-    * the write (plus one pass of the output bytes — which the lone
-    * coalesce task would have pulled anyway) is serial. Row order
-    * inside the object is not part of the contract (every consumer
-    * re-sorts; the reference's pandas CSV has its own order). */
-  def writeSingle(df: DataFrame, path: String): Unit =
-    df.repartition(1).write.mode("overwrite").option("header", "true").csv(path)
-
-  /** Fault-tolerant CSV scan (the engine's version of the reference's
-    * try/except ingestion, etl_core.py:21-29): PERMISSIVE mode with an
-    * explicit schema; malformed rows land whole in `_corrupt_record`
-    * instead of failing the job, so one bad row in 100 TB doesn't kill
-    * the pipeline and the rejects are queryable. */
-  def readPermissive(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .schema(schema.add("_corrupt_record", "string"))
-      .csv(path)
-}

@@ -20,8 +20,11 @@ import org.apache.spark.sql.types._
   * BEFORE touching the live table (the new version usually derives
   * from a read of the very table being replaced, and Spark plans are
   * lazy — dropping the target mid-read would race), then swapping via
-  * rename with rollback on failure. Neither path materializes rows on
-  * the driver, so either scales past control-plane sizes.
+  * rename with rollback on failure. The parquet store collects a table
+  * within Spark's driver limit (`spark.sql.autoBroadcastJoinThreshold`)
+  * and writes it on the driver, with no write job; a larger table, and
+  * every JDBC write, is written by executors, so either store scales
+  * past control-plane sizes.
   */
 trait CatalogStore {
   def readUsers(): DataFrame
@@ -48,6 +51,8 @@ final class ParquetCatalog(spark: SparkSession, catalogDir: String)
   import JobService.{JobsSchema, UsersSchema}
   import graft.io.FooterSchema
   import org.apache.hadoop.fs.Path
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+  import scala.jdk.CollectionConverters._
 
   private val usersPath = s"$catalogDir/users"
   private val jobsPath = s"$catalogDir/jobs"
@@ -67,7 +72,9 @@ final class ParquetCatalog(spark: SparkSession, catalogDir: String)
     // a concurrent writer) keeps logins working instead of silently
     // answering from an empty frame
     else if (f.exists(old)) FooterSchema.read(spark, s"$path.old")
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    // a local relation: the first write's plan is small by its own
+    // size estimate, so it too is rewritten on the driver
+    else spark.createDataFrame(java.util.List.of[Row](), schema)
   }
 
   private def overwrite(df: DataFrame, path: String): Unit = {
@@ -84,7 +91,7 @@ final class ParquetCatalog(spark: SparkSession, catalogDir: String)
     // live (derived from reading it) is published, so it is never
     // dropped while it is the only copy, and a failed publish rolls it
     // back into the live name.
-    df.write.mode("overwrite").parquet(stage.toString)
+    writeStage(df, stage.toString)
     if (f.exists(live)) {
       if (f.exists(old) && !f.delete(old, true))
         throw new IllegalStateException(
@@ -103,6 +110,22 @@ final class ParquetCatalog(spark: SparkSession, catalogDir: String)
       throw new IllegalStateException(
         s"catalog swap: could not remove $path.old after publish " +
           "(next overwrite would fail on the stale backup)")
+  }
+
+  /** The new version into the stage directory. A table within Spark's
+    * driver limit ([[graft.io.LocalWrite.driverLimit]], against the
+    * plan's own size estimate) is collected — the write's one Spark
+    * job, which also runs any check inside the plan, such as
+    * `startEtl`'s id check, before a byte is written — and its rows
+    * are written by [[graft.io.LocalWrite]] on the driver, with no
+    * write job. A larger table is written by a distributed job. */
+  private def writeStage(df: DataFrame, stage: String): Unit = {
+    val small = graft.io.LocalWrite.driverLimit(spark)
+      .exists(df.queryExecution.optimizedPlan.stats.sizeInBytes <= _)
+    val rows =
+      if (small) spark.createDataFrame(df.collect().toSeq.asJava, df.schema) else df
+    if (!small || !graft.io.LocalWrite.write(rows, new ParquetFileFormat, stage, Map.empty))
+      rows.write.mode("overwrite").parquet(stage)
   }
 
   override def readUsers(): DataFrame = readOr(usersPath, UsersSchema)

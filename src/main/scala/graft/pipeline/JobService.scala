@@ -11,8 +11,8 @@ import scala.util.control.NonFatal
   * the engine's catalog tables — so a user of the reference can switch
   * wholesale:
   *
-  *  - register  → uniqueness probe (semi-join shape) + salted-hash
-  *                insert              (app.py:74-94)
+  *  - register  → uniqueness probe and max(id) in one aggregate +
+  *                salted-hash insert  (app.py:74-94)
   *  - login     → point lookup + hash verify        (app.py:97-109)
   *  - startEtl  → job INSERT (Processing) → pipeline → UPDATE
   *                Completed/Failed with result_url  (app.py:141-189);
@@ -61,10 +61,19 @@ final class JobService(spark: SparkSession, store: CatalogStore) {
     // service has already used. Calls that OVERLAP across services are
     // not serialized by either store — each write replaces the whole
     // table from its own read, so the later one drops the earlier row.
+    // the uniqueness probe and the id allocation read `users` in one
+    // aggregate, folded per partition and merged on the driver: one
+    // Spark job with no shuffle (a SQL aggregate is two under AQE, its
+    // exchange stage and its result stage), then one for the rewrite
     val existing = users
-    if (!existing.filter(col("username") === username).isEmpty) false
+    val (taken, maxId) = existing
+      .select(coalesce(col("username") === username, lit(false)),
+        coalesce(col("id"), lit(0L)))
+      .rdd.aggregate((false, 0L))(
+        (acc, r) => (acc._1 || r.getBoolean(0), math.max(acc._2, r.getLong(1))),
+        (a, b) => (a._1 || b._1, math.max(a._2, b._2)))
+    if (taken) false
     else {
-      val maxId = existing.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
       val hashed = method match {
         case "scrypt" => lit(Scrypt.generate(password))
         case _ => Exprs.hashPassword(lit(password), lit(username))

@@ -9,8 +9,12 @@ import org.apache.spark.sql.functions._
 
 /** The reference's two end-to-end pipelines (SURVEY.md §3.1/§3.2),
   * composed from engine operators into single lazy DataFrame chains —
-  * scan → transform → sink runs as one Spark job, partition-parallel,
-  * where the reference looped rows in a single thread.
+  * scan → transform → sink, where the reference looped rows in a
+  * single thread. How many Spark jobs that takes depends on the input
+  * ([[graft.io.Csv]]): an upload within Spark's driver limit is read,
+  * transformed and written on the driver with none; a larger one runs
+  * partition-parallel, with two jobs to read and infer it and two for
+  * the single-object write.
   */
 object Pipelines {
 

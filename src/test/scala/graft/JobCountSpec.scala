@@ -28,9 +28,12 @@ import org.apache.spark.sql.types._
   * unmeasured first (manifest caches, codegen), then once counted,
   * both on fresh inputs so no memo of a previous delta applies.
   *
-  * Control plane: `JobService.startEtl` on a 200-row CSV upload and a
-  * `listJobs` poll over a parquet catalog of three users. Their catalog
-  * work must not grow with the number of jobs already recorded. */
+  * Control plane: `register`, `login`, `JobService.startEtl` on a
+  * 200-row CSV upload and a `listJobs` poll over a parquet catalog of
+  * three users. Their catalog work must not grow with the number of
+  * jobs already recorded. The same ops with Spark's driver limit off
+  * (`spark.sql.autoBroadcastJoinThreshold = -1`) take the distributed
+  * path, and must leave the same listing and output files. */
 class JobCountSpec extends SparkSpec {
 
   private val Vocab = Array("batch", "part", "spark", "line", "column",
@@ -183,42 +186,79 @@ class JobCountSpec extends SparkSpec {
     } finally Dedup.deleteRecursively(dir)
   }
 
+  /** Spark jobs per control-plane op on a fresh parquet catalog under
+    * `root`, with the listing and the output files the ops left. */
+  private final case class ControlPlane(register: Seq[Int], login: Int,
+      startEtl: Seq[Int], listJobs: Int, listed: Seq[Seq[Any]],
+      outputs: Seq[Seq[Byte]])
+
+  /** Three registers, a login, then `n` counted `startEtl`s of `in`
+    * after one uncounted (it seeds the id counter and warms codegen),
+    * so the count per job can be read at each history length, and a
+    * counted `listJobs`. */
+  private def controlPlane(root: java.nio.file.Path, in: String, n: Int): ControlPlane = {
+    val svc = new JobService(spark,
+      new ParquetCatalog(spark, root.resolve("catalog").toString))
+    val registers = Seq("u", "v", "w").map(u => jobs(assert(svc.register(u, "pw"))))
+    // login of the last-registered user: one job however many part
+    // files `users` spans (the first call warms codegen)
+    assert(svc.login("w", "pw"))
+    val loginJobs = jobs(assert(svc.login("w", "pw")))
+    assert(!svc.login("w", "wrong"))
+    def out(k: Int) = root.resolve(s"out_$k")
+    def startEtl(k: Int): Long = svc.startEtl("u", in, out(k).toString)
+    startEtl(0); svc.listJobs().collect()
+    val perJob = (1 to n).map(k => jobs(startEtl(k)))
+    val listing = jobs { svc.listJobs().collect(); () }
+    assert(svc.jobs.filter("status = 'Completed'").count() == n + 1)
+    // the listing without upload_time (a wall-clock instant), with
+    // result_url relative to `root`
+    val listed = svc.listJobs().collect().toSeq.map(r => Seq(r.getLong(0),
+      r.getString(1), r.getString(2), r.getString(3).stripPrefix(root.toString)))
+    val outputs = (0 to n).map { k =>
+      val part = java.nio.file.Files.list(out(k)).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq
+      assert(part.size == 1, s"${out(k)}: $part")
+      java.nio.file.Files.readAllBytes(part.head).toSeq
+    }
+    ControlPlane(registers, loginJobs, perJob, listing, listed, outputs)
+  }
+
   test("control-plane ops stay within their Spark job ceilings at any history") {
     val dir = java.nio.file.Files.createTempDirectory("graft_jobcount_etl")
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
     try {
       val in = dir.resolve("upload.csv")
       java.nio.file.Files.write(in, ("doc_id,review,rating\n" +
         (0 until 200).map(i => s"$i,${text()},${1 + i % 5}\n").mkString)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val svc = new JobService(spark,
-        new ParquetCatalog(spark, dir.resolve("catalog").toString))
-      // three registers leave `users` in several part files: the
-      // startEtl lookup of "u" must not cost a job per file it misses
-      Seq("u", "v", "w").foreach(n => assert(svc.register(n, "pw")))
-      var outs = 0
-      def startEtl(): Long = {
-        outs += 1
-        svc.startEtl("u", in.toString, dir.resolve(s"out_$outs").toString)
-      }
-      def listJobs(): Unit = { svc.listJobs().collect(); () }
-      // login of the last-registered user: one job however many part
-      // files `users` spans (the first call warms codegen)
-      assert(svc.login("w", "pw"))
-      val loginJobs = jobs(assert(svc.login("w", "pw")))
-      assert(!svc.login("w", "wrong"))
-
-      // the first startEtl seeds the id counter and warms codegen;
-      // every later one is counted, so the count per job can be read
-      // at each history length
-      startEtl(); listJobs()
-      val perJob = (1 to 30).map(_ => jobs(startEtl()))
-      val listing = jobs(listJobs())
-      val msg = s"startEtl jobs after 1..30 prior jobs: ${perJob.mkString(",")}; " +
-        s"listJobs: $listing jobs; login: $loginJobs jobs"
+      // the driver path: the upload parsed and written on the driver,
+      // the catalog tables collected and rewritten without a write job
+      val local = controlPlane(dir.resolve("driver"), in.toString, 30)
+      val msg = s"startEtl jobs after 1..30 prior jobs: ${local.startEtl.mkString(",")}; " +
+        s"listJobs: ${local.listJobs} jobs; login: ${local.login} jobs; " +
+        s"register: ${local.register.mkString(",")} jobs"
       info(msg)
-      assert(perJob.forall(_ <= 7) && listing <= 3 && loginJobs <= 1, msg)
-      assert(perJob.head == perJob.last, msg)
-      assert(svc.jobs.filter("status = 'Completed'").count() == 31)
+      assert(local.startEtl.forall(_ <= 3) && local.listJobs <= 3 &&
+        local.login <= 1 && local.register.forall(_ <= 2), msg)
+      assert(local.startEtl.head == local.startEtl.last, msg)
+      // with Spark's driver limit off, every op takes the distributed
+      // path: no more jobs than before the driver path existed, and
+      // the same listing and output bytes
+      val prev = spark.conf.getOption(threshold)
+      spark.conf.set(threshold, "-1")
+      val spread =
+        try controlPlane(dir.resolve("spark"), in.toString, 5)
+        finally prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+      val offMsg = s"threshold off: startEtl ${spread.startEtl.mkString(",")}; " +
+        s"listJobs ${spread.listJobs}; login ${spread.login}; " +
+        s"register ${spread.register.mkString(",")}"
+      info(offMsg)
+      assert(spread.startEtl.forall(_ <= 7) && spread.listJobs <= 3 &&
+        spread.login <= 1, offMsg)
+      assert(spread.startEtl.forall(_ > local.startEtl.max), offMsg)
+      assert(spread.listed == local.listed.takeRight(spread.listed.size))
+      assert(spread.outputs == local.outputs.take(spread.outputs.size))
     } finally Dedup.deleteRecursively(dir)
   }
 }

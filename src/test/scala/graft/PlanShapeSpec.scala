@@ -439,9 +439,19 @@ class PlanShapeSpec extends SparkSpec {
 
   test("pipeline_full_etl's read-back is a bare csv scan + the ORDER " +
       "BY range exchange (the transform happened at the CSV boundary)") {
-    val p = plan("pipeline_full_etl")
-    assert(p.contains("FileScan csv"), p)
-    assert(!p.contains("Exchange hashpartitioning") && !p.contains("Join"), p)
+    def bare(p: String, scan: String): Unit = {
+      assert(p.contains(scan), p)
+      assert(!p.contains("Exchange hashpartitioning") && !p.contains("Join"), p)
+    }
+    // past Spark's driver limit (here: the limit off) the read-back is
+    // Spark's csv scan; within it the processed file is read on the
+    // driver, and the read-back is the local relation it became
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try bare(plan("pipeline_full_etl"), "FileScan csv")
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    bare(plan("pipeline_full_etl"), "LocalTableScan")
   }
 
   test("stratified sample prunes each stratum with WindowGroupLimit " +

@@ -9,7 +9,10 @@ compares: column names, dtypes, and all values (rows sorted by every
 column, columns sorted by name — mirroring a hash compare). A name in
 <verifyOutDir>/selected.txt (the queries Verify was asked to dump)
 without a directory is a failure: its query threw. So is a dump
-without selected.txt.
+without selected.txt. A dumped directory with no oracle SQL is a
+rows-only check when <verifyOutDir>/rows_only.txt (the registered
+queries without oracle SQL) lists it, and a failure otherwise: nothing
+would check its answer. So is a dump without rows_only.txt.
 """
 import json, sys, math
 import duckdb
@@ -40,7 +43,18 @@ def main(sf_dir, out_dir):
         for name in sorted(set(open(selected).read().split()) - set(dirs)):
             n_fail += 1
             print(f"FAIL {name}: no output (the query threw in Verify)")
+    rows_only_file = f"{out_dir}/rows_only.txt"
+    if os.path.exists(rows_only_file):
+        rows_only = set(open(rows_only_file).read().split())
+    else:
+        rows_only = set()
+        n_fail += 1
+        print(f"FAIL: no {rows_only_file}; which dumps are rows-only by design is unknown")
     for name in dirs:
+        if name not in oracle and name not in rows_only:
+            n_fail += 1
+            print(f"FAIL {name}: unexpected dump (no oracle SQL, not rows-only by design)")
+            continue
         spark_rel = con.sql(
             f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
         if name not in oracle:
