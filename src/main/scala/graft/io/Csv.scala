@@ -1,15 +1,13 @@
 package graft.io
 
-import scala.jdk.CollectionConverters._
-
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVInferSchema, CSVOptions, DriverCsv, UnivocityParser}
 import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFileLinesReader, HadoopFsRelation, LogicalRelation, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFileLinesReader, HadoopFsRelation, LogicalRelation, PartitionedFile, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.csv.{CSVFileFormat, CSVUtils}
 import org.apache.spark.sql.types.{DataType, NullType, StructType}
 
@@ -18,9 +16,8 @@ import org.apache.spark.sql.types.{DataType, NullType, StructType}
   * `pd.read_csv`, app.py:49 / etl_core.py:27); header + no index on write
   * (app.py:55, etl_core.py:68).
   *
-  * Two paths, chosen by input size against Spark's own limit for data
-  * fit to hold on the driver, `spark.sql.autoBroadcastJoinThreshold`
-  * ([[LocalWrite.driverLimit]]; a value ≤ 0 turns the driver path off):
+  * Two paths, chosen by the input's own bytes against graft's
+  * driver-path cutoff ([[LocalWrite.DriverBytes]], 2 MiB, measured):
   *
   *  - **driver** — an upload of at most that many bytes, uncompressed
   *    and without partition directories, is read, inferred and parsed
@@ -30,12 +27,12 @@ import org.apache.spark.sql.types.{DataType, NullType, StructType}
   *    and `writeSingle` then writes it through [[LocalWrite]], again
   *    with no job. The reference reads each upload into memory with
   *    pandas, so this is its shape at control-plane sizes.
-  *  - **distributed** — anything larger: `spark.read.csv` with schema
-  *    inference (a header job and an inference job), and a
-  *    `repartition(1)` write.
+  *  - **distributed** — anything larger: Spark's CSV scan with schema
+  *    inference (a header job and an inference job) over the files
+  *    already listed, and a `repartition(1)` write.
   *
   * Both paths give the same schema, the same rows in the same order,
-  * and byte-identical output files (CsvDriverPathSpec).
+  * byte-identical output files and the same errors (CsvDriverPathSpec).
   *
   * The reference emits ONE object per job (app.py:53-62) — `writeSingle`
   * preserves that contract. At 100 TB that contract is wrong, so `write`
@@ -46,9 +43,14 @@ object Csv {
   private val WriteOptions = Map("header" -> "true")
 
   def read(spark: SparkSession, path: String): DataFrame =
-    driverPartitions(spark, path) match {
-      case Some(parts) => readOnDriver(spark, parts)
+    LocalWrite.driverLimit match {
       case None => spark.read.options(ReadOptions).csv(path)
+      case Some(limit) =>
+        val listed = listing(spark, path)
+        driverPartitions(spark, listed, limit) match {
+          case Some(parts) => readOnDriver(spark, parts)
+          case None => scan(spark, listed)
+        }
     }
 
   /** Partitioned CSV write — the 100 TB default. */
@@ -87,36 +89,52 @@ object Csv {
       .schema(schema.add("_corrupt_record", "string"))
       .csv(path)
 
-  /** The file splits a CSV scan of `path` would run, grouped by scan
+  /** The files under `path`, listed once by the file index a read
+    * of `path` resolves (Spark's own listing: hidden files dropped,
+    * partition directories found). */
+  private def listing(spark: SparkSession, path: String): HadoopFsRelation =
+    spark.read.text(path).queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs
+    }.get
+
+  /** The file splits a CSV scan of `listed` would run, grouped by scan
     * partition in the scan's order — when the driver path applies: at
-    * most [[LocalWrite.driverLimit]] bytes of data files, none
-    * compressed, no partition directories. The listing is Spark's own
-    * (the file index a text read resolves, hidden files dropped), and
-    * the splits and partitions are cut as `FileSourceScanExec` cuts
-    * them: largest split first, packed up to `maxSplitBytes`. */
-  private def driverPartitions(spark: SparkSession,
-      path: String): Option[Seq[Seq[PartitionedFile]]] =
-    LocalWrite.driverLimit(spark).flatMap { limit =>
-      spark.read.text(path).queryExecution.analyzed.collectFirst {
-        case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs
-      }.flatMap { rel =>
-        val dirs = rel.location.listFiles(Nil, Nil)
-        val files = dirs.flatMap(_.files)
-        val codecs = new CompressionCodecFactory(spark.sessionState.newHadoopConf())
-        // no data file: Spark's read raises its own "unable to infer"
-        if (rel.partitionSchema.nonEmpty || files.isEmpty ||
-            files.map(_.getLen).sum > limit ||
-            files.exists(f => codecs.getCodec(f.getPath) != null)) None
-        else {
-          val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
-          val splits = files.flatMap(f => PartitionedFileUtil.splitFiles(
-              f, f.getPath, isSplitable = true, maxSplit, InternalRow.empty))
-            .sortBy(_.length)(Ordering[Long].reverse)
-          Some(FilePartition.getFilePartitions(spark, splits, maxSplit)
-            .map(_.files.toSeq))
-        }
-      }
+    * most `limit` bytes of data files, none compressed, no partition
+    * directories. The splits and partitions are cut as
+    * `FileSourceScanExec` cuts them: largest split first, packed up to
+    * `maxSplitBytes`. */
+  private def driverPartitions(spark: SparkSession, listed: HadoopFsRelation,
+      limit: Long): Option[Seq[Seq[PartitionedFile]]] = {
+    val dirs = listed.location.listFiles(Nil, Nil)
+    val files = dirs.flatMap(_.files)
+    val codecs = new CompressionCodecFactory(spark.sessionState.newHadoopConf())
+    // no data file: Spark's scan raises its own "unable to infer"
+    if (listed.partitionSchema.nonEmpty || files.isEmpty ||
+        files.map(_.getLen).sum > limit ||
+        files.exists(f => codecs.getCodec(f.getPath) != null)) None
+    else {
+      val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+      val splits = files.flatMap(f => PartitionedFileUtil.splitFiles(
+          f, f.getPath, isSplitable = true, maxSplit, InternalRow.empty))
+        .sortBy(_.length)(Ordering[Long].reverse)
+      Some(FilePartition.getFilePartitions(spark, splits, maxSplit)
+        .map(_.files.toSeq))
     }
+  }
+
+  /** Spark's CSV scan over the files `listed` holds, as
+    * `spark.read.csv` resolves it (inference over every listed file,
+    * the same relation with the CSV format) but without listing the
+    * input a second time. */
+  private def scan(spark: SparkSession, listed: HadoopFsRelation): DataFrame = {
+    val format = new CSVFileFormat
+    // a path's read resolves an InMemoryFileIndex
+    val files = listed.location match { case i: PartitioningAwareFileIndex => i.allFiles() }
+    val schema = format.inferSchema(spark, ReadOptions, files)
+      .getOrElse(throw DriverCsv.noSchemaError(format.toString))
+    spark.baseRelationToDataFrame(listed.copy(dataSchema = schema,
+      fileFormat = format, options = ReadOptions)(spark))
+  }
 
   /** Each split's lines as Hadoop's `LineRecordReader` cuts them for a
     * scan task (a split not at offset 0 skips its first partial line
@@ -168,14 +186,14 @@ object Csv {
 
     val parseOptions = new CSVOptions(ReadOptions, conf.csvColumnPruning,
       conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
-    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
     val rows = text.flatten.flatMap { case (file, ls) =>
       val checker = new CSVHeaderChecker(schema, parseOptions,
         s"CSV file: ${file.urlEncodedPath}", file.start == 0)
+      // the parser refills one row object: copy each as it comes
       DriverCsv.parseIterator(ls.iterator,
           new UnivocityParser(schema, schema, parseOptions, Nil), checker, schema)
-        .map(r => toRow(r).asInstanceOf[Row]).toVector
+        .map(_.copy()).toVector
     }
-    spark.createDataFrame(rows.asJava, schema)
+    DriverCsv.localFrame(spark, schema, rows)
   }
 }

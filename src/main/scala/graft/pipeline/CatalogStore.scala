@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * from a read of the very table being replaced, and Spark plans are
   * lazy — dropping the target mid-read would race), then swapping via
   * rename with rollback on failure. The parquet store collects a table
-  * within Spark's driver limit (`spark.sql.autoBroadcastJoinThreshold`)
+  * within the driver-path cutoff ([[graft.io.LocalWrite.DriverBytes]])
   * and writes it on the driver, with no write job; a larger table, and
   * every JDBC write, is written by executors, so either store scales
   * past control-plane sizes.
@@ -52,7 +52,6 @@ final class ParquetCatalog(spark: SparkSession, catalogDir: String)
   import graft.io.FooterSchema
   import org.apache.hadoop.fs.Path
   import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-  import scala.jdk.CollectionConverters._
 
   private val usersPath = s"$catalogDir/users"
   private val jobsPath = s"$catalogDir/jobs"
@@ -112,20 +111,21 @@ final class ParquetCatalog(spark: SparkSession, catalogDir: String)
           "(next overwrite would fail on the stale backup)")
   }
 
-  /** The new version into the stage directory. A table within Spark's
-    * driver limit ([[graft.io.LocalWrite.driverLimit]], against the
-    * plan's own size estimate) is collected — the write's one Spark
+  /** The new version into the stage directory. A table within the
+    * driver-path cutoff ([[graft.io.LocalWrite.driverLimit]], against
+    * the plan's own size estimate) is collected — the write's one Spark
     * job, which also runs any check inside the plan, such as
     * `startEtl`'s id check, before a byte is written — and its rows
     * are written by [[graft.io.LocalWrite]] on the driver, with no
     * write job. A larger table is written by a distributed job. */
   private def writeStage(df: DataFrame, stage: String): Unit = {
-    val small = graft.io.LocalWrite.driverLimit(spark)
-      .exists(df.queryExecution.optimizedPlan.stats.sizeInBytes <= _)
-    val rows =
-      if (small) spark.createDataFrame(df.collect().toSeq.asJava, df.schema) else df
-    if (!small || !graft.io.LocalWrite.write(rows, new ParquetFileFormat, stage, Map.empty))
-      rows.write.mode("overwrite").parquet(stage)
+    val format = new ParquetFileFormat
+    if (graft.io.LocalWrite.driverLimit
+          .exists(df.queryExecution.optimizedPlan.stats.sizeInBytes <= _) &&
+        graft.io.LocalWrite.writable(format, df.schema))
+      graft.io.LocalWrite.writeRows(spark, format, Map.empty, df.schema,
+        graft.io.LocalWrite.collect(df).toSeq, stage)
+    else df.write.mode("overwrite").parquet(stage)
   }
 
   override def readUsers(): DataFrame = readOr(usersPath, UsersSchema)

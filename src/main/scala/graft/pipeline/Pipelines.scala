@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * composed from engine operators into single lazy DataFrame chains —
   * scan → transform → sink, where the reference looped rows in a
   * single thread. How many Spark jobs that takes depends on the input
-  * ([[graft.io.Csv]]): an upload within Spark's driver limit is read,
+  * ([[graft.io.Csv]]): an upload within the driver-path cutoff is read,
   * transformed and written on the driver with none; a larger one runs
   * partition-parallel, with two jobs to read and infer it and two for
   * the single-object write.

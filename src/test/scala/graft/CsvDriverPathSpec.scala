@@ -7,17 +7,20 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import graft.io.{Csv, FooterSchema}
+import graft.io.{Csv, FooterSchema, LocalWrite}
 import graft.pipeline.{JobService, ParquetCatalog, Pipelines}
 import graft.text.Dedup
 import org.apache.spark.GraftTestBus
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 
 /** The driver path of the control plane against Spark's distributed
-  * path, which `spark.sql.autoBroadcastJoinThreshold = -1` selects.
+  * path, which `LocalWrite.distributedOnly` selects.
   *
   * For each upload shape, `Csv.read` must give the same inferred schema
   * and the same rows in the same order on both paths, and
@@ -27,10 +30,12 @@ import org.apache.spark.sql.types._
   * uuid. The driver side must run no Spark job and the other side must
   * run some, so each comparison really spans the two paths. Catalog
   * tables written on the driver must read back equal to the
-  * distributed write's, microsecond timestamps and nulls included. */
+  * distributed write's, microsecond timestamps and nulls included.
+  * Outside `distributedOnly`, the cutoff itself picks the path: an upload
+  * just within it is read on the driver, one just past it by Spark's
+  * scan, listed once and equal to `spark.read.csv`'s. */
 class CsvDriverPathSpec extends SparkSpec {
 
-  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
   private val Uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
 
   private val Vocab = Array("good", "bad", "great", "slow", "fast", "broken",
@@ -42,15 +47,35 @@ class CsvDriverPathSpec extends SparkSpec {
   private def upload(rows: Int, seed: Long): String = {
     val r = new SplittableRandom(seed)
     val sb = new StringBuilder("doc_id,review,rating,source\n")
-    for (i <- 0 until rows) {
-      val review = if (r.nextInt(100) < 5) ""
-        else Seq.fill(5 + r.nextInt(30))(Vocab(r.nextInt(Vocab.length))).mkString(" ")
-      val rating = if (r.nextInt(100) < 3) "" else (1 + r.nextInt(5)).toString
-      sb.append(i).append(',').append(review).append(',').append(rating)
-        .append(",src").append(r.nextInt(20)).append('\n')
-    }
+    for (i <- 0 until rows) row(sb, i, r)
     sb.toString
   }
+
+  private def row(sb: StringBuilder, i: Int, r: SplittableRandom): Unit = {
+    val review = if (r.nextInt(100) < 5) ""
+      else Seq.fill(5 + r.nextInt(30))(Vocab(r.nextInt(Vocab.length))).mkString(" ")
+    val rating = if (r.nextInt(100) < 3) "" else (1 + r.nextInt(5)).toString
+    sb.append(i).append(',').append(review).append(',').append(rating)
+      .append(",src").append(r.nextInt(20)).append('\n')
+  }
+
+  /** Seeded uploads in the same shape just within and just past the
+    * driver-path cutoff: the second is the first plus one row. */
+  private def nearCutoff(seed: Long): (String, String) = {
+    val r = new SplittableRandom(seed)
+    val sb = new StringBuilder("doc_id,review,rating,source\n")
+    var within = 0
+    var i = 0
+    while (sb.length <= LocalWrite.DriverBytes) {
+      within = sb.length
+      row(sb, i, r)
+      i += 1
+    }
+    (sb.substring(0, within), sb.toString)
+  }
+
+  private def sparkRead(path: String) =
+    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 
   private def withConf[T](settings: (String, String)*)(body: => T): T = {
     val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -116,7 +141,7 @@ class CsvDriverPathSpec extends SparkSpec {
     }
     withConf(conf: _*) {
       val driver = side(in.toString, dir.resolve(s"$name.driver"), text)
-      val spread = withConf(Threshold -> "-1")(
+      val spread = LocalWrite.distributedOnly(
         side(in.toString, dir.resolve(s"$name.spark"), text))
       assert(driver.local && driver.jobs == 0,
         s"$name: the driver path ran ${driver.jobs} jobs")
@@ -212,7 +237,7 @@ class CsvDriverPathSpec extends SparkSpec {
         (back.orderBy("id").collect().toSeq, back.schema, jobs)
       }
       val driver = stored("driver")
-      val spread = withConf(Threshold -> "-1")(stored("spark"))
+      val spread = LocalWrite.distributedOnly(stored("spark"))
       assert(driver._1 == rows && spread._1 == rows)
       assert(driver._2 == spread._2)
       assert(FooterSchema.of(spark, dir.resolve("driver/jobs").toString) ==
@@ -222,6 +247,93 @@ class CsvDriverPathSpec extends SparkSpec {
         ".part-00000-<uuid>-c000.snappy.parquet.crc", "_SUCCESS",
         "part-00000-<uuid>-c000.snappy.parquet"))
       assert(driver._3 == 0 && spread._3 > 0, s"${driver._3} vs ${spread._3}")
+    } finally Dedup.deleteRecursively(dir)
+  }
+
+  test("0-byte and blank-only uploads: Spark's write error on both paths, " +
+      "and their jobs end Failed") {
+    val dir = Files.createTempDirectory("graft_csv_empty")
+    try {
+      // Spark's listing drops a 0-byte file, so it takes Spark's scan;
+      // blank lines are read on the driver into a frame of no columns
+      for ((name, body, local) <- Seq(("empty.csv", "", false),
+          ("blank.csv", "\n   \n\r\n", true))) {
+        val in = dir.resolve(name)
+        Files.write(in, body.getBytes(StandardCharsets.UTF_8))
+        def attempt(out: Path): (StructType, Boolean, String) = {
+          val df = Csv.read(spark, in.toString)
+          (df.schema, df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+            intercept[Exception](Csv.writeSingle(df, out.toString)).getMessage)
+        }
+        val driver = attempt(dir.resolve(s"$name.driver"))
+        val spread = LocalWrite.distributedOnly(attempt(dir.resolve(s"$name.spark")))
+        assert(driver._1.isEmpty && driver._2 == local && !spread._2, name)
+        assert(driver._3 == spread._3, s"$name: $driver vs $spread")
+        def job(side: String): String = {
+          val svc = new JobService(spark,
+            new ParquetCatalog(spark, dir.resolve(s"$name.catalog.$side").toString))
+          assert(svc.register("u", "pw"))
+          val id = svc.startEtl("u", in.toString, dir.resolve(s"$name.etl.$side").toString,
+            Pipelines.EtlOptions(ai = false))
+          svc.jobs.filter(s"id = $id").select("status").head().getString(0)
+        }
+        assert(job("driver") == "Failed", s"$name, driver path")
+        assert(LocalWrite.distributedOnly(job("spark")) == "Failed", s"$name, Spark path")
+      }
+      // a frame with an empty struct at any depth goes to Spark's write
+      assert(!LocalWrite.writable(new CSVFileFormat, StructType(Nil)))
+      assert(!LocalWrite.writable(new ParquetFileFormat,
+        StructType(Seq(StructField("s", StructType(Nil))))))
+    } finally Dedup.deleteRecursively(dir)
+  }
+
+  test("the cutoff picks the path: an upload just within it is read on the " +
+      "driver, one just past it by Spark's scan over one listing") {
+    val dir = Files.createTempDirectory("graft_csv_cutoff")
+    try {
+      val (within, past) = nearCutoff(41)
+      assert(within.length <= LocalWrite.DriverBytes && past.length > LocalWrite.DriverBytes)
+      compare("within.csv", dir, Map("" -> within), text = true)
+      val in = dir.resolve("past.csv")
+      Files.write(in, past.getBytes(StandardCharsets.UTF_8))
+      // files listed and jobs run: the same as spark.read.csv's
+      def measured(read: => org.apache.spark.sql.DataFrame) = {
+        val files = HiveCatalogMetrics.METRIC_FILES_DISCOVERED
+        val before = files.getCount
+        val (df, jobs) = counted(read)
+        (df, files.getCount - before, jobs)
+      }
+      val (mine, myFiles, myJobs) = measured(Csv.read(spark, in.toString))
+      val (theirs, theirFiles, theirJobs) = measured(sparkRead(in.toString))
+      assert(!mine.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      assert(myFiles == theirFiles && myJobs == theirJobs,
+        s"files listed $myFiles vs $theirFiles, jobs $myJobs vs $theirJobs")
+      assert(mine.schema == theirs.schema)
+      assert(mine.collect().toSeq == theirs.collect().toSeq)
+    } finally Dedup.deleteRecursively(dir)
+  }
+
+  test("partition directories, a compressed upload and an empty directory " +
+      "read as spark.read.csv reads them") {
+    val dir = Files.createTempDirectory("graft_csv_fallbacks")
+    try {
+      Seq("k=1" -> upload(20, 51), "k=2" -> upload(30, 52)).foreach { case (k, body) =>
+        Files.createDirectories(dir.resolve(s"partitioned/$k"))
+        Files.write(dir.resolve(s"partitioned/$k/part.csv"),
+          body.getBytes(StandardCharsets.UTF_8))
+      }
+      val gz = dir.resolve("upload.csv.gz")
+      val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+      try out.write(upload(40, 53).getBytes(StandardCharsets.UTF_8)) finally out.close()
+      for (in <- Seq(dir.resolve("partitioned"), gz).map(_.toString)) {
+        val (mine, theirs) = (Csv.read(spark, in), sparkRead(in))
+        assert(!mine.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], in)
+        assert(mine.schema == theirs.schema, in)
+        assert(mine.collect().toSeq == theirs.collect().toSeq, in)
+      }
+      val none = Files.createDirectories(dir.resolve("none")).toString
+      assert(intercept[Exception](Csv.read(spark, none)).getMessage ==
+        intercept[Exception](sparkRead(none)).getMessage)
     } finally Dedup.deleteRecursively(dir)
   }
 }

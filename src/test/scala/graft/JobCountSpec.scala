@@ -31,9 +31,10 @@ import org.apache.spark.sql.types._
   * Control plane: `register`, `login`, `JobService.startEtl` on a
   * 200-row CSV upload and a `listJobs` poll over a parquet catalog of
   * three users. Their catalog work must not grow with the number of
-  * jobs already recorded. The same ops with Spark's driver limit off
-  * (`spark.sql.autoBroadcastJoinThreshold = -1`) take the distributed
-  * path, and must leave the same listing and output files. */
+  * jobs already recorded. The same ops with the driver path off
+  * (`LocalWrite.distributedOnly`) take the distributed path, must
+  * keep the same flat cost per job at any history, and must leave the
+  * same listing and output files. */
 class JobCountSpec extends SparkSpec {
 
   private val Vocab = Array("batch", "part", "spark", "line", "column",
@@ -226,7 +227,6 @@ class JobCountSpec extends SparkSpec {
 
   test("control-plane ops stay within their Spark job ceilings at any history") {
     val dir = java.nio.file.Files.createTempDirectory("graft_jobcount_etl")
-    val threshold = "spark.sql.autoBroadcastJoinThreshold"
     try {
       val in = dir.resolve("upload.csv")
       java.nio.file.Files.write(in, ("doc_id,review,rating\n" +
@@ -242,23 +242,22 @@ class JobCountSpec extends SparkSpec {
       assert(local.startEtl.forall(_ <= 3) && local.listJobs <= 3 &&
         local.login <= 1 && local.register.forall(_ <= 2), msg)
       assert(local.startEtl.head == local.startEtl.last, msg)
-      // with Spark's driver limit off, every op takes the distributed
-      // path: no more jobs than before the driver path existed, and
-      // the same listing and output bytes
-      val prev = spark.conf.getOption(threshold)
-      spark.conf.set(threshold, "-1")
-      val spread =
-        try controlPlane(dir.resolve("spark"), in.toString, 5)
-        finally prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
-      val offMsg = s"threshold off: startEtl ${spread.startEtl.mkString(",")}; " +
-        s"listJobs ${spread.listJobs}; login ${spread.login}; " +
-        s"register ${spread.register.mkString(",")}"
+      // with the driver path off (a catalog or an upload past the
+      // cutoff), every op takes the distributed path: no more jobs than
+      // before the driver path existed, the same count at any history,
+      // and the same listing and output bytes
+      val spread = graft.io.LocalWrite.distributedOnly(
+        controlPlane(dir.resolve("spark"), in.toString, 30))
+      val offMsg = s"driver path off: startEtl after 1..30 prior jobs: " +
+        s"${spread.startEtl.mkString(",")}; listJobs ${spread.listJobs}; " +
+        s"login ${spread.login}; register ${spread.register.mkString(",")}"
       info(offMsg)
       assert(spread.startEtl.forall(_ <= 7) && spread.listJobs <= 3 &&
-        spread.login <= 1, offMsg)
+        spread.login <= 1 && spread.register.forall(_ <= 4), offMsg)
+      assert(spread.startEtl.head == spread.startEtl.last, offMsg)
       assert(spread.startEtl.forall(_ > local.startEtl.max), offMsg)
-      assert(spread.listed == local.listed.takeRight(spread.listed.size))
-      assert(spread.outputs == local.outputs.take(spread.outputs.size))
+      assert(spread.listed == local.listed)
+      assert(spread.outputs == local.outputs)
     } finally Dedup.deleteRecursively(dir)
   }
 }

@@ -443,14 +443,10 @@ class PlanShapeSpec extends SparkSpec {
       assert(p.contains(scan), p)
       assert(!p.contains("Exchange hashpartitioning") && !p.contains("Join"), p)
     }
-    // past Spark's driver limit (here: the limit off) the read-back is
-    // Spark's csv scan; within it the processed file is read on the
+    // past the driver-path cutoff (here: the cutoff off) the read-back
+    // is Spark's csv scan; within it the processed file is read on the
     // driver, and the read-back is the local relation it became
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    try bare(plan("pipeline_full_etl"), "FileScan csv")
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    graft.io.LocalWrite.distributedOnly(bare(plan("pipeline_full_etl"), "FileScan csv"))
     bare(plan("pipeline_full_etl"), "LocalTableScan")
   }
 
