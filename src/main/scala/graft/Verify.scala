@@ -36,7 +36,7 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // no partial or earlier run's answer may stand in for it
-        graft.text.Dedup.deleteRecursively(Paths.get(s"$outDir/$name"))
+        graft.io.Staging.deleteRecursively(Paths.get(s"$outDir/$name"))
         Some(name)
       }
     }

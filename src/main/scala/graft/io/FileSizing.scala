@@ -19,7 +19,7 @@ package graft.io
   * snapshot, derivations read the just-published artifact) coalesce to
   * ceil(bytes / target) output partitions, floor 1. An append whose
   * rows are already on the driver needs no sizing: it lands one part
-  * file per artifact ([[graft.text.Dedup.appendIndexRows]]). Build-time writes
+  * file per artifact ([[IndexStore.appendIndexRows]]). Build-time writes
   * whose input is a compute-heavy scan (minhash/decode kernels) keep
   * their natural parallelism — a coalesce there would serialize the
   * kernel work, the r11 coalesce(1)-sink lesson.
@@ -42,11 +42,10 @@ object FileSizing {
     math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes)
       .min(Int.MaxValue).toInt
 
-  /** Total bytes under an artifact dir (one driver metadata RPC). */
-  def dirBytes(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Long =
-    fs.getContentSummary(p).getLength
-
-  def dirBytes(fs: org.apache.hadoop.fs.FileSystem, p: String): Long =
-    dirBytes(fs, new org.apache.hadoop.fs.Path(p))
+  /** Partition count for a rewrite sized by the artifact dir `dir`
+    * (one driver metadata RPC for its total bytes). */
+  def partsOf(dir: String): Int = {
+    val (fs, p) = IndexStore.hadoopFs(dir)
+    partsFor(fs.getContentSummary(p).getLength)
+  }
 }

@@ -50,23 +50,13 @@ object HealthQueries {
        |       CAST(0 AS BIGINT)
        |) ORDER BY family""".stripMargin
 
-  /** The live model-generation NUMBER of an index root (0 = the plain
-    * build layout, k = the committed `modelgen<k>` the readers
-    * resolve). */
-  private def gen(root: String): Long = {
-    val name = new org.apache.hadoop.fs.Path(ModelGens.liveRoot(root)).getName
-    if (name.startsWith(ModelGens.Prefix)) name.drop(ModelGens.Prefix.length).toLong
-    else 0L
-  }
-
-  /** Pending-tombstone count of a generation root as a 1-row frame
-    * (0 when the family never erased — the artifact is create-on-
-    * first-erase). */
-  private def tombs(s: SparkSession, liveRoot: String): DataFrame =
-    if (graft.text.Dedup.artifactExists(liveRoot, "tomb"))
-      s.read.parquet(graft.text.Dedup.livePath(liveRoot, "tomb").toString)
-        .agg(count(lit(1)).as("pending_tombstones"))
-    else s.range(1).select(lit(0L).as("pending_tombstones"))
+  /** Pending-tombstone count of an index root's live generation as a
+    * 1-row frame (0 when the family never erased — the artifact is
+    * create-on-first-erase). */
+  private def tombs(s: SparkSession, root: String): DataFrame =
+    IndexStore.tombstones(s, IndexStore.liveRoot(root))
+      .fold(s.range(1).select(lit(0L).as("pending_tombstones")))(
+        _.agg(count(lit(1)).as("pending_tombstones")))
 
   private def row(family: String, generation: Long, geometry: String,
       live: DataFrame, tomb: DataFrame): DataFrame =
@@ -93,23 +83,23 @@ object HealthQueries {
     val fText = Future { blocking {
       val textRoot = graft.text.DedupQueries.stagedRebuildPath(s, dir)
       val ixT = graft.text.Dedup.readIndex(s, textRoot)
-      row("text", gen(textRoot), s"${ixT.bands}x${ixT.rows}",
+      row("text", IndexStore.modelGen(textRoot), s"${ixT.bands}x${ixT.rows}",
         ixT.docs.agg(count(lit(1)).as("live_rows")),
-        tombs(s, ModelGens.liveRoot(textRoot)))
+        tombs(s, textRoot))
     } }
     val fEmb = Future { blocking {
       val embRoot = graft.sim.EmbIndexQueries.stagedEmbIndexPath(s, dir)
-      val (bits, _, _, _) = EmbIndex.readManifest(s, ModelGens.liveRoot(embRoot))
-      row("emb", gen(embRoot), s"${bits}bx2",
+      val (bits, _, _, _) = EmbIndex.readManifest(s, embRoot)
+      row("emb", IndexStore.modelGen(embRoot), s"${bits}bx2",
         EmbIndex.readIndex(s, embRoot).vecs.agg(count(lit(1)).as("live_rows")),
-        tombs(s, ModelGens.liveRoot(embRoot)))
+        tombs(s, embRoot))
     } }
     val fPq = Future { blocking {
       val pqRoot = graft.sim.PqIndexQueries.stagedPqIndexPath(s, dir)
-      row("pq", gen(pqRoot), s"m${Pq.M}k${Pq.K}c${PqIndex.KC}",
+      row("pq", IndexStore.modelGen(pqRoot), s"m${Pq.M}k${Pq.K}c${PqIndex.KC}",
         PqIndex.readIndex(s, pqRoot).codes
           .agg(countDistinct(col("vec_id")).as("live_rows")),
-        tombs(s, ModelGens.liveRoot(pqRoot)))
+        tombs(s, pqRoot))
     } }
     val fMm = Future { blocking {
       val mmRoot = MultimodalQueries.stagedMmHealthPath(s, dir)

@@ -63,9 +63,24 @@ object Staging {
                  _: java.nio.file.DirectoryNotEmptyException |
                  _: java.nio.file.AccessDeniedException => ()
           }
-        } finally graft.text.Dedup.deleteRecursively(tmp)
+        } finally deleteRecursively(tmp)
       }
     }
     target.toString
+  }
+
+  /** Depth-first recursive delete of a local tree (stream-closed,
+    * children before parents, missing entries tolerated) — the one
+    * spelling of the delete-tree idiom the staging, Verify and stream
+    * paths share. */
+  def deleteRecursively(p: java.nio.file.Path): Unit = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    if (Files.exists(p)) {
+      val w = Files.walk(p)
+      try w.iterator().asScala.toSeq.reverse
+        .foreach(x => Files.deleteIfExists(x))
+      finally w.close()
+    }
   }
 }

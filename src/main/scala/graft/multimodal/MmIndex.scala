@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.IndexStore
 
 /** Persisted multimodal perceptual-hash index [EXT] — the media
   * analogue of the three persisted index families (text MinHash
@@ -97,19 +98,13 @@ object MmIndex {
     * the physical purge rides [[compactIndex]]. The `sig` artifact
     * resolves through the create-only generation machinery (plain
     * build dir = generation 0; compaction publishes PURGED next
-    * generations). */
-  def readIndex(s: SparkSession, root: String): DataFrame = {
-    val sig = s.read.parquet(sigLive(root))
-    if (graft.text.Dedup.artifactExists(root, "tomb"))
-      sig.join(broadcast(s.read.parquet(
-          graft.text.Dedup.livePath(root, "tomb").toString)
-        .select("doc_id")), Seq("doc_id"), "left_anti")
-    else sig
-  }
+    * generations). Both artifacts open with their footer schema — no
+    * inference job. */
+  def readIndex(s: SparkSession, root: String): DataFrame =
+    IndexStore.dropErased(s, root, "doc_id")(IndexStore.open(s, root, "sig"))
 
   /** The live `sig` artifact generation. */
-  private[graft] def sigLive(root: String): String =
-    graft.text.Dedup.livePath(root, "sig").toString
+  private[graft] def sigLive(root: String): String = IndexStore.live(root, "sig")
 
   /** Right-to-erasure into the media index: append the request ids
     * (an EXTERNAL request list with a `doc_id` column) to the `tomb`
@@ -118,7 +113,7 @@ object MmIndex {
     * deltas; the physical rewrite rides the next [[compactIndex]].
     * O(|request|), no signature recompute, no media decode. */
   def eraseFromIndex(root: String, ids: DataFrame): Unit =
-    graft.text.Dedup.appendTombstones(root, ids.select(col("doc_id")))
+    IndexStore.appendTombstones(root, ids.select(col("doc_id")))
 
   /** Maintenance pass: physically purges tombstoned objects'
     * signature rows (published as the next create-only `sig`
@@ -127,32 +122,11 @@ object MmIndex {
     * crash-safe ordering as the text/embedding/PQ compactions. No-op
     * without tombstones (the signature table has no mergeable
     * partials to fold). */
-  def compactIndex(s: SparkSession, root: String): Unit = {
-    val hasTomb = graft.text.Dedup.artifactExists(root, "tomb") &&
-      s.read.parquet(graft.text.Dedup.livePath(root, "tomb").toString)
-        .limit(1).count() > 0
-    if (hasTomb) {
-      val tomb = s.read.parquet(
-          graft.text.Dedup.livePath(root, "tomb").toString)
-        .select("doc_id").localCheckpoint()
-      val cur = sigLive(root)
-      // hygiene: the purged rewrite coalesces append-accumulated tiny
-      // part files back to size-targeted ones (FileSizing, guide §6)
-      val (cFs, _) = graft.text.Dedup.hadoopFs(root)
-      val sigParts = graft.io.FileSizing.partsFor(
-        graft.io.FileSizing.dirBytes(cFs, cur))
-      graft.text.Dedup.publishNextGen(s, root, "sig") { sd =>
-        s.read.parquet(cur)
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .coalesce(sigParts)
-          .write.mode("overwrite").parquet(sd)
-      }
-      graft.text.Dedup.publishNextGen(s, root, "tomb") { sd =>
-        s.range(0).select(col("id").as("doc_id"))
-          .write.mode("overwrite").parquet(sd)
-      }
-    }
-  }
+  def compactIndex(s: SparkSession, root: String): Unit =
+    if (IndexStore.hasTombstones(s, root)) purge(s, root)
+
+  private def purge(s: SparkSession, root: String): Unit =
+    IndexStore.purgeErased(s, root, "doc_id", Seq("sig"))
 
   /** Repairs a RETRIED torn `sig` append via the one-row-per-object
     * invariant (a signature row is a pure function of the payload, so
@@ -176,10 +150,8 @@ object MmIndex {
     if (damaged.isEmpty) false
     else {
       // hygiene on the healed rewrite (FileSizing, guide §6)
-      val (rFs, _) = graft.text.Dedup.hadoopFs(root)
-      val sigParts = graft.io.FileSizing.partsFor(
-        graft.io.FileSizing.dirBytes(rFs, live))
-      graft.text.Dedup.publishNextGen(s, root, "sig") { sd =>
+      val sigParts = graft.io.FileSizing.partsOf(live)
+      IndexStore.publishNextGen(s, root, "sig") { sd =>
         val cur = s.read.parquet(live)
         cur.join(broadcast(damaged), Seq("doc_id"), "left_anti")
           .unionByName(cur.join(broadcast(damaged), Seq("doc_id"),
@@ -259,10 +231,9 @@ object MmIndex {
     * index, not a maintenance step). Step order / crash matrix:
     * [[graft.io.MaintenanceReport]] and `graft.MaintenanceSpec`. */
   def maintainIndex(s: SparkSession, root: String): graft.io.MaintenanceReport = {
-    val hasTomb = graft.text.Dedup.artifactExists(root, "tomb") &&
-      s.read.parquet(graft.text.Dedup.livePath(root, "tomb").toString)
-        .limit(1).count() > 0
-    if (hasTomb) compactIndex(s, root)
+    // the tombstone probe runs once: the purge takes its answer
+    val hasTomb = IndexStore.hasTombstones(s, root)
+    if (hasTomb) purge(s, root)
     val repaired = repairIndex(s, root)
     graft.io.MaintenanceReport(hasTomb, repaired, None)
   }

@@ -682,8 +682,7 @@ object MultimodalQueries {
       require(s.read.parquet(MmIndex.sigLive(root))
         .filter(col("doc_id") % 10 === 1).limit(1).count() == 0,
         "mm erase stage: erased rows survived the sig purge")
-      require(s.read.parquet(
-          graft.text.Dedup.livePath(root, "tomb").toString).count() == 0,
+      require(graft.io.IndexStore.open(s, root, "tomb").count() == 0,
         "mm erase stage: tombstone list not reset")
     }
 }

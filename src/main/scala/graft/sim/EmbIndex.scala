@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.IndexStore
 
 /** Persisted band index for the EMBEDDING near-dup family [EXT] — the
   * text MinHash index's production growing-corpus shape
@@ -74,11 +75,6 @@ object EmbIndex {
   def indexPostings(vecs: DataFrame): DataFrame =
     vecs.select(col("vec_id"), explode(col("bands")).as("bk"))
 
-  /** Per-bucket occupancy — mergeable partial-aggregate semantics
-    * (consumers SUM per bucket, so appended partials compose). */
-  def indexBucketStats(postings: DataFrame): DataFrame =
-    postings.groupBy("bk").agg(count(lit(1)).as("n"))
-
   /** Builds and persists the full index under `root`, resolving the
     * band width from the indexed corpus's own (count, minDim) — the
     * derived artifacts are re-read from the WRITTEN vecs parquet so
@@ -91,12 +87,10 @@ object EmbIndex {
     // derived postings coalesce to size-targeted files (FileSizing,
     // guide §6) — input is the just-written vecs parquet, no kernel
     // work left to serialize; vecs bytes bound post bytes
-    val (vFs, vPath) = graft.text.Dedup.hadoopFs(s"$root/vecs")
-    val vParts = graft.io.FileSizing.partsFor(
-      graft.io.FileSizing.dirBytes(vFs, vPath))
+    val vParts = graft.io.FileSizing.partsOf(s"$root/vecs")
     indexPostings(s.read.parquet(s"$root/vecs")).coalesce(vParts)
       .write.mode("overwrite").parquet(s"$root/post")
-    indexBucketStats(s.read.parquet(s"$root/post"))
+    IndexStore.bucketStats(s.read.parquet(s"$root/post"))
       .write.mode("overwrite").parquet(s"$root/bk")
     import s.implicits._
     // 1-row manifest; repartition(1) on a local relation carries no
@@ -107,58 +101,38 @@ object EmbIndex {
   }
 
   /** The manifest row: (bits, width_clamped, max_bucket, n_base).
-    * Content-stamp cached ([[graft.io.ManifestCache]]): the manifest is
-    * one row frozen at writeIndex, but decoding it through Spark is a
-    * driver-blocking job every readIndex/appendIndex would otherwise
-    * pay — the recurring per-micro-batch path of the ingest/serving
-    * streams (guide §1.2; the text family's manifestWidth pattern). */
-  def readManifest(s: SparkSession, root: String): (Int, Boolean, Int, Long) = {
-    val live = s"${graft.io.ModelGens.liveRoot(root)}/manifest"
-    graft.io.ManifestCache.cached(live) {
-      val r = s.read.parquet(live)
-        .select("bits", "width_clamped", "max_bucket", "n_base").head()
+    * Content-stamp cached ([[IndexStore.manifest]]): decoding it
+    * through Spark is a driver-blocking job every readIndex/appendIndex
+    * would otherwise pay. */
+  def readManifest(s: SparkSession, root: String): (Int, Boolean, Int, Long) =
+    IndexStore.manifest(s, IndexStore.liveRoot(root)) { m =>
+      val r = m.select("bits", "width_clamped", "max_bucket", "n_base").head()
       (r.getInt(0), r.getBoolean(1), r.getInt(2), r.getLong(3))
     }
-  }
 
   /** Opens a persisted index written by [[writeIndex]] / grown by
     * [[appendIndex]] / maintained by [[repairIndex]]. The derived
-    * artifacts resolve through the generation machinery the text
-    * index established ([[graft.text.Dedup.livePath]]: highest
-    * `_SUCCESS`-complete generation; the plain dir is generation 0) —
-    * including `vecs`, whose generations only ever change content by
-    * DEDUPLICATION of retried appends ([[repairIndex]]); appends grow
-    * the live generation in place. */
+    * artifacts resolve through the store's generations
+    * ([[IndexStore.livePath]]: highest `_SUCCESS`-complete generation;
+    * the plain dir is generation 0) — including `vecs`, whose
+    * generations only ever change content by DEDUPLICATION of retried
+    * appends ([[repairIndex]]) or erasure purges; appends grow the
+    * live generation in place. */
   def readIndex(s: SparkSession, root: String): EmbeddingIndex = {
-    val mr = graft.io.ModelGens.liveRoot(root)
+    val mr = IndexStore.liveRoot(root)
     val (bits, clamped, guard, _) = readManifest(s, mr)
-    // footer-schema opens: no inference job per artifact
-    // ([[graft.io.FooterSchema]])
-    def open(dir: String) = graft.io.FooterSchema.read(s, dir)
-    def live(part: String) = graft.text.Dedup.livePath(mr, part).toString
-    val vecs = open(vecsLive(mr))
-    val post = open(live("post"))
-    val (v, p) =
-      if (graft.text.Dedup.artifactExists(mr, "tomb")) {
-        // tombstone-aware open: erased vectors are anti-joined out of
-        // the record of truth AND the probe side, so from the erase
-        // call onward a tombstoned vector can neither reject a delta
-        // nor appear in any probe — physical removal happens at the
-        // next [[compactIndexStats]]. Tombstone sets are request-sized
-        // (GDPR lists), hence the broadcast hint. The bk sidecar stays
-        // UNFILTERED until compaction: occupancy that still counts
-        // erased members only over-guards (drops hot buckets sooner) —
-        // the conservative direction.
-        val tomb = broadcast(open(tombLive(mr)).select("vec_id"))
-        (vecs.join(tomb, Seq("vec_id"), "left_anti"),
-          post.join(tomb, Seq("vec_id"), "left_anti"))
-      } else (vecs, post)
-    EmbeddingIndex(v, p, open(live("bk")), bits, clamped, guard)
+    // tombstone-aware open: erased vectors leave the record of truth
+    // AND the probe side, so from the erase call onward a tombstoned
+    // vector can neither reject a delta nor appear in any probe —
+    // physical removal happens at the next [[compactIndexStats]]. The
+    // bk sidecar stays UNFILTERED until compaction: occupancy that
+    // still counts erased members only over-guards (drops hot buckets
+    // sooner) — the conservative direction.
+    val live = IndexStore.dropErased(s, mr, "vec_id")
+    EmbeddingIndex(live(IndexStore.open(s, mr, "vecs")),
+      live(IndexStore.open(s, mr, "post")), IndexStore.open(s, mr, "bk"),
+      bits, clamped, guard)
   }
-
-  private def tombLive(root: String): String =
-    graft.text.Dedup.livePath(
-      graft.io.ModelGens.liveRoot(root), "tomb").toString
 
   /** Top-k SERVING from the persisted band index — the query a
     * vector-store user runs against a loaded index (the band family's
@@ -241,7 +215,7 @@ object EmbIndex {
     // fetch 1: the postings of the queries' buckets → distinct
     // (query, candidate) pairs, the query itself excluded
     val cand: Map[Any, Seq[Long]] =
-      graft.text.Dedup.withBroadcast(sc, qOf.keySet) { keys =>
+      IndexStore.withBroadcast(sc, qOf.keySet) { keys =>
         val hit = udf((bk: Row) => bk != null && keys.value(bk))
         ix.postings.filter(hit(col("bk"))).select("vec_id", "bk").collect()
       }.toSeq.filterNot(_.isNullAt(0)).flatMap { r =>
@@ -251,7 +225,7 @@ object EmbIndex {
     if (cand.isEmpty) return local(Nil, outSchema)
     // fetch 2: every vecs row of a candidate
     val rowsOf: Map[Long, Seq[Row]] =
-      graft.text.Dedup.withBroadcast(sc, cand.values.flatten.toSet) { ids =>
+      IndexStore.withBroadcast(sc, cand.values.flatten.toSet) { ids =>
         val hit = udf((id: Long) => ids.value(id))
         vecsAt.filter(hit(col("vec_id"))).collect()
       }.toSeq.groupBy(_.getLong(0))
@@ -287,77 +261,23 @@ object EmbIndex {
     * the physical rewrite is deferred to [[compactIndexStats]], where
     * it rides the maintenance pass the sidecar needs anyway. */
   def eraseFromIndex(root: String, ids: DataFrame): Unit =
-    graft.text.Dedup.appendTombstones(
-      graft.io.ModelGens.liveRoot(root), ids.select(col("vec_id")))
+    IndexStore.appendTombstones(IndexStore.liveRoot(root), ids.select(col("vec_id")))
 
   /** Maintenance pass — the embedding twin of
-    * [[graft.text.Dedup.compactIndexStats]], plus tombstone purge:
-    *
-    *  - ALWAYS: the `bk` sidecar returns to one row per bucket.
-    *    Every [[appendIndex]] adds a partial row-set and every probe
-    *    sums per bucket, so correctness never degrades — but a
-    *    daily-append year leaves ~365 partials per bucket and the
-    *    probe-time aggregation pays for the history. Compaction is
-    *    the maintenance half of the mergeable-partials contract.
-    *  - WHEN TOMBSTONES EXIST: erased vectors are physically removed
-    *    from `vecs` and `post` (published as next create-only
-    *    generations), `bk` is re-derived from the purged postings
-    *    (one row per bucket — compaction implicit), and the tombstone
-    *    list is reset LAST — a crash at any point leaves the
-    *    tombstones in force and every artifact at some complete
-    *    generation, so probes stay erasure-correct throughout.
-    *
-    * Same single-writer assumption as [[appendIndex]]; results are
-    * bit-identical before/after for non-erased data (the probe sums
-    * partials either way). The manifest's `n_base` is informational
-    * and intentionally untouched — the frozen WIDTH is the contract,
-    * and erasure shrinks a corpus, never grows it past the width's
-    * density point. */
+    * [[graft.text.Dedup.compactIndexStats]]: with erasures pending,
+    * erased vectors are purged from `vecs` and `post`, `bk` is
+    * re-derived from the purged postings and the tombstone list resets
+    * LAST; without, the `bk` sidecar's append partials fold back to
+    * one row per bucket ([[IndexStore.compactBanded]]). Same
+    * single-writer assumption as [[appendIndex]]; results are
+    * bit-identical before/after for non-erased data. The manifest's
+    * `n_base` is informational and intentionally untouched — the
+    * frozen WIDTH is the contract, and erasure shrinks a corpus, never
+    * grows it past the width's density point. */
   def compactIndexStats(s: SparkSession, root0: String): Unit = {
-    val root = graft.io.ModelGens.liveRoot(root0)
-    val hasTomb = graft.text.Dedup.artifactExists(root, "tomb") &&
-      s.read.parquet(tombLive(root)).limit(1).count() > 0
-    if (hasTomb) {
-      val tomb = s.read.parquet(tombLive(root)).select("vec_id")
-        .localCheckpoint() // snapshot: outlives the tomb reset below
-      // compaction doubles as the file-hygiene pass (FileSizing,
-      // guide §6): purged rewrites coalesce the append-accumulated
-      // tiny part files back to size-targeted ones
-      val (cFs, _) = graft.text.Dedup.hadoopFs(root)
-      def sized(p: String): Int = graft.io.FileSizing.partsFor(
-        graft.io.FileSizing.dirBytes(cFs, p))
-      val curVecs = vecsLive(root)
-      val vecsParts = sized(curVecs)
-      graft.text.Dedup.publishNextGen(s, root, "vecs") { sd =>
-        s.read.parquet(curVecs)
-          .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-          .coalesce(vecsParts)
-          .write.mode("overwrite").parquet(sd)
-      }
-      val curPost = graft.text.Dedup.livePath(root, "post").toString
-      val postParts = sized(curPost)
-      graft.text.Dedup.publishNextGen(s, root, "post") { sd =>
-        s.read.parquet(curPost)
-          .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-          .coalesce(postParts)
-          .write.mode("overwrite").parquet(sd)
-      }
-      graft.text.Dedup.publishNextGen(s, root, "bk") { sd =>
-        indexBucketStats(s.read.parquet(
-            graft.text.Dedup.livePath(root, "post").toString))
-          .write.mode("overwrite").parquet(sd)
-      }
-      graft.text.Dedup.publishNextGen(s, root, "tomb") { sd =>
-        s.range(0).select(col("id").as("vec_id"))
-          .write.mode("overwrite").parquet(sd)
-      }
-    } else {
-      val curBk = graft.text.Dedup.livePath(root, "bk").toString
-      graft.text.Dedup.publishNextGen(s, root, "bk") { sd =>
-        s.read.parquet(curBk).groupBy("bk").agg(sum("n").as("n"))
-          .write.mode("overwrite").parquet(sd)
-      }
-    }
+    val root = IndexStore.liveRoot(root0)
+    IndexStore.compactBanded(s, root, "vec_id", "vecs",
+      IndexStore.hasTombstones(s, root))
   }
 
   /** The live `vecs` artifact. Normally the plain build-time dir
@@ -366,8 +286,7 @@ object EmbIndex {
     * append leaves duplicate vec_id rows — so consumers resolve
     * through the same generation machinery as post/bk. */
   private[graft] def vecsLive(root: String): String =
-    graft.text.Dedup.livePath(
-      graft.io.ModelGens.liveRoot(root), "vecs").toString
+    IndexStore.live(IndexStore.liveRoot(root), "vecs")
 
   /** Repairs a torn append (the crash-recovery half of the append
     * contract — the text index's [[graft.text.Dedup.repairIndex]]
@@ -378,7 +297,7 @@ object EmbIndex {
     * ordering permits is derived rows (post/bk) for vectors absent
     * from `vecs`; on detection both derived artifacts are re-derived
     * from the distinct-by-id `vecs` rows and published as next
-    * create-only generations ([[graft.text.Dedup.publishNextGen]] —
+    * create-only generations ([[IndexStore.publishDerived]] —
     * committer-marker-gated, rename-free, no instant without a live
     * artifact), `bk` from the freshly PUBLISHED postings so the two
     * cannot drift. The double-retry tear (a fully-landed append
@@ -389,7 +308,7 @@ object EmbIndex {
     * heal too, not just the probe path. Returns true iff a repair
     * was performed; a second call is a detected no-op. */
   def repairIndex(s: SparkSession, root0: String): Boolean = {
-    val root = graft.io.ModelGens.liveRoot(root0)
+    val root = IndexStore.liveRoot(root0)
     // The OTHER tear class: a fully-landed append retried end-to-end
     // duplicates a delta's rows in ALL THREE artifacts — post/bk heal
     // below via the count compare, but `vecs` is what emb_index_build
@@ -401,39 +320,19 @@ object EmbIndex {
     val dupVecs = s.read.parquet(vecsLive(root))
       .groupBy("vec_id").agg(count(lit(1)).as("__n"))
       .filter(col("__n") > 1L).limit(1).count() > 0
-    val (rFs, _) = graft.text.Dedup.hadoopFs(root)
-    def sized(p: String): Int = graft.io.FileSizing.partsFor(
-      graft.io.FileSizing.dirBytes(rFs, p))
     if (dupVecs) {
       val cur = vecsLive(root)
-      val vecsParts = sized(cur)
-      graft.text.Dedup.publishNextGen(s, root, "vecs") { sd =>
+      val vecsParts = graft.io.FileSizing.partsOf(cur)
+      IndexStore.publishNextGen(s, root, "vecs") { sd =>
         s.read.parquet(cur).dropDuplicates("vec_id")
           .coalesce(vecsParts)
           .write.mode("overwrite").parquet(sd)
       }
     }
     def vecsDocs = s.read.parquet(vecsLive(root)).dropDuplicates("vec_id")
-    val want = vecsDocs.select(col("vec_id")).withColumn("__want", lit(2L))
-    val have = s.read
-      .parquet(graft.text.Dedup.livePath(root, "post").toString)
-      .groupBy("vec_id").agg(count(lit(1)).as("__have"))
-    val torn = dupVecs || want.join(have, Seq("vec_id"), "full_outer")
-      .filter(col("__want").isNull || col("__have").isNull ||
-        col("__want") =!= col("__have"))
-      .limit(1).count() > 0
-    if (torn) {
-      val postParts = sized(vecsLive(root))
-      graft.text.Dedup.publishNextGen(s, root, "post") { sd =>
-        indexPostings(vecsDocs).coalesce(postParts)
-          .write.mode("overwrite").parquet(sd)
-      }
-      graft.text.Dedup.publishNextGen(s, root, "bk") { sd =>
-        indexBucketStats(s.read.parquet(
-            graft.text.Dedup.livePath(root, "post").toString))
-          .write.mode("overwrite").parquet(sd)
-      }
-    }
+    val torn = dupVecs || IndexStore.postingsTorn(s, root, vecsDocs, "vec_id", 2)
+    if (torn)
+      IndexStore.publishDerived(s, root, vecsDocs, vecsLive(root), indexPostings)
     torn
   }
 
@@ -444,16 +343,16 @@ object EmbIndex {
     * count is a REBUILD, not an append; see the manifest contract in
     * the object scaladoc). Delta-sized appends to all three
     * artifacts through the shared writer
-    * [[graft.text.Dedup.appendIndexRows]]; the corpus side is never
+    * [[IndexStore.appendIndexRows]]; the corpus side is never
     * rewritten. The rows snapshot first — on the driver when
     * `accepted` is a local relation, to scratch parquet otherwise —
     * because an accepted frame lazily derived from the index being
     * grown must not re-screen against the half-grown index; `vecs` —
     * the record of truth — lands LAST (see the crash contract above). */
   def appendIndex(root0: String, accepted: DataFrame): Unit = {
-    val root = graft.io.ModelGens.liveRoot(root0)
+    val root = IndexStore.liveRoot(root0)
     val (bits, _, _, _) = readManifest(accepted.sparkSession, root)
-    graft.text.Dedup.appendIndexRows(root, "vecs", buildRows(accepted, bits),
+    IndexStore.appendIndexRows(root, "vecs", buildRows(accepted, bits),
       indexPostings)
   }
 
@@ -465,7 +364,7 @@ object EmbIndex {
   // every bucket's occupancy toward the hot-bucket guard. The
   // maintenance is a REBUILD at the width the LIVE count resolves,
   // published as a complete sibling generation under `modelgen<k>`
-  // ([[graft.io.ModelGens]] — the PQ codebook refresh's machinery):
+  // ([[IndexStore.publishModelGen]] — the PQ codebook refresh's machinery):
   // band keys from two widths never meet in a probe, so a rebuild
   // can no more be an append than a PQ retrain can, and the old
   // generation stays intact for in-flight readers.
@@ -480,17 +379,10 @@ object EmbIndex {
     * resurrect erased vectors). Returns the new generation root. */
   def rebuildIndex(s: SparkSession, root: String,
       source: DataFrame): String = {
-    val mr = graft.io.ModelGens.liveRoot(root)
+    val mr = IndexStore.liveRoot(root)
     val (_, _, guard, _) = readManifest(s, mr)
-    val src =
-      if (graft.text.Dedup.artifactExists(mr, "tomb"))
-        source.join(broadcast(s.read.parquet(tombLive(mr))
-          .select("vec_id")), Seq("vec_id"), "left_anti")
-      else source
-    val sub = graft.io.ModelGens.nextRoot(root)
-    writeIndex(src, sub, guard)
-    graft.io.ModelGens.commit(sub)
-    sub
+    val src = IndexStore.dropErased(s, mr, "vec_id")(source)
+    IndexStore.publishModelGen(root)(writeIndex(src, _, guard))
   }
 
   /** The occupancy-triggered rebuild: fires iff the width the LIVE
@@ -502,7 +394,7 @@ object EmbIndex {
     * new generation root when it fired. */
   def rebuildIfDegraded(s: SparkSession, root: String,
       source: DataFrame): Option[String] = {
-    val mr = graft.io.ModelGens.liveRoot(root)
+    val mr = IndexStore.liveRoot(root)
     val (bits, _, guard, _) = readManifest(s, mr)
     val ix = readIndex(s, mr)
     val nLive = ix.vecs.count()
@@ -525,15 +417,11 @@ object EmbIndex {
     * [[graft.io.MaintenanceReport]] and `graft.MaintenanceSpec`. */
   def maintainIndex(s: SparkSession, root: String,
       source: DataFrame): graft.io.MaintenanceReport = {
-    val mr = graft.io.ModelGens.liveRoot(root)
-    val hasTomb = graft.text.Dedup.artifactExists(mr, "tomb") &&
-      s.read.parquet(tombLive(mr)).limit(1).count() > 0
-    val hasPartials = s.read.parquet(
-        graft.text.Dedup.livePath(mr, "bk").toString)
-      .groupBy("bk").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1).limit(1).count() > 0
-    val doCompact = hasTomb || hasPartials
-    if (doCompact) compactIndexStats(s, mr)
+    val mr = IndexStore.liveRoot(root)
+    // the tombstone probe runs once: the purge takes its answer
+    val hasTomb = IndexStore.hasTombstones(s, mr)
+    val doCompact = hasTomb || IndexStore.hasPartials(s, mr)
+    if (doCompact) IndexStore.compactBanded(s, mr, "vec_id", "vecs", hasTomb)
     val repaired = repairIndex(s, mr)
     val regen = rebuildIfDegraded(s, root, source)
     graft.io.MaintenanceReport(doCompact, repaired, regen)
@@ -586,7 +474,7 @@ object EmbIndex {
       delta: DataFrame, num: Int, den: Int): Unit = {
     val (dIx, rejected) = screenIndexed(index, delta, num, den)
     val acc = dIx.join(rejected, Seq("vec_id"), "left_anti")
-    graft.text.Dedup.appendIndexRows(root0, "vecs",
+    IndexStore.appendIndexRows(root0, "vecs",
       delta.sparkSession.createDataFrame(acc.collectAsList(), acc.schema),
       indexPostings)
   }

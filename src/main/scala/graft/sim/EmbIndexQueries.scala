@@ -666,7 +666,7 @@ object EmbIndexQueries {
       EmbIndex.writeIndex(emb.filter(col("vec_id") % 20 === 0), root,
         maxBucket = 4)
       EmbIndex.appendIndex(root, emb.filter(col("vec_id") % 20 =!= 0))
-      val gen0Vecs = graft.text.Dedup.livePath(root, "vecs").toString
+      val gen0Vecs = graft.io.IndexStore.live(root, "vecs")
       val before = s.read.parquet(gen0Vecs).count()
       require(EmbIndex.rebuildIfDegraded(s, root, emb).isDefined,
         "emb rebuild stage: occupancy trigger did not fire on the " +
@@ -751,7 +751,7 @@ object EmbIndexQueries {
         embeddings(s, dir).filter(col("vec_id") % 4 === 2), bits)
       EmbIndex.indexPostings(ixd)
         .write.mode("append").parquet(s"$root/post")
-      EmbIndex.indexBucketStats(EmbIndex.indexPostings(ixd))
+      graft.io.IndexStore.bucketStats(EmbIndex.indexPostings(ixd))
         .write.mode("append").parquet(s"$root/bk")
       require(EmbIndex.repairIndex(s, root),
         "emb repair stage: torn append not detected")
@@ -775,7 +775,7 @@ object EmbIndexQueries {
       (1 to 3).foreach(m =>
         EmbIndex.appendIndex(root, emb.filter(col("vec_id") % 8 === m)))
       def bk = s.read.parquet(
-        graft.text.Dedup.livePath(root, "bk").toString)
+        graft.io.IndexStore.live(root, "bk"))
       val (rows, buckets) = (bk.count(), bk.select("bk").distinct().count())
       require(rows > buckets,
         s"compact stage: no partials to compact ($rows rows / $buckets buckets)")
@@ -806,8 +806,7 @@ object EmbIndexQueries {
       EmbIndex.eraseFromIndex(root,
         emb.filter(col("vec_id") % 10 === 1).select("vec_id"))
       EmbIndex.compactIndexStats(s, root)
-      def live(part: String) = s.read.parquet(
-        graft.text.Dedup.livePath(root, part).toString)
+      def live(part: String) = graft.io.IndexStore.open(s, root, part)
       require(s.read.parquet(EmbIndex.vecsLive(root))
         .filter(col("vec_id") % 10 === 1).limit(1).count() == 0,
         "erase stage: erased rows survived the vecs purge")

@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.IndexStore
 
 /** Persisted PQ index [EXT] — the ANN ladder's compression stage given
   * the same production growing-corpus shape as the text MinHash and
@@ -120,13 +121,6 @@ object PqIndex {
   // ignores — readers stay on the old generation; re-running the
   // refresh writes the next number.
 
-  /** The LIVE model generation's root ([[graft.io.ModelGens]] — the
-    * machinery is shared with the embedding index's width rebuild).
-    * Every public API entry resolves through this, so callers keep
-    * addressing the index by its stable root. */
-  private[graft] def liveModelRoot(root: String): String =
-    graft.io.ModelGens.liveRoot(root)
-
   /** Retrains codebook + coarse quantizer on `source` (the CURRENT
     * corpus — base plus every appended delta), re-encodes all of it,
     * and publishes the result as the next model generation. Returns
@@ -136,7 +130,7 @@ object PqIndex {
     * the old generation never tears). */
   def refreshIndex(s: SparkSession, root: String,
       source: DataFrame): String = {
-    val mr = liveModelRoot(root)
+    val mr = IndexStore.liveRoot(root)
     // the live generation's PENDING TOMBSTONES carry into the refresh
     // as an anti-join on the training/encoding source: a retrain is
     // the one maintenance pass that REBUILDS the per-vector record,
@@ -145,16 +139,8 @@ object PqIndex {
     // even let the erased mass's drift be what trips the trigger.
     // The new generation then needs no tomb artifact at all: erased
     // rows never enter it.
-    val src =
-      if (graft.text.Dedup.artifactExists(mr, "tomb"))
-        source.join(broadcast(s.read.parquet(
-            graft.text.Dedup.livePath(mr, "tomb").toString)
-          .select("vec_id")), Seq("vec_id"), "left_anti")
-      else source
-    val sub = graft.io.ModelGens.nextRoot(root)
-    writeIndex(src, sub)
-    graft.io.ModelGens.commit(sub)
-    sub
+    val src = IndexStore.dropErased(s, mr, "vec_id")(source)
+    IndexStore.publishModelGen(root)(writeIndex(src, _))
   }
 
   /** The distortion-triggered refresh: retrains iff the LIVE codes'
@@ -166,7 +152,7 @@ object PqIndex {
     * root when it fired, None when the drift is within budget. */
   def refreshIfDrifted(s: SparkSession, root: String, source: DataFrame,
       num: Long = 11, den: Long = 10): Option[String] = {
-    val mr = liveModelRoot(root)
+    val mr = IndexStore.liveRoot(root)
     val manifest = s.read.parquet(s"$mr/manifest")
     // a generation persisted before the baseline columns existed has
     // no drift reference — refreshing ONCE (explicit policy, not an
@@ -209,11 +195,10 @@ object PqIndex {
     * [[graft.io.MaintenanceReport]] and `graft.MaintenanceSpec`. */
   def maintainIndex(s: SparkSession, root: String, source: DataFrame,
       num: Long = 11, den: Long = 10): graft.io.MaintenanceReport = {
-    val mr = liveModelRoot(root)
-    val hasTomb = graft.text.Dedup.artifactExists(mr, "tomb") &&
-      s.read.parquet(graft.text.Dedup.livePath(mr, "tomb").toString)
-        .limit(1).count() > 0
-    if (hasTomb) compactIndex(s, mr)
+    val mr = IndexStore.liveRoot(root)
+    // the tombstone probe runs once: the purge takes its answer
+    val hasTomb = IndexStore.hasTombstones(s, mr)
+    if (hasTomb) purge(s, mr)
     val repaired = repairIndex(s, mr, source)
     val regen = refreshIfDrifted(s, root, source, num, den)
     graft.io.MaintenanceReport(hasTomb, repaired, regen)
@@ -232,36 +217,27 @@ object PqIndex {
       .select("vec_id", "sub", "code", "d2", "cell")
 
   /** The manifest row: (m, k, kc, n_base). Content-stamp cached
-    * ([[graft.io.ManifestCache]]) — same rationale as
+    * ([[IndexStore.manifest]]) — same rationale as
     * [[graft.sim.EmbIndex.readManifest]]: skip the driver head() job
     * on every readIndex/appendIndex of an unchanged generation. */
-  def readManifest(s: SparkSession, root: String): (Int, Int, Int, Long) = {
-    val live = s"${liveModelRoot(root)}/manifest"
-    graft.io.ManifestCache.cached(live) {
-      val r = s.read.parquet(live)
-        .select("m", "k", "kc", "n_base").head()
+  def readManifest(s: SparkSession, root: String): (Int, Int, Int, Long) =
+    IndexStore.manifest(s, IndexStore.liveRoot(root)) { m =>
+      val r = m.select("m", "k", "kc", "n_base").head()
       (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))
     }
-  }
 
   def readIndex(s: SparkSession, root: String): PqIndexArt = {
-    val mr = liveModelRoot(root)
+    val mr = IndexStore.liveRoot(root)
     val (m, k, kc, _) = readManifest(s, mr)
     // `cell` comes back as a partition-directory column (type as
     // inferred); [[topKRouted]] casts its tiny probe frame to match,
     // never the scan side — a cast around the partition column would
     // defeat partition pruning.
-    val codes = s.read.parquet(graft.text.Dedup.livePath(mr, "codes").toString)
-    val c =
-      if (graft.text.Dedup.artifactExists(mr, "tomb"))
-        // tombstone-aware open (the erasure contract shared by all
-        // three index families): erased vectors' codes are anti-joined
-        // out, so they can appear in no ADC ranking from the erase
-        // call on; physical purge at the next [[compactIndex]]
-        codes.join(broadcast(s.read.parquet(
-            graft.text.Dedup.livePath(mr, "tomb").toString)
-          .select("vec_id")), Seq("vec_id"), "left_anti")
-      else codes
+    // tombstone-aware open: erased vectors' codes are anti-joined
+    // out, so they can appear in no ADC ranking from the erase call on;
+    // physical purge at the next [[compactIndex]]
+    val c = IndexStore.dropErased(s, mr, "vec_id")(
+      s.read.parquet(IndexStore.live(mr, "codes")))
     PqIndexArt(s.read.parquet(s"$mr/codebook"), c,
       s.read.parquet(s"$mr/coarse"), m, k, kc)
   }
@@ -333,13 +309,13 @@ object PqIndex {
     * build dir = generation 0; [[compactIndex]] publishes PURGED next
     * codes generations within a model generation). */
   private[graft] def codesLive(root: String): String =
-    graft.text.Dedup.livePath(liveModelRoot(root), "codes").toString
+    IndexStore.live(IndexStore.liveRoot(root), "codes")
 
   /** Right-to-erasure into the PQ index: append the request ids to
     * the live model generation's `tomb` artifact (probes exclude them
     * immediately); the physical rewrite rides [[compactIndex]]. */
   def eraseFromIndex(root: String, ids: DataFrame): Unit =
-    graft.text.Dedup.appendTombstones(liveModelRoot(root),
+    IndexStore.appendTombstones(IndexStore.liveRoot(root),
       ids.select(col("vec_id")))
 
   /** Maintenance pass: physically purges tombstoned vectors' codes
@@ -352,33 +328,13 @@ object PqIndex {
     * decision). No-op when no tombstones exist (PQ has no mergeable
     * sidecar partials to compact). */
   def compactIndex(s: SparkSession, root: String): Unit = {
-    val mr = liveModelRoot(root)
-    val hasTomb = graft.text.Dedup.artifactExists(mr, "tomb") &&
-      s.read.parquet(graft.text.Dedup.livePath(mr, "tomb").toString)
-        .limit(1).count() > 0
-    if (hasTomb) {
-      val tomb = s.read.parquet(
-          graft.text.Dedup.livePath(mr, "tomb").toString)
-        .select("vec_id").localCheckpoint()
-      val cur = graft.text.Dedup.livePath(mr, "codes").toString
-      // hygiene: the purged rewrite coalesces append-accumulated part
-      // files (per input task × per cell) back toward size-targeted
-      // counts (FileSizing, guide §6)
-      val (cFs, _) = graft.text.Dedup.hadoopFs(mr)
-      val codesParts = graft.io.FileSizing.partsFor(
-        graft.io.FileSizing.dirBytes(cFs, cur))
-      graft.text.Dedup.publishNextGen(s, mr, "codes") { sd =>
-        s.read.parquet(cur)
-          .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-          .coalesce(codesParts)
-          .write.partitionBy("cell").mode("overwrite").parquet(sd)
-      }
-      graft.text.Dedup.publishNextGen(s, mr, "tomb") { sd =>
-        s.range(0).select(col("id").as("vec_id"))
-          .write.mode("overwrite").parquet(sd)
-      }
-    }
+    val mr = IndexStore.liveRoot(root)
+    if (IndexStore.hasTombstones(s, mr)) purge(s, mr)
   }
+
+  private def purge(s: SparkSession, mr: String): Unit =
+    IndexStore.purgeErased(s, mr, "vec_id", Seq("codes"),
+      write = (df, dir) => df.write.partitionBy("cell").mode("overwrite").parquet(dir))
 
   /** Repairs a torn or retried `codes` append via the exact
     * M-codes-per-vector invariant (count = distinct subs = manifest
@@ -399,9 +355,9 @@ object PqIndex {
     * through the generation copy without decode. */
   def repairIndex(s: SparkSession, root: String,
       source: DataFrame): Boolean = {
-    val mr = liveModelRoot(root)
+    val mr = IndexStore.liveRoot(root)
     val (m, _, _, _) = readManifest(s, mr)
-    val live = graft.text.Dedup.livePath(mr, "codes").toString
+    val live = IndexStore.live(mr, "codes")
     val damaged = s.read.parquet(live)
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n"), countDistinct(col("sub")).as("nd"))
@@ -440,12 +396,10 @@ object PqIndex {
     * rewritten artifact's cell type an accident of union widening. */
   private def publishCleanCodes(s: SparkSession, root: String,
       drop: DataFrame, add: DataFrame): Unit = {
-    val cur = graft.text.Dedup.livePath(root, "codes").toString
+    val cur = IndexStore.live(root, "codes")
     // hygiene on the healed rewrite too (FileSizing, guide §6)
-    val (rFs, _) = graft.text.Dedup.hadoopFs(root)
-    val codesParts = graft.io.FileSizing.partsFor(
-      graft.io.FileSizing.dirBytes(rFs, cur))
-    graft.text.Dedup.publishNextGen(s, root, "codes") { sd =>
+    val codesParts = graft.io.FileSizing.partsOf(cur)
+    IndexStore.publishNextGen(s, root, "codes") { sd =>
       s.read.parquet(cur)
         .join(drop, Seq("vec_id"), "left_anti")
         .select(col("vec_id"), col("sub"), col("code"), col("d2"),
@@ -469,8 +423,8 @@ object PqIndex {
     * whose accepted frame derives from the probed index). */
   def appendIndex(root: String, delta: DataFrame): Unit = {
     val s = delta.sparkSession
-    val mr = liveModelRoot(root)
-    val live = graft.text.Dedup.livePath(mr, "codes").toString
+    val mr = IndexStore.liveRoot(root)
+    val live = IndexStore.live(mr, "codes")
     withCells(Pq.encodeAt(delta, s.read.parquet(s"$mr/codebook")),
         delta, s.read.parquet(s"$mr/coarse"))
       .write.partitionBy("cell").mode("append").parquet(live)

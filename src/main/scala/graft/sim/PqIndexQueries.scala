@@ -319,8 +319,7 @@ object PqIndexQueries {
       require(s.read.parquet(PqIndex.codesLive(root))
         .filter(col("vec_id") % 10 === 1).limit(1).count() == 0,
         "pq erase stage: erased rows survived the codes purge")
-      require(s.read.parquet(
-          graft.text.Dedup.livePath(root, "tomb").toString).count() == 0,
+      require(graft.io.IndexStore.open(s, root, "tomb").count() == 0,
         "pq erase stage: tombstone list not reset")
     }
 
@@ -344,7 +343,7 @@ object PqIndexQueries {
       val emb = embeddings(s, dir)
       PqIndex.writeIndex(emb.filter(col("vec_id") <= 15), root)
       PqIndex.appendIndex(root, emb.filter(col("vec_id") > 15))
-      val gen0Codes = graft.text.Dedup.livePath(root, "codes").toString
+      val gen0Codes = graft.io.IndexStore.live(root, "codes")
       val before = s.read.parquet(gen0Codes).count()
       require(PqIndex.refreshIfDrifted(s, root, emb).isDefined,
         "pq refresh stage: drift trigger did not fire on the " +

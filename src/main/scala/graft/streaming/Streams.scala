@@ -322,7 +322,7 @@ object Streams {
           .findFirst().get() finally ls.close()
         Files.move(part, stageDir.resolve(fileName),
           StandardCopyOption.REPLACE_EXISTING)
-        graft.text.Dedup.deleteRecursively(outDir)
+        graft.io.Staging.deleteRecursively(outDir)
         Files.setLastModifiedTime(stageDir.resolve(fileName),
           FileTime.fromMillis(now - (files.size - 1 - i) * 60000L))
       } }

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
+import graft.io.IndexStore
 
 /** Near-duplicate detection for training-data pipelines [EXT]
   * (BASELINE.json north_star "dedup"). Three families:
@@ -241,14 +242,6 @@ object Dedup {
   def indexPostings(ixDocs: DataFrame): DataFrame =
     ixDocs.select(col("id"), explode(col("bands")).as("bk"))
 
-  /** Per-bucket occupancy derived from postings — the hot-bucket
-    * sidecar. MERGEABLE partial-aggregate semantics: the table may
-    * hold several rows per bucket (one per append generation); every
-    * consumer sums per bucket, so appending a delta's partial counts
-    * composes without rewriting corpus-wide stats. */
-  def indexBucketStats(postings: DataFrame): DataFrame =
-    postings.groupBy("bk").agg(count(lit(1)).as("n"))
-
   /** Writes the full three-part persisted index under `root`:
     * `root/ix` (per-doc band arrays + shingle sets — the verify
     * reference and content-of-record), `root/post` (bucket postings —
@@ -277,9 +270,7 @@ object Dedup {
     // serialize), and the local splitter would otherwise emit one
     // tiny part file per core. ix bytes bound post bytes (shingle
     // sets dominate the per-doc row), so they size the coalesce.
-    val (ixFs, ixPath) = hadoopFs(s"$root/ix")
-    val ixParts = graft.io.FileSizing.partsFor(
-      graft.io.FileSizing.dirBytes(ixFs, ixPath))
+    val ixParts = graft.io.FileSizing.partsOf(s"$root/ix")
     // both derived artifacts re-derive from the WRITTEN ix parquet (so
     // the three artifacts cannot drift); they are independent of each
     // other, so the two writes overlap (guide §2.6 — day-0 writeIndex
@@ -292,7 +283,7 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$root/post")
     }
     val fBk = Future {
-      indexBucketStats(indexPostings(s.read.parquet(s"$root/ix")))
+      IndexStore.bucketStats(indexPostings(s.read.parquet(s"$root/ix")))
         .write.mode("overwrite").parquet(s"$root/bk")
     }
     Await.result(fPost, Duration.Inf)
@@ -301,302 +292,27 @@ object Dedup {
 
   /** The manifest's frozen band geometry; pre-manifest artifacts
     * (or in-plan [[DedupIndex.fromDocs]] indexes) default to 16×4 —
-    * the only geometry that ever existed before the manifest.
-    * Cached per (resolved live path, CONTENT HASH of the manifest's
-    * data files): the manifest is one row frozen at writeIndex, but
-    * reading it through Spark is a driver-blocking job (~0.2 s) that
-    * [[readIndex]] would otherwise pay on EVERY probe. The key hashes
-    * the raw file bytes (the manifest is ~1 KB — one metadata RPC +
-    * one tiny read, orders cheaper than the job), so an in-place
-    * rebuild at a new geometry is visible even when it lands within
-    * the filesystem's mtime granularity (1 s on several Hadoop
-    * filesystems — an mtime-keyed cache would sign deltas at the OLD
-    * width against NEW postings, and bands from two widths never
-    * meet: every near-dup silently accepted). Bounded: cleared at
-    * 1024 entries (reached only by pathological manifest churn). */
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (Int, Int)]()
-
-  private[graft] def manifestWidth(s: org.apache.spark.sql.SparkSession,
+    * the only geometry that ever existed before the manifest. Cached
+    * per manifest content ([[IndexStore.manifest]]): [[readIndex]]
+    * would otherwise pay a decode job on EVERY probe. */
+  private[graft] def geometry(s: org.apache.spark.sql.SparkSession,
       root: String): (Int, Int) =
-    if (artifactExists(root, "manifest")) {
-      val live = livePath(root, "manifest").toString
-      val (fs, p) = hadoopFs(live)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      fs.listStatus(p).sortBy(_.getPath.getName).foreach { st =>
-        if (st.isFile && st.getLen > 0 &&
-            !st.getPath.getName.startsWith("_")) {
-          md.update(st.getPath.getName.getBytes("UTF-8"))
-          val in = fs.open(st.getPath)
-          try {
-            val buf = new Array[Byte](8192)
-            var n = in.read(buf)
-            while (n > 0) { md.update(buf, 0, n); n = in.read(buf) }
-          } finally in.close()
-        }
-      }
-      val key = (live, md.digest().map("%02x".format(_)).mkString)
-      if (manifestCache.size > 1024) manifestCache.clear()
-      manifestCache.computeIfAbsent(key, { _ =>
-        val r = s.read.parquet(live)
-          .select("bands", "rows_per_band").head()
-        (r.getInt(0), r.getInt(1))
-      })
-    } else (Bands, RowsPerBand)
-
-  // ── persisted-index filesystem machinery ───────────────────────────
-  // All index-root surgery goes through the Hadoop FileSystem resolved
-  // from the root path ITSELF, so an index root can live on any Hadoop
-  // filesystem — local disk in tests, HDFS/S3A on a real cluster. (The
-  // previous java.nio spelling resolved only OS-local paths: at 100 TB
-  // the index root is shared/object storage, where java.nio paths do
-  // not exist. Same portability contract as pipeline.CatalogStore.)
-  private[graft] def hadoopFs(root: String):
-      (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    (p.getFileSystem(conf), p)
-  }
-
-  private case class Gen(gen: Long, path: org.apache.hadoop.fs.Path,
-      complete: Boolean)
-
-  /** Every on-disk generation of `base` under `root`: the plain name
-    * (generation 0, written by [[writeIndex]] — complete by
-    * construction) and each `<base>.g<N>` published by a maintenance
-    * op. A numbered generation is COMPLETE iff the Spark committer's
-    * `_SUCCESS` marker is inside — the marker lands after every task
-    * commit, so a crash mid-publish (or a non-atomic object-store
-    * copy) can only ever leave a marker-less torn dir, never a
-    * marker-bearing partial one. */
-  private def listGens(fs: org.apache.hadoop.fs.FileSystem,
-      r: org.apache.hadoop.fs.Path, base: String): Seq[Gen] = {
-    val pre = base + ".g"
-    fs.listStatus(r).toSeq.map(_.getPath).flatMap { p =>
-      val n = p.getName
-      if (n == base) Some(Gen(0L, p, complete = true))
-      else if (n.startsWith(pre) && n.length > pre.length &&
-          n.drop(pre.length).forall(_.isDigit))
-        Some(Gen(n.drop(pre.length).toLong, p,
-          complete = fs.exists(
-            new org.apache.hadoop.fs.Path(p, "_SUCCESS"))))
-      else None
+    if (!IndexStore.artifactExists(root, "manifest")) (Bands, RowsPerBand)
+    else IndexStore.manifest(s, root) { m =>
+      val r = m.select("bands", "rows_per_band").head()
+      (r.getInt(0), r.getInt(1))
     }
-  }
-
-  /** True iff ANY complete generation of `base` exists under `root` —
-    * the existence probe for OPTIONAL artifacts (the embedding index's
-    * tombstone list) where [[livePath]]'s require would throw. */
-  private[graft] def artifactExists(root: String, base: String): Boolean = {
-    val (fs, r) = hadoopFs(root)
-    fs.exists(r) && listGens(fs, r, base).exists(_.complete)
-  }
-
-  /** Resolves the LIVE generation of a derived index artifact (`post`
-    * or `bk`): the highest-numbered COMPLETE generation (see
-    * [[listGens]]). Generations are create-only — maintenance writes
-    * the next one in place via the Spark committer and only then reaps
-    * older ones — so some complete generation exists at every instant:
-    * a crash mid-publish leaves a marker-less torn dir this resolver
-    * skips, a crash between publish and reap leaves a stale LOWER
-    * complete generation behind; the next maintenance pass reaps
-    * either. `ix` is append-only record-of-truth and never
-    * generation-swapped. */
-  private[graft] def livePath(root: String,
-      base: String): org.apache.hadoop.fs.Path = {
-    val (fs, r) = hadoopFs(root)
-    val complete = listGens(fs, r, base).filter(_.complete)
-    require(complete.nonEmpty,
-      s"no complete $base artifact generation under $root")
-    complete.maxBy(_.gen).path
-  }
-
-  private[graft] def bkLivePath(root: String): org.apache.hadoop.fs.Path =
-    livePath(root, "bk")
-
-  /** Depth-first recursive delete (stream-closed, children before
-    * parents, missing entries tolerated) — the one spelling of the
-    * delete-tree idiom the staging/maintenance paths share. */
-  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p)) {
-      val w = Files.walk(p)
-      try w.iterator().asScala.toSeq.reverse
-        .foreach(x => Files.deleteIfExists(x))
-      finally w.close()
-    }
-  }
-
-  /** Publishes the NEXT create-only generation of `base` under `root`:
-    * `build` writes the full parquet DIRECTLY into the next
-    * `<base>.g<N>` dir via the Spark committer, whose `_SUCCESS`
-    * marker lands only after every task commit — so the dir resolves
-    * as live ([[livePath]]) exactly when it is complete, with no
-    * rename step at all (rename-free publish is what makes this
-    * correct on object stores, where a directory rename is a
-    * non-atomic file-by-file copy; on HDFS/POSIX it simply skips a
-    * step the marker gate makes redundant). Only after the marker is
-    * verified are older generations — stale completes AND torn
-    * leftovers — reaped, each path refresh-invalidated. The next
-    * generation number sits above every EXISTING dir, torn ones
-    * included, so a retry after a mid-build crash never writes into a
-    * half-built dir. See [[livePath]] for the crash contract. */
-  private[graft] def publishNextGen(s: org.apache.spark.sql.SparkSession,
-      root: String, base: String)(build: String => Unit): Unit = {
-    val (fs, r) = hadoopFs(root)
-    val gens = listGens(fs, r, base)
-    require(gens.exists(_.complete),
-      s"no complete $base artifact generation under $root")
-    val next = new org.apache.hadoop.fs.Path(
-      r, s"$base.g${gens.map(_.gen).max + 1}")
-    build(next.toString)
-    require(fs.exists(new org.apache.hadoop.fs.Path(next, "_SUCCESS")),
-      s"no _SUCCESS marker under $next — generation resolution " +
-        "requires the committer's success markers " +
-        "(mapreduce.fileoutputcommitter.marksuccessfuljobs=true)")
-    gens.foreach { g =>
-      fs.delete(g.path, true)
-      // a Spark write refreshes the shared file-status cache itself;
-      // after manual file surgery it must be told, or a read that
-      // cached the path pre-publish resolves a stale listing
-      s.catalog.refreshByPath(g.path.toString)
-    }
-    s.catalog.refreshByPath(next.toString)
-  }
-
-  /** The ONE index-append writer, shared by the text family (record
-    * `ix`) and the embedding family (record `vecs`): appends a delta's
-    * index rows (signed at the live generation's manifest geometry) to
-    * the live generation of `root0` — their postings (`postings`, the
-    * family's explode of `bands`) to `post`, their PARTIAL per-bucket
-    * counts to `bk` (the stats sidecar is a mergeable partial
-    * aggregate — see [[indexBucketStats]]) and the rows themselves to
-    * `record`. The recurring cost is delta-sized on all three
-    * artifacts; the corpus side is never rewritten.
-    *
-    * Snapshot semantics: the rows are materialized BEFORE the first
-    * write, so no write's plan reads the index being grown. That cut
-    * is on purpose: an accepted frame is typically the lazy output of
-    * [[incrementalAcceptIndexed]] over this very index, and each
-    * append's refresh-by-path invalidates any cached intermediate, so
-    * a lineage-carrying append would re-screen the delta against the
-    * half-grown index (its own rows now indexed → everything
-    * self-rejects → later appends write empty).
-    *
-    * Where the snapshot lives follows where the rows already are, read
-    * off the optimized plan:
-    *  - a LOCAL RELATION (the screen's accepted rows, a
-    *    `createDataFrame` delta or a projection of one) is collected
-    *    without a job and IS the snapshot: the `bk` partials are counted
-    *    on the driver (no shuffle) and each artifact lands as one part
-    *    file. No rows, no write: a fully-rejected delta leaves every
-    *    artifact, and so [[contentStamp]], untouched.
-    *  - any other plan (the maintenance stages append most of a parquet
-    *    corpus this way) is snapshotted to a scratch parquet on the
-    *    index root's own filesystem — executors write it, so a
-    *    driver-local tmpdir would work only in local mode; dot-prefixed,
-    *    invisible to listings — and the three appends read it back,
-    *    coalesced to size-targeted part counts ([[graft.io.FileSizing]]).
-    *    Nothing passes through the driver, at any size.
-    *
-    * Crash contract (the same for both snapshots): the appends are
-    * non-atomic — the two DERIVED appends (post, bk) run CONCURRENTLY
-    * (no ordering contract between them) and the record of truth the
-    * verify join reads goes LAST, after both have landed.
-    * A crash mid-append can therefore leave only DERIVED rows (post/
-    * bk) for docs absent from the record; those are conservative
-    * garbage, never a correctness hole: orphan postings produce
-    * candidates that fail the inner join against the record (so the
-    * probe behaves as if the torn delta was never indexed — correct,
-    * since the record is the membership record), and orphan bk counts
-    * only make buckets look HOTTER (more dropping, fewer candidates —
-    * the guard's safe direction). Re-running the append restores the
-    * record; the duplicated derived rows stay harmless (pairing dedups
-    * through `distinct`, stats inflation stays conservative) until
-    * [[repairIndex]] — the maintenance op that DETECTS either
-    * inconsistency (post must hold exactly Bands rows per ix doc) and
-    * re-derives post/bk from the record — restores the invariant. The
-    * reversed order is what makes a torn append recoverable-by-retry
-    * instead of silently wrong: with the record first, a crash would
-    * leave docs IN the membership record but invisible to the probe —
-    * later near-dups of them would be silently accepted. */
-  private[graft] def appendIndexRows(root0: String, record: String,
-      ixRows: DataFrame, postings: DataFrame => DataFrame): Unit = {
-    val s = ixRows.sparkSession
-    // appends land in the LIVE model generation (geometry rebuilds
-    // publish siblings under modelgen<k> — [[rebuildIndex]]; a plain
-    // never-rebuilt root resolves to itself)
-    val root = graft.io.ModelGens.liveRoot(root0)
-    def land(post: DataFrame, bk: DataFrame, rec: DataFrame): Unit = {
-      val paths @ Seq(postL, bkL, recL) =
-        Seq("post", "bk", record).map(livePath(root, _).toString)
-      // the two DERIVED appends have no ordering contract BETWEEN them
-      // — only the record must land LAST (see the crash contract
-      // above): two concurrent jobs (guide §2.6
-      // overlap-independent-jobs), each a small write whose wall is
-      // mostly job latency — a fixed cost off EVERY append, the
-      // per-micro-batch path of stream_index_ingest
-      import scala.concurrent.{Await, Future, blocking}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // blocking{}: each body is a blocking Spark write on the global
-      // pool — marked so the pool adds a thread instead of starving
-      Seq(Future { blocking { post.write.mode("append").parquet(postL) } },
-          Future { blocking { bk.write.mode("append").parquet(bkL) } })
-        .foreach(Await.result(_, Duration.Inf))
-      rec.write.mode("append").parquet(recL)
-      paths.foreach(s.catalog.refreshByPath)
-    }
-    def local(rs: Seq[Row], schema: StructType): DataFrame =
-      s.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
-    ixRows.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        if (l.data.nonEmpty) {
-          val rows = ixRows.collect().toSeq
-          val held = local(rows, ixRows.schema)
-          // partial counts per bucket; a bucket key is a (band, hash)
-          // struct of integral fields, so Row equality is GROUP BY's
-          val bands = held.schema.fieldIndex("bands")
-          val n = rows.filterNot(_.isNullAt(bands))
-            .flatMap(_.getSeq[Row](bands)).groupMapReduce(identity)(_ => 1L)(_ + _)
-          land(postings(held).coalesce(1),
-            local(n.toSeq.map { case (k, c) => Row(k, c) },
-              indexBucketStats(postings(held)).schema).coalesce(1),
-            held.coalesce(1))
-        }
-      case _ =>
-        val (fs, r) = hadoopFs(root)
-        val scratch = new org.apache.hadoop.fs.Path(
-          r, s".${record}_append_${java.util.UUID.randomUUID().toString.take(13)}")
-        try {
-          val sd = new org.apache.hadoop.fs.Path(scratch, record)
-          ixRows.write.mode("overwrite").parquet(sd.toString)
-          // a delta-sized append lands ONE part file per artifact
-          // instead of one per core (graft.io.FileSizing, guide §6);
-          // the read-backs carry the rows' own schema (inferring it
-          // from the scratch footer would cost a job per read)
-          val np = graft.io.FileSizing.partsFor(
-            graft.io.FileSizing.dirBytes(fs, sd))
-          def snapshot = s.read.schema(ixRows.schema).parquet(sd.toString)
-          land(postings(snapshot).coalesce(np),
-            indexBucketStats(postings(snapshot)), snapshot.coalesce(np))
-        } finally fs.delete(scratch, true)
-    }
-  }
 
   /** Appends the accepted delta rows' index entries to a persisted
-    * index through [[appendIndexRows]]: delta-sized on all three
-    * artifacts, the corpus side never rewritten; the rows snapshot on
-    * the driver when `accepted` is a local relation, to scratch parquet
-    * otherwise. */
+    * index through [[IndexStore.appendIndexRows]]: delta-sized on all
+    * three artifacts, the corpus side never rewritten; the rows
+    * snapshot on the driver when `accepted` is a local relation, to
+    * scratch parquet otherwise. */
   def appendIndex(root0: String, accepted: DataFrame, idCol: String,
       textCol: String): Unit = {
-    val root = graft.io.ModelGens.liveRoot(root0)
-    val (bands, rows) = manifestWidth(accepted.sparkSession, root)
-    appendIndexRows(root, "ix",
+    val root = IndexStore.liveRoot(root0)
+    val (bands, rows) = geometry(accepted.sparkSession, root)
+    IndexStore.appendIndexRows(root, "ix",
       buildIndex(accepted, idCol, textCol, bands, rows), indexPostings)
   }
 
@@ -609,12 +325,8 @@ object Dedup {
     // same generation, so a rebuild published mid-session leaves this
     // handle hash-identical (stale-reader contract) instead of mixing
     // widths
-    val root = graft.io.ModelGens.liveRoot(root0)
-    // every artifact opens with its own footer's schema, read on the
-    // driver ([[graft.io.FooterSchema]]: no inference job per open)
-    def open(part: String) =
-      graft.io.FooterSchema.read(s, livePath(root, part).toString)
-    val ixRaw = open("ix")
+    val root = IndexStore.liveRoot(root0)
+    val ixRaw = IndexStore.open(s, root, "ix")
     // pre-fp artifact compat: indexes written before the fingerprint
     // column derive it in-plan from the persisted shingle sets (same
     // value by construction — [[shingleFp]] is a pure function of
@@ -622,20 +334,13 @@ object Dedup {
     val ix =
       if (ixRaw.columns.contains("fp")) ixRaw
       else ixRaw.withColumn("fp", shingleFp(col("sh")))
-    val post = open("post")
-    val (i, p) =
-      if (artifactExists(root, "tomb")) {
-        // tombstone-aware open (the embedding index's erasure
-        // contract, for text): erased docs are anti-joined out of the
-        // membership record AND the probe side from the erase call
-        // on; physical purge happens at the next compactIndexStats.
-        // The bk sidecar stays unfiltered until then — conservative.
-        val tomb = broadcast(open("tomb").select("id"))
-        (ix.join(tomb, Seq("id"), "left_anti"),
-          post.join(tomb, Seq("id"), "left_anti"))
-      } else (ix, post)
-    val (bands, rows) = manifestWidth(s, root)
-    DedupIndex(i, p, open("bk"), bands, rows, Some(root))
+    // erased docs leave the membership record AND the probe side from
+    // the erase call on; the bk sidecar stays unfiltered until the next
+    // compactIndexStats — conservative
+    val live = IndexStore.dropErased(s, root, "id")
+    val (bands, rows) = geometry(s, root)
+    DedupIndex(live(ix), live(IndexStore.open(s, root, "post")),
+      IndexStore.open(s, root, "bk"), bands, rows, Some(root))
   }
 
   /** Content identity of a persisted index root for the probe-verdict
@@ -648,11 +353,11 @@ object Dedup {
     * component (index.bands/rows). One listStatus per dir — driver
     * metadata RPCs, no Spark job. */
   private[graft] def contentStamp(root: String): String = {
-    val (fs, _) = hadoopFs(root)
+    val (fs, _) = IndexStore.hadoopFs(root)
     Seq("ix", "post", "bk", "tomb").map { part =>
-      if (!artifactExists(root, part)) s"$part:absent"
+      if (!IndexStore.artifactExists(root, part)) s"$part:absent"
       else {
-        val p = livePath(root, part)
+        val p = IndexStore.livePath(root, part)
         val st = fs.listStatus(p)
         s"$part:$p:${st.length}:${st.map(_.getLen).sum}:" +
           (if (st.isEmpty) 0L else st.map(_.getModificationTime).max)
@@ -663,8 +368,7 @@ object Dedup {
   /** The live `ix` membership artifact — normally the plain build dir
     * (generation 0, append-grown in place); erasure compaction
     * publishes PURGED next generations. */
-  private[graft] def ixLive(root: String): String =
-    livePath(root, "ix").toString
+  private[graft] def ixLive(root: String): String = IndexStore.live(root, "ix")
 
   /** Right-to-erasure INTO the persisted text index: `ids` (an
     * EXTERNAL request list with an `id` column — never a frame
@@ -672,101 +376,27 @@ object Dedup {
     * artifact every [[readIndex]] open anti-joins out. O(|request|)
     * now; the physical rewrite rides the next [[compactIndexStats]]. */
   def eraseFromIndex(root: String, ids: DataFrame): Unit =
-    appendTombstones(graft.io.ModelGens.liveRoot(root), ids.select(col("id")))
+    IndexStore.appendTombstones(IndexStore.liveRoot(root), ids.select(col("id")))
 
-  /** The ONE tombstone-append spelling shared by all three index
-    * families (text here; [[graft.sim.EmbIndex.eraseFromIndex]] and
-    * [[graft.sim.PqIndex.eraseFromIndex]] delegate with their id
-    * column): append the already-projected request ids to the live
-    * `tomb` artifact — generation-resolved, or created as generation
-    * 0 on first erase — and refresh. O(|request|); the physical purge
-    * rides each family's compaction. */
-  private[graft] def appendTombstones(root: String, ids: DataFrame): Unit = {
-    val s = ids.sparkSession
-    val p =
-      if (artifactExists(root, "tomb")) livePath(root, "tomb").toString
-      else s"$root/tomb"
-    // erasure requests are request-sized (a GDPR id list, bounded by
-    // the broadcast every readIndex does on it) — one part file per
-    // request, not one per core (FileSizing rationale, guide §6)
-    ids.repartition(1).write.mode("append").parquet(p)
-    s.catalog.refreshByPath(p)
-  }
-
-  /** Compacts the bucket-stats sidecar back to one row per bucket.
-    * Each [[appendIndex]] adds a partial row-set, and every consumer
+  /** Compaction: with erasures pending, the tombstoned docs are
+    * purged from `ix` and `post`, `bk` is re-derived from the purged
+    * postings (one row per bucket — compaction implicit), and the
+    * tombstone list resets LAST; without, the bucket-stats sidecar
+    * folds back to one row per bucket ([[IndexStore.compactBanded]]).
+    * Each [[appendIndex]] adds a partial row-set and every consumer
     * sums per bucket, so correctness never degrades — but after many
-    * append generations the sidecar's row count creeps from |buckets|
-    * toward |appends|·|buckets|, and the probe's stats sum pays for
-    * the history. Compaction is the maintenance half of the mergeable-
-    * partials contract: sum once, rewrite. Results are bit-identical
-    * before/after (the probe sums either way).
+    * appends the sidecar's row count creeps from |buckets| toward
+    * |appends|·|buckets|, and the probe's stats sum pays for the
+    * history. Results are bit-identical before/after.
     *
-    * Same single-writer assumption as [[appendIndex]] (the owner of
-    * the generation runs maintenance between delta cycles; concurrent
-    * appends were never safe against each other). The swap is the
-    * create-only generation publish of [[publishNextGen]]: the summed
-    * stats are committer-written directly into the NEXT `bk.g<N>` dir,
-    * whose `_SUCCESS` marker is what makes it live, and only then are
-    * older generations reaped. There is no instant with zero live
-    * sidecar on disk: a crash mid-write leaves a marker-less torn dir
-    * the resolver skips (old generation stays live), a crash between
-    * publish and reap leaves two complete generations and
-    * [[bkLivePath]] picks the newer (the next maintenance pass reaps
-    * the rest). The record-of-truth parts (`ix`, `post`) are
-    * append-only and untouched here. */
+    * Same single-writer assumption as [[appendIndex]]. Every rewrite
+    * is a create-only generation publish ([[IndexStore.publishNextGen]]):
+    * there is no instant with zero live artifact on disk, and a crash
+    * anywhere leaves the tombstones in force. */
   def compactIndexStats(s: org.apache.spark.sql.SparkSession,
       root0: String): Unit = {
-    val root = graft.io.ModelGens.liveRoot(root0)
-    val hasTomb = artifactExists(root, "tomb") &&
-      s.read.parquet(livePath(root, "tomb").toString).limit(1).count() > 0
-    if (hasTomb) {
-      // tombstone purge (the embedding index's erasure compaction,
-      // for text): erased docs are physically removed from ix and
-      // post, bk is re-derived from the purged postings (one row per
-      // bucket — compaction implicit), and the tombstone list resets
-      // LAST so a crash anywhere leaves the tombstones in force and
-      // every artifact at some complete generation.
-      val tomb = s.read.parquet(livePath(root, "tomb").toString)
-        .select("id").localCheckpoint()
-      val curIx = ixLive(root)
-      // compaction is ALSO the file-hygiene pass: the purged rewrite
-      // coalesces the append-accumulated tiny part files back to
-      // size-targeted ones (graft.io.FileSizing, guide §6) — the
-      // purged output is bounded by the current live artifact's bytes
-      val (cfs, _) = hadoopFs(root)
-      def sized(p: String): Int = graft.io.FileSizing.partsFor(
-        graft.io.FileSizing.dirBytes(cfs, p))
-      val ixParts = sized(curIx)
-      publishNextGen(s, root, "ix") { sd =>
-        s.read.parquet(curIx)
-          .join(broadcast(tomb), Seq("id"), "left_anti")
-          .coalesce(ixParts)
-          .write.mode("overwrite").parquet(sd)
-      }
-      val curPost = livePath(root, "post").toString
-      val postParts = sized(curPost)
-      publishNextGen(s, root, "post") { sd =>
-        s.read.parquet(curPost)
-          .join(broadcast(tomb), Seq("id"), "left_anti")
-          .coalesce(postParts)
-          .write.mode("overwrite").parquet(sd)
-      }
-      publishNextGen(s, root, "bk") { sd =>
-        indexBucketStats(s.read.parquet(livePath(root, "post").toString))
-          .write.mode("overwrite").parquet(sd)
-      }
-      publishNextGen(s, root, "tomb") { sd =>
-        s.range(0).select(col("id"))
-          .write.mode("overwrite").parquet(sd)
-      }
-    } else {
-      val live = livePath(root, "bk").toString
-      publishNextGen(s, root, "bk") { sd =>
-        s.read.parquet(live).groupBy("bk").agg(sum("n").as("n"))
-          .write.mode("overwrite").parquet(sd)
-      }
-    }
+    val root = IndexStore.liveRoot(root0)
+    IndexStore.compactBanded(s, root, "id", "ix", IndexStore.hasTombstones(s, root))
   }
 
   /** Detects and repairs a TORN [[appendIndex]]: of the three
@@ -776,8 +406,8 @@ object Dedup {
     * never reached the `ix` membership record (or, after a retry,
     * duplicate partial rows for docs that did). Neither is a
     * correctness hole — orphan postings fail the verify join, stats
-    * inflation is conservative (see [[appendIndex]]'s crash
-    * contract) — but both waste probe work, so this is the
+    * inflation is conservative (see [[IndexStore.appendIndexRows]]'s
+    * crash contract) — but both waste probe work, so this is the
     * maintenance op that restores the invariant.
     *
     * Detection is exact and cheap: `post` must hold exactly
@@ -786,11 +416,10 @@ object Dedup {
     * mismatch, both derived artifacts are re-derived FROM the
     * distinct-by-id `ix` rows (the record of truth they are functions
     * of — the same derivation [[writeIndex]] runs at build time) and
-    * published as next create-only generations ([[publishNextGen]]:
-    * no instant without a live artifact, crash-safe, rename-free).
-    * `bk` is re-derived from the freshly PUBLISHED postings so the
-    * two cannot drift. Returns true iff a repair was performed; a
-    * second call is a detected no-op — INCLUDING after the
+    * published as next create-only generations
+    * ([[IndexStore.publishDerived]]: no instant without a live
+    * artifact, crash-safe, rename-free). Returns true iff a repair was
+    * performed; a second call is a detected no-op — INCLUDING after the
     * double-retry tear (a crash after the final `ix` append followed
     * by a full re-append duplicates a delta's `ix` rows): deriving
     * from raw duplicated rows would emit 2·Bands postings per such
@@ -804,32 +433,12 @@ object Dedup {
     * Same single-writer assumption as every index maintenance op. */
   def repairIndex(s: org.apache.spark.sql.SparkSession,
       root0: String): Boolean = {
-    val root = graft.io.ModelGens.liveRoot(root0)
-    val (mBands, _) = manifestWidth(s, root)
+    val root = IndexStore.liveRoot(root0)
+    val (mBands, _) = geometry(s, root)
     def ixDocs = s.read.parquet(ixLive(root)).dropDuplicates("id")
-    val ixIds = ixDocs
-      .select(col("id")).withColumn("__want", lit(mBands.toLong))
-    val have = s.read.parquet(livePath(root, "post").toString)
-      .groupBy("id").agg(count(lit(1)).as("__have"))
-    val torn = ixIds.join(have, Seq("id"), "full_outer")
-      .filter(col("__want").isNull || col("__have").isNull ||
-        col("__want") =!= col("__have"))
-      .limit(1).count() > 0
-    if (torn) {
-      // the repair rewrite restores file hygiene too: post is sized
-      // from the ix bytes it derives from (FileSizing, guide §6)
-      val (rfs, _) = hadoopFs(root)
-      val postParts = graft.io.FileSizing.partsFor(
-        graft.io.FileSizing.dirBytes(rfs, ixLive(root)))
-      publishNextGen(s, root, "post") { sd =>
-        indexPostings(ixDocs).coalesce(postParts)
-          .write.mode("overwrite").parquet(sd)
-      }
-      publishNextGen(s, root, "bk") { sd =>
-        indexBucketStats(s.read.parquet(livePath(root, "post").toString))
-          .write.mode("overwrite").parquet(sd)
-      }
-    }
+    val torn = IndexStore.postingsTorn(s, root, ixDocs, "id", mBands)
+    if (torn)
+      IndexStore.publishDerived(s, root, ixDocs, ixLive(root), indexPostings)
     torn
   }
 
@@ -837,7 +446,7 @@ object Dedup {
   // The band geometry is frozen per generation (bands from two widths
   // never meet in a candidate join), so a geometry change is never an
   // append — it is a complete re-sign of the corpus published as a
-  // model generation under `root/modelgen<k>` ([[graft.io.ModelGens]],
+  // model generation under `root/modelgen<k>` ([[IndexStore.liveRoot]],
   // the machinery the PQ refresh and embedding width rebuild share):
   // marker-committed last, previous generation INTACT for in-flight
   // readers, every public entry point resolving through liveRoot.
@@ -885,17 +494,10 @@ object Dedup {
   def rebuildIndex(s: org.apache.spark.sql.SparkSession, root: String,
       source: DataFrame, idCol: String, textCol: String,
       bands: Int, rows: Int): String = {
-    val mr = graft.io.ModelGens.liveRoot(root)
-    val src =
-      if (artifactExists(mr, "tomb"))
-        source.join(broadcast(s.read.parquet(
-            livePath(mr, "tomb").toString)
-          .select(col("id").as(idCol))), Seq(idCol), "left_anti")
-      else source
-    val sub = graft.io.ModelGens.nextRoot(root)
-    writeIndex(src, idCol, textCol, sub, bands, rows)
-    graft.io.ModelGens.commit(sub)
-    sub
+    val src = IndexStore.dropErased(s, IndexStore.liveRoot(root), "id",
+      idCol)(source)
+    IndexStore.publishModelGen(root)(
+      writeIndex(src, idCol, textCol, _, bands, rows))
   }
 
   /** The density-triggered geometry rebuild: fires iff the geometry
@@ -909,8 +511,8 @@ object Dedup {
   def rebuildIfDense(s: org.apache.spark.sql.SparkSession, root: String,
       source: DataFrame, idCol: String, textCol: String,
       denseAt: Long = DefaultDenseAt): Option[String] = {
-    val mr = graft.io.ModelGens.liveRoot(root)
-    val (bands, rows) = manifestWidth(s, mr)
+    val mr = IndexStore.liveRoot(root)
+    val (bands, rows) = geometry(s, mr)
     val nLive = readIndex(s, mr).docs.count()
     val want = resolveGeometry(nLive, denseAt)
     if (want != ((bands, rows)))
@@ -934,14 +536,11 @@ object Dedup {
   def maintainIndex(s: org.apache.spark.sql.SparkSession, root: String,
       source: DataFrame, idCol: String, textCol: String,
       denseAt: Long = DefaultDenseAt): graft.io.MaintenanceReport = {
-    val mr = graft.io.ModelGens.liveRoot(root)
-    val hasTomb = artifactExists(mr, "tomb") &&
-      s.read.parquet(livePath(mr, "tomb").toString).limit(1).count() > 0
-    val hasPartials = s.read.parquet(livePath(mr, "bk").toString)
-      .groupBy("bk").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1).limit(1).count() > 0
-    val doCompact = hasTomb || hasPartials
-    if (doCompact) compactIndexStats(s, mr)
+    val mr = IndexStore.liveRoot(root)
+    // the tombstone probe runs once: the purge takes its answer
+    val hasTomb = IndexStore.hasTombstones(s, mr)
+    val doCompact = hasTomb || IndexStore.hasPartials(s, mr)
+    if (doCompact) IndexStore.compactBanded(s, mr, "id", "ix", hasTomb)
     val repaired = repairIndex(s, mr)
     val regen = rebuildIfDense(s, root, source, idCol, textCol, denseAt)
     graft.io.MaintenanceReport(doCompact, repaired, regen)
@@ -1093,7 +692,7 @@ object Dedup {
     val (dx, rejected) = screenIndexed(index, delta, idCol, textCol,
       threshold, maxBucket, cascadeBudget)
     val out = dx.docsIn(rejected.select("id").collect().map(_.get(0)))
-    appendIndexRows(root0, "ix", dx.local(dx.docs.filterNot(out).map(_.row)),
+    IndexStore.appendIndexRows(root0, "ix", dx.local(dx.docs.filterNot(out).map(_.row)),
       indexPostings)
   }
 
@@ -1314,17 +913,6 @@ object Dedup {
     (dx, rejected)
   }
 
-  /** `body` over a broadcast of `v`, destroyed once `body` (which
-    * must run its jobs) returns: the delta's key sets reach the index
-    * side's tasks without a broadcast job or a literal list in the
-    * plan. */
-  private[graft] def withBroadcast[V: scala.reflect.ClassTag, T](
-      sc: org.apache.spark.SparkContext, v: V)(
-      body: org.apache.spark.broadcast.Broadcast[V] => T): T = {
-    val b = sc.broadcast(v)
-    try body(b) finally b.destroy()
-  }
-
   /** The probe build (see the PROBE BUILD comment in
     * [[screenIndexed]]): the router's hot buckets and load from the
     * delta's driver-held rows plus the index's sidecar rows of those
@@ -1351,7 +939,7 @@ object Dedup {
     val sc = dx.frame.sparkSession.sparkContext
     val fetched =
       if (docs.isEmpty) Array.empty[Row]
-      else withBroadcast(sc, (byFp.keys.toSet, docs.flatMap(_.bks).toSet)) { keys =>
+      else IndexStore.withBroadcast(sc, (byFp.keys.toSet, docs.flatMap(_.bks).toSet)) { keys =>
         val fpHit = udf((fp: String) => keys.value._1(fp))
         val bkHit = udf((b: Row) =>
           b != null && keys.value._2((b.getInt(0), b.getLong(1))))
@@ -1407,7 +995,7 @@ object Dedup {
           .toIndexedSeq
         val byKey = sets.zipWithIndex.groupMap(_._1._1) { case ((_, sh), k) =>
           sh -> k }.map { case (fp, ks) => fp -> ks.toMap }
-        val equal = withBroadcast(sc, byKey) { keys =>
+        val equal = IndexStore.withBroadcast(sc, byKey) { keys =>
           val setNo = udf((fp: String, sh: Seq[String]) =>
             keys.value.get(fp).flatMap(_.get(sh)).getOrElse(-1))
           index.docs.select(setNo(col("fp"), col("sh")).as("k"))
@@ -1755,6 +1343,6 @@ object DedupIndex {
   def fromDocs(docs: DataFrame, bands: Int = Dedup.Bands,
       rows: Int = Dedup.RowsPerBand): DedupIndex = {
     val post = Dedup.indexPostings(docs)
-    DedupIndex(docs, post, Dedup.indexBucketStats(post), bands, rows)
+    DedupIndex(docs, post, IndexStore.bucketStats(post), bands, rows)
   }
 }

@@ -345,7 +345,7 @@ object DedupQueries {
              |       CAST(8 AS BIGINT) AS n_bands
              |FROM d ORDER BY doc_id""".stripMargin),
       (s, d) => {
-        val root = graft.io.ModelGens.liveRoot(stagedRebuildPath(s, d))
+        val root = graft.io.IndexStore.liveRoot(stagedRebuildPath(s, d))
         s.read.parquet(Dedup.ixLive(root))
           .select(col("id").as("doc_id"),
             size(col("sh")).cast("long").as("n_shingles"),
@@ -391,8 +391,8 @@ object DedupQueries {
              |FROM d WHERE doc_id % 10 <> 1
              |ORDER BY part, doc_id""".stripMargin),
       (s, d) => {
-        val root = graft.io.ModelGens.liveRoot(stagedMaintainPath(s, d))
-        val part1 = s.read.parquet(Dedup.livePath(root, "post").toString)
+        val root = graft.io.IndexStore.liveRoot(stagedMaintainPath(s, d))
+        val part1 = s.read.parquet(graft.io.IndexStore.live(root, "post"))
           .groupBy(col("id").as("doc_id")).agg(count(lit(1)).as("n"))
           .select(lit(1L).as("part"), col("doc_id"), col("n"),
             lit("").as("sh_fp"))
@@ -809,8 +809,7 @@ object DedupQueries {
         docs.filter(col("doc_id") % 10 === 1)
           .select(col("doc_id").as("id")))
       Dedup.compactIndexStats(s, root)
-      def live(part: String) = s.read.parquet(
-        Dedup.livePath(root, part).toString)
+      def live(part: String) = graft.io.IndexStore.open(s, root, part)
       require(s.read.parquet(Dedup.ixLive(root))
         .filter(col("id") % 10 === 1).limit(1).count() == 0,
         "text erase stage: erased rows survived the ix purge")
@@ -844,7 +843,7 @@ object DedupQueries {
           denseAt = 100).isDefined,
         "text rebuild stage: density trigger did not fire on the " +
           "twentieth-sized build geometry")
-      require(graft.io.ModelGens.liveRoot(root).contains("modelgen"),
+      require(graft.io.IndexStore.liveRoot(root).contains("modelgen"),
         "text rebuild stage: live root did not move to the new generation")
       require(s.read.parquet(gen0Ix).count() == before,
         "text rebuild stage: generation 0 mutated — stale readers broken")
@@ -899,7 +898,7 @@ object DedupQueries {
         "doc_id", "text", root)
       (1 to 3).foreach(m => Dedup.appendIndex(root,
         docs.filter(col("doc_id") % 8 === m), "doc_id", "text"))
-      def bk = s.read.parquet(Dedup.bkLivePath(root).toString)
+      def bk = s.read.parquet(graft.io.IndexStore.live(root, "bk"))
       val (rows, buckets) = (bk.count(), bk.select("bk").distinct().count())
       require(rows > buckets,
         s"text compact stage: no partials to compact ($rows/$buckets)")
@@ -941,7 +940,7 @@ object DedupQueries {
       // derived-first, record-last order permits
       val ixd = Dedup.buildIndex(delta1, "doc_id", "text")
       Dedup.indexPostings(ixd).write.mode("append").parquet(s"$root/post")
-      Dedup.indexBucketStats(Dedup.indexPostings(ixd))
+      graft.io.IndexStore.bucketStats(Dedup.indexPostings(ixd))
         .write.mode("append").parquet(s"$root/bk")
       require(Dedup.repairIndex(s, root),
         "repair stage: torn append not detected")

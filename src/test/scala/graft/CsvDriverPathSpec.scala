@@ -163,7 +163,7 @@ class CsvDriverPathSpec extends SparkSpec {
         assert(s.rows.size == n)
         assert(s.schema.map(_.dataType) == Seq(IntegerType, StringType, IntegerType, StringType))
       }
-    } finally Dedup.deleteRecursively(dir)
+    } finally graft.io.Staging.deleteRecursively(dir)
   }
 
   test("malformed, header-only, CRLF and blank-line, and embedded-newline files") {
@@ -180,7 +180,7 @@ class CsvDriverPathSpec extends SparkSpec {
       compare("embedded_newline.csv", dir, Map("" ->
         "id,review\n1,\"line one\nline two, still quoted\"\n2,plain good\n3,\"a \"\"quoted\"\" word\"\n"),
         text = true)
-    } finally Dedup.deleteRecursively(dir)
+    } finally graft.io.Staging.deleteRecursively(dir)
   }
 
   test("duplicate and empty header names, and every inferred type") {
@@ -196,7 +196,7 @@ class CsvDriverPathSpec extends SparkSpec {
       assert(typed.schema.map(_.dataType) == Seq(IntegerType, LongType,
         DecimalType(20, 0), DoubleType, DateType, TimestampType, BooleanType,
         StringType, StringType), typed.schema)
-    } finally Dedup.deleteRecursively(dir)
+    } finally graft.io.Staging.deleteRecursively(dir)
   }
 
   test("a directory of part files, and a file cut into many splits") {
@@ -218,7 +218,7 @@ class CsvDriverPathSpec extends SparkSpec {
         conf = Seq("spark.sql.files.maxPartitionBytes" -> "4096",
           "spark.sql.files.openCostInBytes" -> "1024"))
       assert(split.rows.size == 400)
-    } finally Dedup.deleteRecursively(dir)
+    } finally graft.io.Staging.deleteRecursively(dir)
   }
 
   test("catalog tables written on the driver read back equal: µs timestamps and nulls") {
@@ -247,7 +247,7 @@ class CsvDriverPathSpec extends SparkSpec {
         ".part-00000-<uuid>-c000.snappy.parquet.crc", "_SUCCESS",
         "part-00000-<uuid>-c000.snappy.parquet"))
       assert(driver._3 == 0 && spread._3 > 0, s"${driver._3} vs ${spread._3}")
-    } finally Dedup.deleteRecursively(dir)
+    } finally graft.io.Staging.deleteRecursively(dir)
   }
 
   test("0-byte and blank-only uploads: Spark's write error on both paths, " +
@@ -284,7 +284,7 @@ class CsvDriverPathSpec extends SparkSpec {
       assert(!LocalWrite.writable(new CSVFileFormat, StructType(Nil)))
       assert(!LocalWrite.writable(new ParquetFileFormat,
         StructType(Seq(StructField("s", StructType(Nil))))))
-    } finally Dedup.deleteRecursively(dir)
+    } finally graft.io.Staging.deleteRecursively(dir)
   }
 
   test("the cutoff picks the path: an upload just within it is read on the " +
@@ -310,7 +310,7 @@ class CsvDriverPathSpec extends SparkSpec {
         s"files listed $myFiles vs $theirFiles, jobs $myJobs vs $theirJobs")
       assert(mine.schema == theirs.schema)
       assert(mine.collect().toSeq == theirs.collect().toSeq)
-    } finally Dedup.deleteRecursively(dir)
+    } finally graft.io.Staging.deleteRecursively(dir)
   }
 
   test("partition directories, a compressed upload and an empty directory " +
@@ -334,6 +334,6 @@ class CsvDriverPathSpec extends SparkSpec {
       val none = Files.createDirectories(dir.resolve("none")).toString
       assert(intercept[Exception](Csv.read(spark, none)).getMessage ==
         intercept[Exception](sparkRead(none)).getMessage)
-    } finally Dedup.deleteRecursively(dir)
+    } finally graft.io.Staging.deleteRecursively(dir)
   }
 }

@@ -133,7 +133,7 @@ class DedupSpec extends SparkSpec {
       assert(accepted(100, Dedup.CascadeBudget) == Set(None, Some(4L)))
       // every bucket hot, cascade forced
       assert(accepted(0, 0L) == Set(None, Some(4L)))
-    } finally Dedup.deleteRecursively(java.nio.file.Paths.get(dir))
+    } finally graft.io.Staging.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
   test("accepted append over string ids: appends exactly the rows the " +
@@ -178,11 +178,11 @@ class DedupSpec extends SparkSpec {
           .select(col("bk.band"), col("bk.bh"), col("n")).collect()
           .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
       def live(part: String) =
-        spark.read.parquet(Dedup.livePath(dir, part).toString)
+        spark.read.parquet(graft.io.IndexStore.livePath(dir, part).toString)
       assert(post(live("post")) == post(Dedup.indexPostings(ix)))
       assert(stats(live("bk")) ==
-        stats(Dedup.indexBucketStats(Dedup.indexPostings(ix))))
-    } finally Dedup.deleteRecursively(java.nio.file.Paths.get(dir))
+        stats(graft.io.IndexStore.bucketStats(Dedup.indexPostings(ix))))
+    } finally graft.io.Staging.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
   test("serving lookup: vs-index-only verdicts (intra-delta near-dups do " +
@@ -352,12 +352,12 @@ class DedupSpec extends SparkSpec {
     val base = corpus.filter(col("doc_id").isin(1L, 3L))
     val dir = Files.createTempDirectory("graft_ix_gens").toString
     Dedup.writeIndex(base, "doc_id", "text", dir)
-    assert(Dedup.bkLivePath(dir).toUri.getPath == s"$dir/bk")
+    assert(graft.io.IndexStore.livePath(dir, "bk").toUri.getPath == s"$dir/bk")
     // compaction publishes bk.g1 and reaps gen 0 — never the reverse
     Dedup.compactIndexStats(spark, dir)
     assert(Files.exists(Paths.get(dir, "bk.g1")))
     assert(!Files.exists(Paths.get(dir, "bk")))
-    assert(Dedup.bkLivePath(dir).toUri.getPath == s"$dir/bk.g1")
+    assert(graft.io.IndexStore.livePath(dir, "bk").toUri.getPath == s"$dir/bk.g1")
     // appends land their partials on the LIVE generation
     val g1Before = spark.read.parquet(s"$dir/bk.g1").count()
     val day = Seq((40L, "entirely novel text about glacier melt rates and alpine hydrology"))
@@ -375,7 +375,7 @@ class DedupSpec extends SparkSpec {
       if (Files.isDirectory(p)) Files.createDirectories(t)
       else Files.copy(p, t)
     }
-    assert(Dedup.bkLivePath(dir).toUri.getPath == live.toString)
+    assert(graft.io.IndexStore.livePath(dir, "bk").toUri.getPath == live.toString)
     val statsLive = Dedup.readIndex(spark, dir).bucketStats
       .groupBy("bk").agg(sum("n").as("n"))
       .collect().map(r => r.get(0) -> r.getLong(1)).toMap
@@ -466,7 +466,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val ixd = Dedup.buildIndex(delta, "doc_id", "text")
     Dedup.indexPostings(ixd).write.mode("append").parquet(s"$dir/post")
-    Dedup.indexBucketStats(Dedup.indexPostings(ixd))
+    graft.io.IndexStore.bucketStats(Dedup.indexPostings(ixd))
       .write.mode("append").parquet(s"$dir/bk")
     // the tear is conservative even before repair: a near-dup of the
     // torn doc is ACCEPTED (doc 7 never reached the membership record)
@@ -495,7 +495,7 @@ class DedupSpec extends SparkSpec {
     // published post.g1, never the reaped plain dirs (bk.g1 is
     // consumed by the EAGER hot-bucket router at probe build, so it
     // does not appear in the lazy plan; its generation resolution is
-    // pinned by bkLivePath asserts in the compaction tests)
+    // pinned by the live-`bk` asserts in the compaction tests)
     val scanRoots = healedProbe.queryExecution.sparkPlan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec =>
         s.relation.location.rootPaths.map(_.toString)
@@ -508,7 +508,7 @@ class DedupSpec extends SparkSpec {
     // counts exceed Bands → detected and healed to exactly Bands each
     Dedup.appendIndex(dir, delta, "doc_id", "text")
     Dedup.indexPostings(ixd).write.mode("append")
-      .parquet(Dedup.livePath(dir, "post").toString)
+      .parquet(graft.io.IndexStore.livePath(dir, "post").toString)
     assert(Dedup.repairIndex(spark, dir))
     val healed2 = Dedup.readIndex(spark, dir)
     assert(healed2.postings.count() == 3 * Dedup.Bands)
@@ -521,7 +521,7 @@ class DedupSpec extends SparkSpec {
     // doc and re-trip detection on every call)
     ixd.write.mode("append").parquet(s"$dir/ix")
     Dedup.indexPostings(ixd).write.mode("append")
-      .parquet(Dedup.livePath(dir, "post").toString)
+      .parquet(graft.io.IndexStore.livePath(dir, "post").toString)
     assert(Dedup.repairIndex(spark, dir))
     assert(!Dedup.repairIndex(spark, dir)) // CONVERGES despite dup ix rows
     val healed3 = Dedup.readIndex(spark, dir)
@@ -674,7 +674,7 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ix_mass").toString
     Dedup.writeIndex(baseRows.toDF("doc_id", "text"), "doc_id", "text", dir)
     // sanity: the mass genuinely saturates — some bucket holds > 100
-    assert(spark.read.parquet(Dedup.bkLivePath(dir).toString)
+    assert(spark.read.parquet(graft.io.IndexStore.livePath(dir, "bk").toString)
       .filter(col("n") > 100).count() > 0)
     val got = Dedup.incrementalAcceptIndexed(
       Dedup.readIndex(spark, dir), deltaRows.toDF("doc_id", "text"),
@@ -720,12 +720,12 @@ class DedupSpec extends SparkSpec {
     Dedup.writeIndex(mass.toDF("doc_id", "text"), "doc_id", "text", dir8,
       bands = 8, rows = 8)
     def saturated(dir: String): Long =
-      spark.read.parquet(Dedup.bkLivePath(dir).toString)
+      spark.read.parquet(graft.io.IndexStore.livePath(dir, "bk").toString)
         .filter(col("n") > 100).count()
     assert(saturated(dir16) > 0)
     assert(saturated(dir8) < saturated(dir16))
     // manifest round-trip + probe/append at the frozen width
-    assert(Dedup.manifestWidth(spark, dir8) == ((8, 8)))
+    assert(Dedup.geometry(spark, dir8) == ((8, 8)))
     val ix8 = Dedup.readIndex(spark, dir8)
     assert(ix8.bands == 8 && ix8.rows == 8)
     assert(ix8.docs.select(size(col("bands"))).head.getInt(0) == 8)
@@ -745,6 +745,20 @@ class DedupSpec extends SparkSpec {
       .filter(col("id") === 901L)
       .select(size(col("bands"))).head.getInt(0) == 8)
     assert(!Dedup.repairIndex(spark, dir8))
+    // the manifest cache keys on the manifest's content, not its
+    // mtime: dir16, opened at 16×4 above, rewritten in place at 8×8
+    // within one mtime tick opens at 8×8, and its probe signs there (a
+    // 16×4-signed near-dup would meet no 8×8 posting and be accepted)
+    assert(Dedup.readIndex(spark, dir16).bands == 16)
+    withinOneMtimeTick(s"$dir16/manifest") {
+      Dedup.writeIndex(mass.toDF("doc_id", "text"), "doc_id", "text", dir16,
+        bands = 8, rows = 8)
+    }
+    val re = Dedup.readIndex(spark, dir16)
+    assert(re.bands == 8 && re.rows == 8)
+    val near = Seq((902L, s"$sent rep7 again")).toDF("doc_id", "text")
+    assert(Dedup.incrementalAcceptIndexed(re, near, "doc_id", "text")
+      .count() == 0L)
   }
 
   test("density-triggered geometry rebuild: model generation published " +
@@ -782,7 +796,7 @@ class DedupSpec extends SparkSpec {
     // the new generation starts with no tombstone debt at all
     assert(spark.read.parquet(Dedup.ixLive(sub.get))
       .filter(col("id") === 5L).count() == 0)
-    assert(!Dedup.artifactExists(sub.get, "tomb"))
+    assert(!graft.io.IndexStore.artifactExists(sub.get, "tomb"))
     // stale reader: generation 0 is intact, so the pre-rebuild handle
     // keeps bit-identical probe verdicts (it predates the erase too —
     // tombstone awareness binds at readIndex time, the family's
@@ -800,7 +814,7 @@ class DedupSpec extends SparkSpec {
       Seq((950L, "fresh prose about glaciers and moraines"))
         .toDF("doc_id", "text"), "doc_id", "text")
     assert(spark.read.parquet(
-        Dedup.ixLive(graft.io.ModelGens.liveRoot(dir)))
+        Dedup.ixLive(graft.io.IndexStore.liveRoot(dir)))
       .filter(col("id") === 950L)
       .select(size(col("bands"))).head.getInt(0) == 8)
     // quiescent at the new generation
@@ -829,9 +843,9 @@ class DedupSpec extends SparkSpec {
     graft.text.Dedup.compactIndexStats(spark, dir)
     assert(spark.read.parquet(graft.text.Dedup.ixLive(dir)).count() == 0L)
     assert(spark.read.parquet(
-      graft.text.Dedup.livePath(dir, "post").toString).count() == 0L)
+      graft.io.IndexStore.livePath(dir, "post").toString).count() == 0L)
     assert(spark.read.parquet(
-      graft.text.Dedup.livePath(dir, "tomb").toString).count() == 0L)
+      graft.io.IndexStore.livePath(dir, "tomb").toString).count() == 0L)
     assert(accepted == 1L)
   }
 
@@ -873,7 +887,7 @@ class DedupSpec extends SparkSpec {
     // an append adds files WITH fp to the pre-fp dir; the artifact's
     // creation schema (its oldest file) still decides, so every row —
     // old and appended — takes the compatibility branch
-    val (fs, _) = Dedup.hadoopFs(old)
+    val (fs, _) = graft.io.IndexStore.hadoopFs(old)
     fs.listStatus(new org.apache.hadoop.fs.Path(Dedup.ixLive(old)))
       .foreach(st => fs.setTimes(st.getPath, 1000L, -1L))
     val more = Seq((20L, "parquet footers carry the schema of every data file written"))
@@ -887,7 +901,7 @@ class DedupSpec extends SparkSpec {
     assert(screen(old) == want)
     // republish ix as a new generation with a different schema: the
     // very next open reads it (nothing caches the old shape)
-    Dedup.publishNextGen(spark, old, "ix") { sd =>
+    graft.io.IndexStore.publishNextGen(spark, old, "ix") { sd =>
       spark.read.parquet(Dedup.ixLive(cur)).withColumn("note", lit("g1"))
         .write.mode("overwrite").parquet(sd)
     }

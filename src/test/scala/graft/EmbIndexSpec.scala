@@ -152,6 +152,22 @@ class EmbIndexSpec extends SparkSpec {
     EmbIndex.writeIndex(randVecs(0L until 7000L, 64), dir2)
     assert(EmbIndex.readManifest(spark, dir2)._1 == 9)
     assert(Similarity.autoBandBits(7000) == 9)
+    // the manifest cache keys on the manifest's content, not its
+    // mtime: dir2, opened at 9 bits above, rewritten in place over the
+    // small corpus within one mtime tick opens at 8 bits, and a probe
+    // signs there — twins of 20 indexed vectors each rank their source
+    // first (a 9-bit-signed query misses most 8-bit buckets)
+    withinOneMtimeTick(s"$dir2/manifest") {
+      EmbIndex.writeIndex(randVecs(0L until 500L, 64), dir2)
+    }
+    val re = EmbIndex.readIndex(spark, dir2)
+    assert(re.bits == 8)
+    val twins = randVecs(0L until 20L, 64)
+      .withColumn("vec_id", col("vec_id") + 100000L)
+    assert(EmbIndex.indexTopKBatch(re, twins, 1)
+      .select("q_id", "vec_id").collect()
+      .map(r => r.getLong(0) - 100000L -> r.getLong(1)).toMap ==
+      (0L until 20L).map(i => i -> i).toMap)
   }
 
   test("torn append detected and repaired via create-only generations; " +
@@ -168,7 +184,7 @@ class EmbIndexSpec extends SparkSpec {
     val (bits, _, _, _) = EmbIndex.readManifest(spark, dir)
     val ixd = EmbIndex.buildRows(delta, bits)
     EmbIndex.indexPostings(ixd).write.mode("append").parquet(s"$dir/post")
-    EmbIndex.indexBucketStats(EmbIndex.indexPostings(ixd))
+    graft.io.IndexStore.bucketStats(EmbIndex.indexPostings(ixd))
       .write.mode("append").parquet(s"$dir/bk")
     spark.catalog.refreshByPath(s"$dir/post")
     spark.catalog.refreshByPath(s"$dir/bk")
@@ -177,8 +193,8 @@ class EmbIndexSpec extends SparkSpec {
     assert(!EmbIndex.repairIndex(spark, dir))
     // post/bk resolved through generations (g1), orphans gone: exactly
     // 2 postings per BASE vector, none for the torn delta
-    assert(graft.text.Dedup.livePath(dir, "post").getName == "post.g1")
-    assert(graft.text.Dedup.livePath(dir, "bk").getName == "bk.g1")
+    assert(graft.io.IndexStore.livePath(dir, "post").getName == "post.g1")
+    assert(graft.io.IndexStore.livePath(dir, "bk").getName == "bk.g1")
     val ix = EmbIndex.readIndex(spark, dir)
     assert(ix.postings.count() == 2 * nBase)
     val perVec = ix.postings.groupBy("vec_id")
@@ -202,7 +218,7 @@ class EmbIndexSpec extends SparkSpec {
     // re-derives post/bk; second call is a no-op
     assert(EmbIndex.repairIndex(spark, dir))
     assert(!EmbIndex.repairIndex(spark, dir))
-    assert(graft.text.Dedup.livePath(dir, "vecs").getName == "vecs.g1")
+    assert(graft.io.IndexStore.livePath(dir, "vecs").getName == "vecs.g1")
     // the DIRECT vecs consumers (emb_index_build's content gate) now
     // see one row per vector, and the probe invariant holds
     val ix = EmbIndex.readIndex(spark, dir)
@@ -218,7 +234,7 @@ class EmbIndexSpec extends SparkSpec {
     (1 to 3).foreach(m =>
       EmbIndex.appendIndex(dir, randVecs(200L * m until 200L * (m + 1), 64)))
     def bk = spark.read.parquet(
-      graft.text.Dedup.livePath(dir, "bk").toString)
+      graft.io.IndexStore.livePath(dir, "bk").toString)
     val buckets = bk.select("bk").distinct().count()
     assert(bk.count() > buckets) // partials from 3 appends
     val preSums = bk.groupBy("bk").agg(sum("n").as("n"))
@@ -257,16 +273,16 @@ class EmbIndexSpec extends SparkSpec {
     EmbIndex.compactIndexStats(spark, dir)
     assert(spark.read.parquet(EmbIndex.vecsLive(dir)).count() == 0L)
     assert(spark.read.parquet(
-      graft.text.Dedup.livePath(dir, "post").toString).count() == 0L)
+      graft.io.IndexStore.livePath(dir, "post").toString).count() == 0L)
     assert(spark.read.parquet(
-      graft.text.Dedup.livePath(dir, "tomb").toString).count() == 0L)
+      graft.io.IndexStore.livePath(dir, "tomb").toString).count() == 0L)
     assert(accepted == 1L)
   }
 
   test("appends keep post and bk equal to their derivation from vecs, " +
       "land one part file per artifact, and a rejected delta writes none") {
     val dir = java.nio.file.Files.createTempDirectory("graft_embixp").toString
-    def live(part: String) = graft.text.Dedup.livePath(dir, part)
+    def live(part: String) = graft.io.IndexStore.livePath(dir, part)
     def postings(df: org.apache.spark.sql.DataFrame) =
       df.select(col("vec_id"), col("bk").cast("string")).collect()
         .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
@@ -280,7 +296,7 @@ class EmbIndexSpec extends SparkSpec {
       val post = EmbIndex.indexPostings(vecs)
       assert(postings(spark.read.parquet(live("post").toString)) == postings(post))
       assert(stats(spark.read.parquet(live("bk").toString)) ==
-        stats(EmbIndex.indexBucketStats(post)))
+        stats(graft.io.IndexStore.bucketStats(post)))
     }
     def parts = Seq("post", "bk", "vecs").map(p =>
       new java.io.File(live(p).toUri.getPath).listFiles()
@@ -311,7 +327,7 @@ class EmbIndexSpec extends SparkSpec {
       assert(parts == p0.map(_ + 3))
       EmbIndex.appendAcceptedIndexed(dir, EmbIndex.readIndex(spark, dir), copies, 1, 5)
       assert(parts == p0.map(_ + 3))
-    } finally graft.text.Dedup.deleteRecursively(java.nio.file.Paths.get(dir))
+    } finally graft.io.Staging.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
   test("appended entries block later near-dups of accepted vectors") {
@@ -467,7 +483,7 @@ class EmbIndexSpec extends SparkSpec {
     val torn = EmbIndex.buildRows(Seq(500L -> base(0L), 501L -> base(13L))
       .toDF("vec_id", "embedding"), bits)
     EmbIndex.indexPostings(torn).write.mode("append").parquet(s"$dir/post")
-    EmbIndex.indexBucketStats(EmbIndex.indexPostings(torn))
+    graft.io.IndexStore.bucketStats(EmbIndex.indexPostings(torn))
       .write.mode("append").parquet(s"$dir/bk")
     spark.catalog.refreshByPath(s"$dir/post")
     spark.catalog.refreshByPath(s"$dir/bk")

@@ -28,6 +28,12 @@ import org.apache.spark.sql.types._
   * unmeasured first (manifest caches, codegen), then once counted,
   * both on fresh inputs so no memo of a previous delta applies.
   *
+  * Index maintenance: one `maintainIndex` pass per family over a
+  * testdata index with a tenth of its ids erased — the pass probes the
+  * tombstone list once and its purge takes that answer — and the
+  * tombstone-aware `MmIndex.readIndex`, whose footer-schema opens run
+  * no job.
+  *
   * Control plane: `register`, `login`, `JobService.startEtl` on a
   * 200-row CSV upload and a `listJobs` poll over a parquet catalog of
   * three users. Their catalog work must not grow with the number of
@@ -184,7 +190,60 @@ class JobCountSpec extends SparkSpec {
       assert(n("dedup all-rejected append") <= n("dedup screen"), listing)
       assert(Dedup.readIndex(spark, dedupRoot).docs.count() == docs.size)
       assert(EmbIndex.readIndex(spark, embRoot).vecs.count() == vecs.size)
-    } finally Dedup.deleteRecursively(dir)
+    } finally graft.io.Staging.deleteRecursively(dir)
+  }
+
+  test("maintenance passes and the media open on tombstoned indexes stay " +
+      "within their Spark job ceilings") {
+    import org.apache.spark.sql.functions.col
+    import graft.multimodal.{MmIndex, Multimodal}
+    import graft.sim.PqIndex
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobcount_maint")
+    try {
+      def root(family: String) = dir.resolve(family).toString
+      val docs = io.Tables.documents(spark, sf0001).select("doc_id", "text")
+      val emb = io.Tables.embeddings(spark, sf0001).select("vec_id", "embedding")
+      val media = Multimodal.synthMediaTable(spark,
+        io.Tables.documents(spark, sf0001).select("doc_id", "text", "n_chars"))
+        .localCheckpoint()
+      // every family: a base index with a tenth of its ids erased
+      Dedup.writeIndex(docs, "doc_id", "text", root("text"))
+      Dedup.eraseFromIndex(root("text"),
+        docs.filter(col("doc_id") % 10 === 1).select(col("doc_id").as("id")))
+      EmbIndex.writeIndex(emb, root("emb"))
+      EmbIndex.eraseFromIndex(root("emb"),
+        emb.filter(col("vec_id") % 10 === 1).select("vec_id"))
+      PqIndex.writeIndex(emb, root("pq"))
+      PqIndex.eraseFromIndex(root("pq"),
+        emb.filter(col("vec_id") % 10 === 1).select("vec_id"))
+      MmIndex.writeIndex(media, root("mm"))
+      MmIndex.eraseFromIndex(root("mm"),
+        media.filter(col("doc_id") % 10 === 1).select("doc_id"))
+      val mmOpen = jobs { MmIndex.readIndex(spark, root("mm")); () }
+      val passes = Seq[(String, () => graft.io.MaintenanceReport, Int)](
+        ("text", () => Dedup.maintainIndex(spark, root("text"),
+          docs.filter(col("doc_id") % 10 =!= 1), "doc_id", "text"), 24),
+        ("emb", () => EmbIndex.maintainIndex(spark, root("emb"),
+          emb.filter(col("vec_id") % 10 =!= 1)), 31),
+        ("pq", () => PqIndex.maintainIndex(spark, root("pq"),
+          emb.filter(col("vec_id") % 10 =!= 1)), 22),
+        ("mm", () => MmIndex.maintainIndex(spark, root("mm")), 11))
+      val counts = passes.map { case (name, pass, ceiling) =>
+        var rep: graft.io.MaintenanceReport = null
+        val n = jobs { rep = pass() }
+        // the counted pass purges and nothing else
+        assert(rep.compacted && !rep.repaired && rep.regenerated.isEmpty,
+          s"$name: $rep")
+        (name, n, ceiling)
+      }
+      val listing = (s"mm open: $mmOpen jobs (ceiling 0)" +: counts.map {
+        case (name, n, c) => s"$name maintenance pass: $n jobs (ceiling $c)"
+      }).mkString("; ")
+      info(listing)
+      assert(mmOpen == 0 && counts.forall { case (_, n, c) => n <= c }, listing)
+      assert(MmIndex.readIndex(spark, root("mm")).count() ==
+        media.filter(col("doc_id") % 10 =!= 1).count())
+    } finally graft.io.Staging.deleteRecursively(dir)
   }
 
   /** Spark jobs per control-plane op on a fresh parquet catalog under
@@ -258,6 +317,6 @@ class JobCountSpec extends SparkSpec {
       assert(spread.startEtl.forall(_ > local.startEtl.max), offMsg)
       assert(spread.listed == local.listed)
       assert(spread.outputs == local.outputs)
-    } finally Dedup.deleteRecursively(dir)
+    } finally graft.io.Staging.deleteRecursively(dir)
   }
 }

@@ -51,7 +51,7 @@ class MaintenanceSpec extends SparkSpec {
         val again = pass(root)
         assert(again.noop,
           s"$family crash point $k: second pass not a no-op ($again)")
-      } finally text.Dedup.deleteRecursively(dir)
+      } finally graft.io.Staging.deleteRecursively(dir)
     }
   }
 
@@ -88,11 +88,11 @@ class MaintenanceSpec extends SparkSpec {
         pass = root => Dedup.maintainIndex(spark, root, source, "doc_id",
           "text", denseAt = denseAt),
         content = { root =>
-          val live = graft.io.ModelGens.liveRoot(root)
+          val live = graft.io.IndexStore.liveRoot(root)
           Seq(spark.read.parquet(Dedup.ixLive(live))
               .select(col("id"), size(col("sh")).as("n_sh"), col("fp"),
                 size(col("bands")).as("n_bands")),
-            spark.read.parquet(Dedup.livePath(live, "post").toString)
+            spark.read.parquet(graft.io.IndexStore.livePath(live, "post").toString)
               .select(col("id"), col("bk.band"), col("bk.bh")))
         })
     }
@@ -115,7 +115,7 @@ class MaintenanceSpec extends SparkSpec {
       repairStep = root => { EmbIndex.repairIndex(spark, root); () },
       pass = root => EmbIndex.maintainIndex(spark, root, source),
       content = root => Seq(spark.read.parquet(
-          EmbIndex.vecsLive(graft.io.ModelGens.liveRoot(root)))
+          EmbIndex.vecsLive(graft.io.IndexStore.liveRoot(root)))
         .select(col("vec_id"), col("na"),
           col("bands").getItem(0).getField("mask"),
           col("bands").getItem(1).getField("mask"))))

@@ -118,7 +118,7 @@ class MmIndexSpec extends SparkSpec {
     assert(spark.read.parquet(MmIndex.sigLive(dir))
       .filter(col("doc_id") === 7L).count() == 0)
     assert(spark.read.parquet(
-      graft.text.Dedup.livePath(dir, "tomb").toString).count() == 0)
+      graft.io.IndexStore.livePath(dir, "tomb").toString).count() == 0)
     assert(MmIndex.readIndex(spark, dir).count() == 29)
     // appends after compaction land in the live (purged) generation
     MmIndex.appendIndex(dir, lake(Seq(101L)))

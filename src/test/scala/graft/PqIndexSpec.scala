@@ -40,6 +40,21 @@ class PqIndexSpec extends SparkSpec {
     assert(rows.forall { r =>
       val c = r.getAs[Long]("code"); c >= 0 && c < Pq.K
     })
+    // the manifest cache keys on the manifest's content, not its
+    // mtime: a manifest rewritten in place within one mtime tick is
+    // what the next open reports
+    val ix0 = PqIndex.readIndex(spark, dir)
+    assert((ix0.m, ix0.k, ix0.kc) == ((Pq.M, Pq.K, PqIndex.KC)))
+    val manifest = spark.read.parquet(s"$dir/manifest")
+      .withColumn("kc", lit(PqIndex.KC / 2))
+    val rewritten = manifest.collect()
+    withinOneMtimeTick(s"$dir/manifest") {
+      spark.createDataFrame(java.util.Arrays.asList(rewritten: _*),
+          manifest.schema)
+        .repartition(1).write.mode("overwrite").parquet(s"$dir/manifest")
+    }
+    val ix1 = PqIndex.readIndex(spark, dir)
+    assert((ix1.m, ix1.k, ix1.kc) == ((Pq.M, Pq.K, PqIndex.KC / 2)))
   }
 
   test("erasure: a tombstoned vector appears in no ADC ranking from " +
@@ -64,7 +79,7 @@ class PqIndexSpec extends SparkSpec {
     assert(live.filter(col("vec_id").isin(11L, 12L)).count() == 0L)
     assert(live.count() == 98L * Pq.M)
     assert(spark.read.parquet(
-      graft.text.Dedup.livePath(dir, "tomb").toString).count() == 0L)
+      graft.io.IndexStore.livePath(dir, "tomb").toString).count() == 0L)
   }
 
   test("repair: a torn retried append violates M-codes-per-vector, " +
@@ -303,11 +318,11 @@ class PqIndexSpec extends SparkSpec {
     // refresh rebuilds the per-vector record, so a raw-source retrain
     // would have silently undone the erasure)
     assert(spark.read.parquet(
-        graft.text.Dedup.livePath(gen, "codes").toString)
+        graft.io.IndexStore.livePath(gen, "codes").toString)
       .filter(col("vec_id") === 42L).count() == 0)
     assert(PqIndex.readIndex(spark, dir).codes.count() == 59 * Pq.M)
     // ...and the erased vector is also absent from the training set:
     // the new generation needs no tomb artifact at all
-    assert(!graft.text.Dedup.artifactExists(gen, "tomb"))
+    assert(!graft.io.IndexStore.artifactExists(gen, "tomb"))
   }
 }
